@@ -104,7 +104,7 @@ object Main {
             s"redis://${cfg.target.connection.host}:${cfg.target.connection.port}")
           RedisStreamsSink.prime(turl, cfg.target.prefix,
             cfg.routes.map(_.target).distinct)
-          CdcStream.startWith(records, Routing.routesDf(spark, cfg),
+          CdcStream.startWith(records, cfg.routes,
             cfg.buffers.target.size, ckpt,
             windowMillis = cfg.buffers.dedupe.time)(
             RedisStreamsSink.writer(turl, cfg.target.prefix))

@@ -1285,11 +1285,9 @@ object SparkEntry {
         .orderBy(col("target"), col("entity_id"))
     }),
 
-    "cdc_batch_ids" -> ((s, d) => {
-      val dd = Dedupe.distinctKeys(routed(s, d), Seq("target", "entity_id"))
-      Batcher.chunkIds(dd, "target", "entity_id", 100, col("entity_id"))
-        .orderBy(col("target"), col("chunk_no"))
-    }),
+    "cdc_batch_ids" -> ((s, d) =>
+      Batcher.keepFirstChunks(routed(s, d), "target", "entity_id", 100, col("entity_id"))
+        .orderBy(col("target"), col("chunk_no"))),
 
     "cdc_ack_audit" -> ((s, d) =>
       routed(s, d).groupBy(col("event_type"))

@@ -11,7 +11,8 @@ import java.nio.file.{Files, Paths}
   * `mapping` table → column → list-of-targets.
   *
   * The mapping is this engine's only "dimension table"; it is tiny (tens of
-  * edges) and is always broadcast — never shuffled — in the fan-out join.
+  * edges), lives on the driver, and is compiled into the fan-out expression
+  * (see [[Routing]]) — never joined or shuffled.
   */
 final case class Connection(host: String = "127.0.0.1", port: Int = 6379, db: Int = 0)
 

@@ -8,10 +8,12 @@ import org.apache.spark.sql.functions._
   * `Collectors.toMap(entityId, identity, (a,b) -> a)` (WatchStream.java:272-274):
   * within a window, the FIRST arrival per key survives.
   *
-  * Two physical strategies:
-  *   - [[keepFirstAgg]]: `min_by`-style single aggregation. Partial (map-side)
-  *     aggregation halves the shuffle before the exchange — the right default
-  *     at 100 TB, where dedupe input >> distinct keys.
+  * The `watch` plane does not call these: it fuses keep-first with chunking
+  * in one target-keyed aggregate ([[Batcher.keepFirstChunks]]). These are the
+  * general DataFrame forms, for any keys and payload:
+  *   - [[keepFirstAgg]]: `min`-of-struct single aggregation with a partial
+  *     (map-side) combine before the exchange. Struct ordering has no hash
+  *     aggregate form, so Spark plans it as a SortAggregate.
   *   - [[keepFirstRows]]: window `row_number`, when all payload columns of the
   *     surviving row are needed without enumerating them. One shuffle, no
   *     partial agg — use only when the row is wide and dynamic.
@@ -25,7 +27,7 @@ object Dedupe {
 
   /** Keep the first row per key group, "first" = smallest `order` value.
     * `payload` columns are carried through via a packed struct min — a single
-    * hash aggregate with map-side partial combine (no window, no sort).
+    * aggregate with map-side partial combine (no window).
     */
   def keepFirstAgg(df: DataFrame, keys: Seq[String], order: Column,
                    payload: Seq[String]): DataFrame = {
@@ -42,10 +44,4 @@ object Dedupe {
       .filter(col("_rn") === 1)
       .drop("_rn")
   }
-
-  /** Set-semantics dedupe (survivor arbitrary) — cheapest form, for when the
-    * caller only needs the distinct keys. Partial-aggregated `distinct`.
-    */
-  def distinctKeys(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.select(keys.map(col): _*).distinct()
 }

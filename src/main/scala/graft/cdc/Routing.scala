@@ -1,15 +1,14 @@
 package graft.cdc
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** Fan-out routing — the reference's multicast (WatchStream.java:347-352)
-  * re-expressed as a broadcast inner join against the exploded mapping.
+/** Fan-out routing — the reference's multicast (WatchStream.java:347-352).
   *
-  * Scale: the mapping is O(100) rows, so the join is a broadcast hash join —
-  * zero shuffle of the (100 TB) fact side; each input row is replicated to its
-  * k targets map-side. A record routed to k targets appears k times downstream,
-  * exactly like the reference's k `emitNext` calls.
+  * The mapping is O(100) rows and lives on the driver, so fan-out needs no
+  * join: [[CdcPipeline.parseAndRoute]] compiles the edges into a CASE on
+  * `table` whose branches are literal (column, target) arrays, and `inline`
+  * replicates each input row to its k targets map-side — zero shuffle of the
+  * fact side, exactly like the reference's k `emitNext` calls.
   */
 object Routing {
 
@@ -17,21 +16,5 @@ object Routing {
   def routesDf(spark: SparkSession, config: CdcConfig): DataFrame = {
     import spark.implicits._
     config.routes.toDF("table", "column", "target")
-  }
-
-  /** Multicast `df` (which carries `tableCol` naming the source table) to all
-    * configured targets of that table. Output gains `column` and `target`.
-    */
-  def fanOut(df: DataFrame, routes: DataFrame, tableCol: String): DataFrame =
-    df.join(broadcast(routes), df(tableCol) === routes("table"), "inner")
-      .drop("table")
-
-  /** Expected fan-out degree per table as a broadcastable DataFrame — the
-    * analogue of the reference's ack countdown registration
-    * (WatchStream.java:338-344). Used to audit delivery completeness.
-    */
-  def fanoutDegreeDf(spark: SparkSession, config: CdcConfig): DataFrame = {
-    import spark.implicits._
-    config.fanoutDegree.toSeq.toDF("table", "expected_fanout")
   }
 }

@@ -1028,25 +1028,6 @@ object Kernels {
     * `transform`'s null mapping is NOT needed here: lines are never null
     * by construction — posexplode/split output).
     */
-  /** Join a long array's decimal renderings with `delim` in one pass —
-    * `array_join(transform(a, x -> cast(x as string)), delim)` without the
-    * interpreted per-element lambda (the cdc Batcher's id-list serializer).
-    * Elements are non-null by construction (collect_list output).
-    */
-  def joinLongs(a: ArrayData, delim: UTF8String): UTF8String = {
-    val m = a.numElements()
-    if (m == 0) return UTF8String.EMPTY_UTF8
-    val sb = new java.lang.StringBuilder(m * 8)
-    val d = delim.toString
-    var i = 0
-    while (i < m) {
-      if (i > 0) sb.append(d)
-      sb.append(a.getLong(i))
-      i += 1
-    }
-    UTF8String.fromString(sb.toString)
-  }
-
   def joinStructField(a: ArrayData, ord: Int, numFields: Int,
                       delim: UTF8String): UTF8String = {
     val m = a.numElements()

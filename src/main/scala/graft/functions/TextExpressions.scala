@@ -202,23 +202,6 @@ case class ChunkLines(child: Expression, size: Int, stride: Int)
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
-/** Join a long array's decimal renderings with `delim`
-  * (see [[Kernels.joinLongs]]).
-  */
-case class JoinLongs(child: Expression, delim: String) extends UnaryExpression {
-  private val delimUtf8 = UTF8String.fromString(delim)
-  override def dataType: DataType = StringType
-  override def nullSafeEval(v: Any): Any =
-    Kernels.joinLongs(v.asInstanceOf[ArrayData], delimUtf8)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val dRef = ctx.addReferenceObj("jlDelim", delimUtf8,
-      "org.apache.spark.unsafe.types.UTF8String")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.Kernels.joinLongs($c, $dRef)")
-  }
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
 /** Join string field `ord` of each struct element with `delim` — the
   * line-reassembly tail as one kernel pass
   * (see [[Kernels.joinStructField]]).
@@ -278,7 +261,4 @@ object TextExpressions {
   def joinStructField(a: Column, ord: Int, numFields: Int,
                       delim: String): Column =
     column(JoinStructField(expression(a), ord, numFields, delim))
-
-  def joinLongs(a: Column, delim: String): Column =
-    column(JoinLongs(expression(a), delim))
 }

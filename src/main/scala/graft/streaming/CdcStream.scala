@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.cdc.CdcPipeline
+import graft.cdc.{CdcPipeline, Route}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -27,6 +27,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * from any source (Kafka, file, socket, a custom Redis-stream DSv2
   * connector); tests use MemoryStream. Output: per-epoch parquet (or any
   * writer the caller supplies) of (target, chunk_no, ids, n_ids, epoch).
+  *
+  * Epoch plan: the route edges are compiled into the fan-out expression on
+  * the driver (a route DataFrame is collected once, at start), so an epoch
+  * runs no job for them. Each epoch is
+  * then two stages (scan → parse → fan-out → partial dedupe; merge → chunk →
+  * write) around one exchange on `target` — see [[CdcPipeline.run]]. The
+  * dedupe state of an epoch is one target's distinct ids per task, bounded by
+  * the source's per-trigger cap summed over the streams feeding that target
+  * (Σ `buffers.source.size` in `watch`): the reference's 100k dedupe buffer.
   */
 object CdcStream {
 
@@ -47,10 +56,16 @@ object CdcStream {
   def startWith(records: DataFrame, routes: DataFrame, maxBatch: Int,
                 checkpointDir: String, windowMillis: Long)(
                 writer: (DataFrame, Long) => Unit): StreamingQuery =
+    startWith(records, CdcPipeline.edges(routes), maxBatch, checkpointDir, windowMillis)(writer)
+
+  /** [[startWith]] over route edges already on the driver (`CdcConfig.routes`). */
+  def startWith(records: DataFrame, edges: Seq[Route], maxBatch: Int,
+                checkpointDir: String, windowMillis: Long)(
+                writer: (DataFrame, Long) => Unit): StreamingQuery =
     records.writeStream
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
         // batch-local dedupe = reference flush semantics (state reset/window)
-        writer(CdcPipeline.run(batch, routes, maxBatch), epoch)
+        writer(CdcPipeline.run(batch, edges, maxBatch), epoch)
       }
       .trigger(Trigger.ProcessingTime(windowMillis))
       .option("checkpointLocation", checkpointDir)

@@ -21,9 +21,12 @@ import org.apache.spark.sql.functions._
   * Scale: the batched output of one epoch is |targets| × ⌈ids/maxBatch⌉
   * rows — tiny relative to the input plane — but the write still runs on
   * executors (`foreachPartition`, one connection per partition), never
-  * through a driver collect. Chunks are repartitioned by target and sorted
-  * so each target's entries are appended by a single task in chunk order,
+  * through a driver collect. Chunks are partitioned by target and sorted so
+  * each target's entries are appended by a single task in chunk order,
   * preserving the per-target ordering the deterministic chunker produced.
+  * The chunker's output ([[graft.cdc.CdcPipeline.run]]) is already
+  * hash-partitioned by target, so the planner drops the `repartition` here
+  * and the write runs in the chunker's own stage; other inputs are shuffled.
   */
 object RedisStreamsSink {
 
@@ -34,14 +37,20 @@ object RedisStreamsSink {
     finally conn.close()
   }
 
+  /** The rows the writer appends: (target, chunk_no, ids), each target's
+    * chunks in one partition, in chunk order.
+    */
+  private[graft] def perTarget(batch: DataFrame): DataFrame =
+    batch.select("target", "chunk_no", "ids")
+      .repartition(col("target"))
+      .sortWithinPartitions("target", "chunk_no")
+
   /** Epoch writer for [[CdcStream.startWith]]: XADDs each batched chunk row
     * (`target`, `chunk_no`, `ids`) to `<prefix><target>`.
     */
   def writer(url: String, prefix: String): (DataFrame, Long) => Unit =
     (batch, _) =>
-      batch.select("target", "chunk_no", "ids")
-        .repartition(col("target"))
-        .sortWithinPartitions("target", "chunk_no")
+      perTarget(batch)
         .foreachPartition { (rows: Iterator[Row]) =>
           if (rows.hasNext) {
             val conn = RedisConn.open(url)

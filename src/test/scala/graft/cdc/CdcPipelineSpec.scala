@@ -68,7 +68,7 @@ class CdcPipelineSpec extends AnyFunSuite {
 
   test("chunk boundaries: 250 ids at maxBatch=100 → 100/100/50") {
     val df = (1 to 250).map(i => (i.toLong, "t", i)).toDF("id", "target", "entity_id")
-    val chunks = Batcher.chunkIds(df, "target", "entity_id", 100, col("entity_id"))
+    val chunks = Batcher.keepFirstChunks(df, "target", "entity_id", 100, col("entity_id"))
       .orderBy("chunk_no").select("n_ids").as[Long].collect().toSeq
     assert(chunks == Seq(100L, 100L, 50L))
   }

@@ -58,57 +58,44 @@ class DedupeLawsSpec extends AnyFunSuite {
     }
   }
 
+  private def parseIds(ids: String): Seq[Int] =
+    ids.stripPrefix("[").stripSuffix("]") match {
+      case "" => Nil
+      case s => s.split(",").map(_.toInt).toSeq
+    }
+
   test("law: chunking conserves ids, bounds chunk size, never mixes targets") {
     samples.foreach { rows =>
-      val deduped = rows.groupBy(r => (r._1, r._2)).map { case ((t, id), g) =>
-        (t, id, g.map(_._3).min)
-      }.toList
-      val df = deduped.toDF("target", "entity_id", "ord")
+      val df = rows.toDF("target", "entity_id", "ord")
       val maxSize = 7
-      val out = Batcher.chunkIds(df, "target", "entity_id", maxSize, col("ord"))
+      val out = Batcher.keepFirstChunks(df, "target", "entity_id", maxSize, col("ord"))
         .select("target", "ids", "n_ids")
         .as[(String, String, Long)].collect()
       assert(out.forall(_._3 <= maxSize))
-      val idsByTarget = out.groupBy(_._1).view.mapValues(_.flatMap(r =>
-        r._2.stripPrefix("[").stripSuffix("]") match {
-          case "" => Nil
-          case s => s.split(",").map(_.toInt).toSeq
-        }).sorted.toSeq).toMap
-      val expectByTarget = deduped.groupBy(_._1).view
-        .mapValues(_.map(_._2).sorted.toSeq).toMap
+      val idsByTarget = out.groupBy(_._1).view
+        .mapValues(_.flatMap(r => parseIds(r._2)).sorted.toSeq).toMap
+      val expectByTarget = rows.groupBy(_._1).view
+        .mapValues(_.map(_._2).distinct.sorted.toSeq).toMap
       assert(idsByTarget == expectByTarget)
       // n_ids consistency with serialized payload
-      out.foreach { case (_, ids, n) =>
-        val k = if (ids == "[]") 0 else ids.count(_ == ',') + 1
-        assert(k == n)
-      }
+      out.foreach { case (_, ids, n) => assert(parseIds(ids).size == n) }
     }
   }
 
-  test("law: hashed chunking conserves ids and stays within nChunks") {
+  test("law: chunks cut survivors in first-arrival order, ids ascending within a chunk") {
     samples.foreach { rows =>
-      val deduped = rows.groupBy(r => (r._1, r._2)).keys.toList
-      val df = deduped.toDF("target", "entity_id")
-      val out = Batcher.chunkIdsHashed(df, "target", "entity_id", nChunks = 4)
+      val df = rows.toDF("target", "entity_id", "ord")
+      val maxSize = 5
+      val got = Batcher.keepFirstChunks(df, "target", "entity_id", maxSize, col("ord"))
         .select("target", "chunk_no", "ids")
         .as[(String, Long, String)].collect()
-      assert(out.forall(r => r._2 >= 0 && r._2 < 4))
-      val idsByTarget = out.groupBy(_._1).view.mapValues(_.flatMap(r =>
-        r._3.stripPrefix("[").stripSuffix("]") match {
-          case "" => Nil
-          case x => x.split(",").map(_.toInt).toSeq
-        }).sorted.toSeq).toMap
-      val expect = deduped.groupBy(_._1).view.mapValues(_.map(_._2).sorted.toSeq).toMap
-      assert(idsByTarget == expect)
-    }
-  }
-
-  test("law: distinctKeys equals the set of distinct key tuples") {
-    samples.take(3).foreach { rows =>
-      val df = rows.toDF("target", "entity_id", "ord")
-      val got = Dedupe.distinctKeys(df, Seq("target", "entity_id"))
-        .as[(String, Int)].collect().toSet
-      assert(got == rows.map(r => (r._1, r._2)).toSet)
+        .map(r => (r._1, r._2) -> parseIds(r._3)).toMap
+      val expect = rows.groupBy(_._1).toSeq.flatMap { case (t, g) =>
+        g.groupBy(_._2).toSeq.map { case (id, h) => (h.map(_._3).min, id) }.sorted
+          .map(_._2).grouped(maxSize).zipWithIndex
+          .map { case (ids, c) => (t, c.toLong) -> ids.sorted }
+      }.toMap
+      assert(got == expect)
     }
   }
 }

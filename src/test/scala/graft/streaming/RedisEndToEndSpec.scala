@@ -124,13 +124,15 @@ class RedisEndToEndSpec extends AnyFunSuite {
 
   test("watch: chunks arrive in per-target chunk order") {
     val (url, mem) = freshMem()
-    (1 to 9).foreach(i =>
+    // 12 entries get source ids 1-0 .. 12-0, crossing the 9-0/10-0 boundary
+    // where a text order of the offsets would put "10-0" first
+    (1 to 12).foreach(i =>
       mem.xadd("m2.catalog_category_entity", Seq("v" -> envelope(i))))
     runWatch(url, mem, config(ack = "simple", maxBatch = 2))
     val entries = idArrays(mem, "target.catalog_category_product")
       .filter(e => e != "[]" && e != "[-1]")
-    // deterministic ordered chunker + sorted single-task append per target:
-    // first ids of consecutive chunks must be increasing
+    // deterministic chunker in numeric offset order + sorted single-task
+    // append per target: first ids of consecutive chunks must be increasing
     val firsts = entries.map(
       _.stripPrefix("[").stripSuffix("]").split(",").head.toInt)
     assert(firsts == firsts.sorted, s"chunks out of order: $entries")

@@ -14,7 +14,7 @@
 #   spark-submit --class graft.Main --master <master> \
 #     target/scala-2.13/cdcdedupespark_2.13-0.1.0.jar \
 #     watch --config config.yaml --source redis --sink redis \
-#     --checkpoint /ckpt/graft
+#     --in redis://<host>:6379 --checkpoint /ckpt/graft
 #
 # Pick the tag matching your Spark build (Scala 2.13 / Java 17).
 FROM apache/spark:4.1.2-scala2.13-java17-ubuntu

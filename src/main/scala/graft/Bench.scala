@@ -1,4 +1,5 @@
 package graft
+import graft.cdc.Route
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 object Bench {
@@ -116,12 +117,10 @@ object Bench {
       Files.move(f.toPath, Paths.get(segDir, s"events.${i + 1}.log"))
     }
     val routes = Seq(
-      ("click", "k", "t_all"), ("click", "k", "t_click"),
-      ("purchase", "k", "t_all"), ("purchase", "k", "t_purchase"),
-      ("signup", "k", "t_signup"),
-      ("view", "k", "t_all"), ("view", "k", "t_view"))
-    import spark.implicits._
-    val routesDf = routes.toDF("table", "column", "target")
+      Route("click", "k", "t_all"), Route("click", "k", "t_click"),
+      Route("purchase", "k", "t_all"), Route("purchase", "k", "t_purchase"),
+      Route("signup", "k", "t_signup"),
+      Route("view", "k", "t_all"), Route("view", "k", "t_view"))
     val records = spark.readStream.format("graft-cdc")
       .option("path", segDir)
       .option("maxSegmentsPerTrigger", nSegments / 4) // 4 micro-batches
@@ -138,7 +137,7 @@ object Bench {
     def runOnce(): Double = {
       val runCkpt = Files.createTempDirectory("graft-bench-ckpt").toString
       val t0 = System.nanoTime()
-      val q = graft.streaming.CdcStream.startWith(records, routesDf,
+      val q = graft.streaming.CdcStream.startWith(records, routes,
           maxBatch = 1000, runCkpt, windowMillis = 50L) { (batch: DataFrame, _: Long) =>
         batch.write.format("noop").mode("overwrite").save()
       }

@@ -1,7 +1,9 @@
 package graft
 
-import graft.cdc.{CdcConfig, DebeziumConfigGen, Routing}
+import graft.cdc.{CdcConfig, DebeziumConfigGen}
 import graft.streaming.{CdcStream, RedisStreamsSink}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** CLI — the engine's equivalent of the reference's Spring Shell commands
@@ -37,82 +39,20 @@ object Main {
       val cfg = CdcConfig.load(opt(args, "--config").getOrElse("./config.yaml"))
       print(DebeziumConfigGen.generate(cfg))
 
-    case Some("watch") if args.contains("--ingest-gate") =>
+    case Some("watch") =>
       val spark = GraftSession.local()
       spark.sparkContext.setLogLevel("WARN")
-      val q = IngestCli.start(spark, args)
+      val gate = args.contains("--ingest-gate")
+      val q =
+        if (gate) IngestCli.start(spark, args)
+        else try watch(spark, args) catch {
+          case e: IllegalArgumentException =>
+            System.err.println(e.getMessage); sys.exit(2)
+        }
       if (args.contains("--once")) {
         q.processAllAvailable(); q.stop()
-        println(IngestCli.summary(spark, args))
+        if (gate) println(IngestCli.summary(spark, args))
       } else q.awaitTermination()
-      spark.stop()
-
-    case Some("watch") =>
-      val cfg = CdcConfig.load(opt(args, "--config").getOrElse("./config.yaml"))
-      val in = req(args, "--in")
-      val ckpt = req(args, "--checkpoint")
-      val spark = GraftSession.local()
-      spark.sparkContext.setLogLevel("WARN")
-      val records = opt(args, "--source").getOrElse("graft-cdc") match {
-        case "graft-cdc" =>
-          // DSv2 segment-log source: epoch-commit ack + delete-mode
-          // retention (the XACK/XDEL analogue; sources/CdcDirectorySource)
-          spark.readStream.format("graft-cdc")
-            .option("path", in)
-            .option("acknowledge", cfg.source.acknowledge)
-            .option("maxSegmentsPerTrigger",
-              math.max(1, cfg.buffers.source.size / 1000))
-            .load()
-        case "json" =>
-          val schema = StructType(Seq(
-            StructField("id", LongType), StructField("table", StringType),
-            StructField("envelope", StringType)))
-          spark.readStream.schema(schema)
-            // count arm of the reference's count-or-time source buffer
-            .option("maxFilesPerTrigger", math.max(1, cfg.buffers.source.size / 1000))
-            .json(in)
-        case "redis" =>
-          // the reference's actual I/O plane: one stream per watched table
-          // named <source.prefix><table> (WatchStream.java:323), consumer
-          // group + XACK/XDEL handled by the DSv2 source. --in is the
-          // redis:// (or mem://) URL here; --url overrides for tests.
-          val url = opt(args, "--url").getOrElse(
-            s"redis://${cfg.source.connection.host}:${cfg.source.connection.port}")
-          val streams = cfg.mapping.keys.toSeq.sorted
-            .map(t => s"${cfg.source.prefix}$t").mkString(",")
-          spark.readStream.format("graft-redis")
-            .option("url", url)
-            .option("streams", streams)
-            .option("group", cfg.source.group)
-            .option("prefix", cfg.source.prefix)
-            .option("acknowledge", cfg.source.acknowledge)
-            .option("maxRecordsPerTrigger", cfg.buffers.source.size)
-            .load()
-        case other =>
-          System.err.println(s"unknown --source $other (graft-cdc|json|redis)"); sys.exit(2)
-      }
-      val q = opt(args, "--sink").getOrElse("parquet") match {
-        case "parquet" =>
-          CdcStream.start(records, Routing.routesDf(spark, cfg),
-            cfg.buffers.target.size, req(args, "--out"), ckpt,
-            windowMillis = cfg.buffers.dedupe.time)
-        case "redis" =>
-          // the reference's actual output plane: XADD id-array entries to
-          // <target.prefix><target> with startup priming (WatchStream
-          // .java:261-295). --target-url overrides the config for tests.
-          val turl = opt(args, "--target-url").getOrElse(
-            s"redis://${cfg.target.connection.host}:${cfg.target.connection.port}")
-          RedisStreamsSink.prime(turl, cfg.target.prefix,
-            cfg.routes.map(_.target).distinct)
-          CdcStream.startWith(records, cfg.routes,
-            cfg.buffers.target.size, ckpt,
-            windowMillis = cfg.buffers.dedupe.time)(
-            RedisStreamsSink.writer(turl, cfg.target.prefix))
-        case other =>
-          System.err.println(s"unknown --sink $other (parquet|redis)"); sys.exit(2)
-      }
-      if (args.contains("--once")) { q.processAllAvailable(); q.stop() }
-      else q.awaitTermination()
       spark.stop()
 
     case _ =>
@@ -120,12 +60,81 @@ object Main {
       sys.exit(2)
   }
 
+  /** Starts the CDC plane of `watch` (source → [[CdcStream]] → sink) on
+    * `spark` and returns the running query; the caller owns the session and
+    * decides between draining (`--once`) and awaiting termination. A missing
+    * or unknown flag value is an IllegalArgumentException.
+    *
+    * Config knobs: `buffers.source.size` caps each source stream per
+    * trigger, `buffers.dedupe.time` is the trigger interval, and
+    * `buffers.target.size` caps the ids of one output chunk.
+    */
+  private[graft] def watch(spark: SparkSession, args: Array[String]): StreamingQuery = {
+    val cfg = CdcConfig.load(opt(args, "--config").getOrElse("./config.yaml"))
+    val in = req(args, "--in")
+    val ckpt = req(args, "--checkpoint")
+    val records = opt(args, "--source").getOrElse("graft-cdc") match {
+      case "graft-cdc" =>
+        // DSv2 segment-log source: epoch-commit ack + delete-mode
+        // retention (the XACK/XDEL analogue; sources/CdcDirectorySource)
+        spark.readStream.format("graft-cdc")
+          .option("path", in)
+          .option("acknowledge", cfg.source.acknowledge)
+          .option("maxSegmentsPerTrigger",
+            math.max(1, cfg.buffers.source.size / 1000))
+          .load()
+      case "json" =>
+        val schema = StructType(Seq(
+          StructField("id", LongType), StructField("table", StringType),
+          StructField("envelope", StringType)))
+        spark.readStream.schema(schema)
+          // count arm of the reference's count-or-time source buffer
+          .option("maxFilesPerTrigger", math.max(1, cfg.buffers.source.size / 1000))
+          .json(in)
+      case "redis" =>
+        // the reference's actual I/O plane: one stream per watched table
+        // named <source.prefix><table> (WatchStream.java:323), consumer
+        // group + XACK/XDEL handled by the DSv2 source. --in is the
+        // redis:// (or mem://) URL here.
+        val streams = cfg.mapping.keys.toSeq.sorted
+          .map(t => s"${cfg.source.prefix}$t").mkString(",")
+        spark.readStream.format("graft-redis")
+          .option("url", in)
+          .option("streams", streams)
+          .option("group", cfg.source.group)
+          .option("prefix", cfg.source.prefix)
+          .option("acknowledge", cfg.source.acknowledge)
+          .option("maxRecordsPerTrigger", cfg.buffers.source.size)
+          .load()
+      case other =>
+        throw new IllegalArgumentException(s"unknown --source $other (graft-cdc|json|redis)")
+    }
+    opt(args, "--sink").getOrElse("parquet") match {
+      case "parquet" =>
+        CdcStream.start(records, cfg.routes, cfg.buffers.target.size,
+          req(args, "--out"), ckpt, windowMillis = cfg.buffers.dedupe.time)
+      case "redis" =>
+        // the reference's actual output plane: XADD id-array entries to
+        // <target.prefix><target> with startup priming (WatchStream
+        // .java:261-295). --target-url overrides the config's target.
+        val turl = opt(args, "--target-url").getOrElse(
+          s"redis://${cfg.target.connection.host}:${cfg.target.connection.port}")
+        RedisStreamsSink.prime(turl, cfg.target.prefix,
+          cfg.routes.map(_.target).distinct)
+        CdcStream.startWith(records, cfg.routes,
+          cfg.buffers.target.size, ckpt,
+          windowMillis = cfg.buffers.dedupe.time)(
+          RedisStreamsSink.writer(turl, cfg.target.prefix))
+      case other =>
+        throw new IllegalArgumentException(s"unknown --sink $other (parquet|redis)")
+    }
+  }
+
   private def opt(args: Array[String], name: String): Option[String] = {
     val i = args.indexOf(name)
     if (i >= 0 && i + 1 < args.length) Some(args(i + 1)) else None
   }
   private def req(args: Array[String], name: String): String =
-    opt(args, name).getOrElse {
-      System.err.println(s"missing required $name"); sys.exit(2)
-    }
+    opt(args, name).getOrElse(
+      throw new IllegalArgumentException(s"missing required $name"))
 }

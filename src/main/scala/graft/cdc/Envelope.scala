@@ -11,7 +11,8 @@ import org.apache.spark.sql.types._
   * Reference semantics (RedisSource.java:58-66):
   *   - format detect is structural, per record: a body with exactly one field
   *     is "compact" (its value is the envelope); otherwise "extended"
-  *     (envelope under the `value` field).
+  *     (envelope under the `value` field). The Redis source does this while
+  *     it reads an entry, so the envelope reaches these functions as a string.
   *   - only `after.<column>` is read, and it must be an integer.
   */
 object Envelope {
@@ -23,14 +24,6 @@ object Envelope {
   val schema: StructType = StructType(Seq(
     StructField("before", MapType(StringType, StringType)),
     StructField("after", MapType(StringType, StringType))))
-
-  /** Structural format detection over a `MAP<STRING,STRING>` body column:
-    * 1 field → compact (the single value IS the envelope), else extended
-    * (envelope under body['value']). Mirrors RedisSource.java:58-62.
-    */
-  def selectEnvelope(body: Column): Column =
-    when(size(map_keys(body)) === 1, element_at(map_values(body), 1))
-      .otherwise(element_at(body, "value"))
 
   /** Parse an envelope JSON string to (before, after) maps. */
   def parse(envelopeJson: Column): Column = from_json(envelopeJson, schema)

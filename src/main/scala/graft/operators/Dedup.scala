@@ -217,8 +217,8 @@ object Dedup {
     // NOTE (r18, tried and REVERTED): keying every SMJ stage on
     // (xxhash64(g), g) so sorts compare the 8-byte hash before the string
     // measured STRICTLY SLOWER in an interleaved same-JVM A/B of exactly
-    // this candidate pipeline (tools/CappedKeysAB: old 1.318/2.057 s vs
-    // composite 1.494/2.283 s across two windows, candidate sets
+    // this candidate pipeline (OPTIMIZATION_r18.md §2: old 1.318/2.057 s
+    // vs composite 1.494/2.283 s across two windows, candidate sets
     // identical) — the +8 B/row shuffle and the extra hash eval cost more
     // than the sort-compare savings on 3-word shingle keys. String keys
     // stand.

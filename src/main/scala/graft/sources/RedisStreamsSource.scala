@@ -58,14 +58,19 @@ class RedisStreamsSource extends TableProvider with DataSourceRegister {
       prefix = Option(opts.get("prefix")).getOrElse(""),
       acknowledge = Option(opts.get("acknowledge")).getOrElse("simple"),
       maxRecordsPerTrigger =
-        Option(opts.get("maxRecordsPerTrigger")).map(_.toInt).getOrElse(Int.MaxValue),
-      readCount = Option(opts.get("readCount")).map(_.toInt).getOrElse(1000)))
+        Option(opts.get("maxRecordsPerTrigger")).map(_.toInt).getOrElse(Int.MaxValue)))
   }
+}
+
+private[sources] object RedisStreamsSource {
+  /** COUNT of every paged XRANGE: the reference's per-poll read size
+    * (RedisSource.java:72-93). */
+  val ReadCount = 1000
 }
 
 private[sources] case class RedisStreamsConfig(
     url: String, streams: Seq[String], group: String, prefix: String,
-    acknowledge: String, maxRecordsPerTrigger: Int, readCount: Int)
+    acknowledge: String, maxRecordsPerTrigger: Int)
 
 private class RedisStreamsTable(cfg: RedisStreamsConfig)
     extends Table with SupportsRead {
@@ -168,7 +173,7 @@ private class RedisStreamsStream(cfg: RedisStreamsConfig) extends MicroBatchStre
       val to = e.getOrElse(stream, RedisId.Zero)
       if (to > from)
         Some(RedisStreamPartition(cfg.url, stream, cfg.prefix, from.toString,
-          to.toString, cfg.readCount): InputPartition)
+          to.toString): InputPartition)
       else None
     }.toArray
   }
@@ -185,13 +190,13 @@ private class RedisStreamsStream(cfg: RedisStreamsConfig) extends MicroBatchStre
     val ends = end.asInstanceOf[RedisOffset].ends
     ends.foreach { case (stream, to) =>
       var from = lastCommitted.getOrElse(stream, RedisId.Zero)
-      var batch = conn.xrange(stream, from, to, cfg.readCount)
+      var batch = conn.xrange(stream, from, to, RedisStreamsSource.ReadCount)
       while (batch.nonEmpty) {
         val ids = batch.map(_._1)
         conn.xack(stream, cfg.group, ids)
         if (cfg.acknowledge == "delete") conn.xdel(stream, ids)
         from = ids.last
-        batch = conn.xrange(stream, from, to, cfg.readCount)
+        batch = conn.xrange(stream, from, to, RedisStreamsSource.ReadCount)
       }
       lastCommitted += stream -> to
     }
@@ -202,7 +207,7 @@ private class RedisStreamsStream(cfg: RedisStreamsConfig) extends MicroBatchStre
 
 private case class RedisStreamPartition(url: String, stream: String,
                                         prefix: String, fromExclusive: String,
-                                        toInclusive: String, readCount: Int)
+                                        toInclusive: String)
   extends InputPartition
 
 /** Executor-side range reader: pages through (from, to] with COUNT-bounded
@@ -226,9 +231,9 @@ private class RedisPartitionReader(p: RedisStreamPartition)
 
   override def next(): Boolean = {
     if (!page.hasNext && !pageExhausted) {
-      val batch = conn.xrange(p.stream, cursor, to, p.readCount)
+      val batch = conn.xrange(p.stream, cursor, to, RedisStreamsSource.ReadCount)
       if (batch.nonEmpty) cursor = batch.last._1
-      if (batch.size < p.readCount) pageExhausted = true
+      if (batch.size < RedisStreamsSource.ReadCount) pageExhausted = true
       page = batch.iterator
     }
     if (page.hasNext) { current = page.next(); true } else false

@@ -28,22 +28,22 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * connector); tests use MemoryStream. Output: per-epoch parquet (or any
   * writer the caller supplies) of (target, chunk_no, ids, n_ids, epoch).
   *
-  * Epoch plan: the route edges are compiled into the fan-out expression on
-  * the driver (a route DataFrame is collected once, at start), so an epoch
-  * runs no job for them. Each epoch is
-  * then two stages (scan → parse → fan-out → partial dedupe; merge → chunk →
-  * write) around one exchange on `target` — see [[CdcPipeline.run]]. The
-  * dedupe state of an epoch is one target's distinct ids per task, bounded by
-  * the source's per-trigger cap summed over the streams feeding that target
-  * (Σ `buffers.source.size` in `watch`): the reference's 100k dedupe buffer.
+  * Epoch plan: the route edges (`CdcConfig.routes`, on the driver) are
+  * compiled into the fan-out expression, so an epoch runs no job for them.
+  * Each epoch is two stages (scan → parse → fan-out → partial dedupe;
+  * merge → chunk → write) around one exchange on `target` — see
+  * [[CdcPipeline.run]]. The dedupe state of an epoch is one target's
+  * distinct ids per task, bounded by the source's per-trigger cap summed
+  * over the streams feeding that target (Σ `buffers.source.size` in
+  * `watch`): the reference's 100k dedupe buffer.
   */
 object CdcStream {
 
   /** Start the pipeline with the default parquet sink. */
-  def start(records: DataFrame, routes: DataFrame, maxBatch: Int,
+  def start(records: DataFrame, edges: Seq[Route], maxBatch: Int,
             outDir: String, checkpointDir: String,
             windowMillis: Long = 5000L): StreamingQuery =
-    startWith(records, routes, maxBatch, checkpointDir, windowMillis) {
+    startWith(records, edges, maxBatch, checkpointDir, windowMillis) {
       (batch, epoch) =>
         batch.withColumn("epoch", lit(epoch))
           .write.mode("append").parquet(outDir)
@@ -53,12 +53,6 @@ object CdcStream {
     * production, memory sink in tests). The writer receives the BATCHED
     * output (target, chunk_no, ids, n_ids) for one epoch.
     */
-  def startWith(records: DataFrame, routes: DataFrame, maxBatch: Int,
-                checkpointDir: String, windowMillis: Long)(
-                writer: (DataFrame, Long) => Unit): StreamingQuery =
-    startWith(records, CdcPipeline.edges(routes), maxBatch, checkpointDir, windowMillis)(writer)
-
-  /** [[startWith]] over route edges already on the driver (`CdcConfig.routes`). */
   def startWith(records: DataFrame, edges: Seq[Route], maxBatch: Int,
                 checkpointDir: String, windowMillis: Long)(
                 writer: (DataFrame, Long) => Unit): StreamingQuery =

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft._
+import graft.cdc.Route
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -76,13 +77,11 @@ object StreamRehearsal {
     */
   private def replayCdc(spark: SparkSession, segDir: String,
                         nSegments: Int): (Double, Long, Long) = {
-    import spark.implicits._
     val routes = Seq(
-      ("click", "k", "t_all"), ("click", "k", "t_click"),
-      ("purchase", "k", "t_all"), ("purchase", "k", "t_purchase"),
-      ("signup", "k", "t_signup"),
-      ("view", "k", "t_all"), ("view", "k", "t_view"))
-    val routesDf = routes.toDF("table", "column", "target")
+      Route("click", "k", "t_all"), Route("click", "k", "t_click"),
+      Route("purchase", "k", "t_all"), Route("purchase", "k", "t_purchase"),
+      Route("signup", "k", "t_signup"),
+      Route("view", "k", "t_all"), Route("view", "k", "t_view"))
     val records = spark.readStream.format("graft-cdc")
       .option("path", segDir)
       .option("maxSegmentsPerTrigger", nSegments / 4)
@@ -93,7 +92,7 @@ object StreamRehearsal {
     val runCkpt = java.nio.file.Files
       .createTempDirectory("graft-srehearse-ckpt").toString
     val t0 = System.nanoTime()
-    val q = graft.streaming.CdcStream.startWith(records, routesDf,
+    val q = graft.streaming.CdcStream.startWith(records, routes,
         maxBatch = 1000, runCkpt, windowMillis = 50L) { (b: DataFrame, _: Long) =>
       b.write.format("noop").mode("overwrite").save()
     }

@@ -4,26 +4,15 @@ import graft.TestSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Envelope decode semantics from RedisSource.java:58-66 — structural
-  * compact/extended detection, after-image extraction, strict-int behavior.
+/** Envelope decode semantics from RedisSource.java:66 — after-image
+  * extraction, strict-int behavior. Compact/extended detection happens in
+  * the Redis source and is covered by RedisStreamsSourceSpec.
   */
 class EnvelopeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private val env = """{"before": {"entity_id": 1, "v": 4}, "after": {"entity_id": 7, "v": 4}}"""
-
-  test("compact body (1 field) selects its single value as the envelope") {
-    val df = Seq(Map("key" -> env)).toDF("body")
-      .select(Envelope.selectEnvelope(col("body")).as("e"))
-    assert(df.head().getString(0) == env)
-  }
-
-  test("extended body (key+value) selects the value field") {
-    val df = Seq(Map("key" -> "{}", "value" -> env)).toDF("body")
-      .select(Envelope.selectEnvelope(col("body")).as("e"))
-    assert(df.head().getString(0) == env)
-  }
 
   test("entityId extracts after.<field> as int") {
     val df = Seq(env).toDF("e").select(Envelope.entityId(col("e"), "entity_id"))

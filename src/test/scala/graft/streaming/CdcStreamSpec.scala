@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.TestSpark
+import graft.cdc.Route
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -18,8 +19,8 @@ class CdcStreamSpec extends AnyFunSuite {
     s"""{"before": null, "after": {"entity_id": $id}}"""
 
   private val routes = Seq(
-    ("catalog_category_entity", "entity_id", "catalog_product_flat"),
-    ("catalog_category_entity", "entity_id", "catalog_category_product"))
+    Route("catalog_category_entity", "entity_id", "catalog_product_flat"),
+    Route("catalog_category_entity", "entity_id", "catalog_category_product"))
 
   test("dedupe within a micro-batch, re-emission across batches (reference semantics)") {
     implicit val sq = spark.sqlContext
@@ -27,7 +28,7 @@ class CdcStreamSpec extends AnyFunSuite {
     val records = mem.toDF().toDF("id", "table", "envelope")
     val collected = scala.collection.mutable.ArrayBuffer[(Long, String, String)]()
     val ckpt = Files.createTempDirectory("graft-ckpt").toString
-    val q = CdcStream.startWith(records, routes.toDF("table", "column", "target"),
+    val q = CdcStream.startWith(records, routes,
         maxBatch = 1000, ckpt, windowMillis = 100L) { (batch: DataFrame, epoch: Long) =>
       batch.select("target", "ids").collect()
         .foreach(r => collected.synchronized {
@@ -63,7 +64,7 @@ class CdcStreamSpec extends AnyFunSuite {
     val records = mem.toDF().toDF("id", "table", "envelope")
     val outDir = Files.createTempDirectory("graft-out").toString
     val ckpt = Files.createTempDirectory("graft-ckpt2").toString
-    val q = CdcStream.start(records, routes.toDF("table", "column", "target"),
+    val q = CdcStream.start(records, routes,
       maxBatch = 3, outDir, ckpt, windowMillis = 100L)
     try {
       mem.addData((1 to 7).map(i => (i.toLong, "catalog_category_entity", envelope(i))): _*)

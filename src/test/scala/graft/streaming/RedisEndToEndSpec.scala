@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.TestSpark
-import graft.cdc.{CdcConfig, Routing}
 import graft.sources.{InMemoryRedis, RedisId}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * (WatchTests.java:96-157): push Debezium envelopes into per-table source
   * streams, run source → parse → fan-out → dedupe → batch → XADD sink, then
   * assert per-target stream contents, the O4 priming entry, the ack/delete
-  * retention matrix on the source, and the ≤maxBatch id-array cap.
+  * retention matrix on the source, and the ≤maxBatch id-array cap. Every
+  * run goes through `Main.watch`, the function the CLI runs.
   */
 class RedisEndToEndSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -30,31 +30,30 @@ class RedisEndToEndSpec extends AnyFunSuite {
     java.nio.file.Files.createTempDirectory("graft-e2e-ckpt").toString
 
   /** The reference's config shape: one watched table fanning out to two
-    * targets (config.yaml mapping, WatchTests' fixtures).
+    * targets (config.yaml mapping, WatchTests' fixtures). All three buffers
+    * are spelled out, as an operator's config sets them; the 100 ms dedupe
+    * time is the trigger interval `watch` runs.
     */
-  private def config(ack: String, maxBatch: Int = 1000): CdcConfig =
-    CdcConfig.parse(
-      s"""{"source": {"prefix": "m2.", "group": "cdc", "acknowledge": "$ack"},
-         |"target": {"prefix": "target."},
-         |"buffers": {"target": {"size": $maxBatch, "time": 1000}},
-         |"mapping": {"catalog_category_entity": {"entity_id":
-         |  ["catalog_product_flat", "catalog_category_product"]}}}""".stripMargin,
-      yaml = false)
+  private def config(ack: String, maxBatch: Int = 1000,
+                     sourcePort: Int = 6379): String =
+    s"""{"source": {"prefix": "m2.", "group": "cdc", "acknowledge": "$ack",
+       |  "connection": {"host": "127.0.0.1", "port": $sourcePort}},
+       |"target": {"prefix": "target."},
+       |"buffers": {"source": {"size": 1000, "time": 1000},
+       |  "dedupe": {"size": 100000, "time": 100},
+       |  "target": {"size": $maxBatch, "time": 1000}},
+       |"mapping": {"catalog_category_entity": {"entity_id":
+       |  ["catalog_product_flat", "catalog_category_product"]}}}""".stripMargin
 
-  /** Source stream + sink stream contents for one full watch run. */
-  private def runWatch(url: String, mem: InMemoryRedis, cfg: CdcConfig): Unit = {
-    val records = spark.readStream.format("graft-redis")
-      .option("url", url)
-      .option("streams", cfg.mapping.keys.toSeq.sorted
-        .map(t => s"${cfg.source.prefix}$t").mkString(","))
-      .option("group", cfg.source.group)
-      .option("prefix", cfg.source.prefix)
-      .option("acknowledge", cfg.source.acknowledge)
-      .load()
-    RedisStreamsSink.prime(url, cfg.target.prefix, cfg.routes.map(_.target).distinct)
-    val q = CdcStream.startWith(records, Routing.routesDf(spark, cfg),
-      cfg.buffers.target.size, ckpt(), windowMillis = 100L)(
-      RedisStreamsSink.writer(url, cfg.target.prefix))
+  /** One full `watch --source redis --sink redis` run through the CLI's own
+    * wiring ([[graft.Main.watch]]), with Redis on both ends at `url`.
+    */
+  private def runWatch(url: String, mem: InMemoryRedis, config: String): Unit = {
+    val cfgFile = java.nio.file.Files.createTempFile("graft-e2e", ".json")
+    java.nio.file.Files.writeString(cfgFile, config)
+    val q = graft.Main.watch(spark, Array("watch", "--config", cfgFile.toString,
+      "--source", "redis", "--sink", "redis", "--in", url, "--target-url", url,
+      "--checkpoint", ckpt()))
     try {
       q.processAllAvailable()
       // epoch N's source ack fires when epoch N+1 plans; poke an empty epoch
@@ -136,5 +135,14 @@ class RedisEndToEndSpec extends AnyFunSuite {
     val firsts = entries.map(
       _.stripPrefix("[").stripSuffix("]").split(",").head.toInt)
     assert(firsts == firsts.sorted, s"chunks out of order: $entries")
+  }
+
+  test("watch: --source redis reads the --in URL, not source.connection") {
+    val (url, mem) = freshMem()
+    Seq(1, 2).foreach(i =>
+      mem.xadd("m2.catalog_category_entity", Seq("v" -> envelope(i))))
+    // nothing listens on port 1: reading source.connection fails the query
+    runWatch(url, mem, config(ack = "simple", sourcePort = 1))
+    assert(idArrays(mem, "target.catalog_product_flat").contains("[1,2]"))
   }
 }

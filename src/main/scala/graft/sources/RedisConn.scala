@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, BufferedOutputStream, InputStream}
+import java.io.{BufferedOutputStream, InputStream}
 import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -21,6 +21,9 @@ final case class RedisId(ms: Long, seq: Long) extends Ordered[RedisId] {
 
 object RedisId {
   val Zero: RedisId = RedisId(0L, 0L)
+  /** The largest id, `18446744073709551615-18446744073709551615`: the
+    * open end of a range read. */
+  val Max: RedisId = RedisId(-1L, -1L)
   def parse(s: String): RedisId = s.split("-") match {
     case Array(ms, seq) => RedisId(java.lang.Long.parseUnsignedLong(ms),
       java.lang.Long.parseUnsignedLong(seq))
@@ -55,6 +58,25 @@ trait RedisConn extends AutoCloseable {
   def xrange(stream: String, afterExclusive: RedisId, endInclusive: RedisId,
              count: Int): Seq[(RedisId, Map[String, String])]
 
+  /** The same range as [[xrange]], each entry reduced to its Debezium
+    * envelope's UTF-8 bytes by [[RedisConn.isEnvelopeField]]; an entry with
+    * no envelope field fails the read with [[RedisConn.noEnvelope]].
+    */
+  def xrangeEnvelopes(stream: String, afterExclusive: RedisId, endInclusive: RedisId,
+                      count: Int): IndexedSeq[(RedisId, Array[Byte])] =
+    xrange(stream, afterExclusive, endInclusive, count).iterator.map { case (id, body) =>
+      body.collectFirst {
+        case (k, v) if RedisConn.isEnvelopeField(body.size, k == "value") => id -> v.getBytes(UTF_8)
+      }.getOrElse(throw RedisConn.noEnvelope(stream, id))
+    }.toIndexedSeq
+
+  /** The ids of the same range as [[xrange]]. Redis has no id-only range
+    * command, so the bodies still cross the wire; the client skips them.
+    */
+  def xrangeIds(stream: String, afterExclusive: RedisId, endInclusive: RedisId,
+                count: Int): IndexedSeq[RedisId] =
+    xrange(stream, afterExclusive, endInclusive, count).iterator.map(_._1).toIndexedSeq
+
   /** Highest id present, `XREVRANGE <stream> + - COUNT 1`; None if empty. */
   def xlatestId(stream: String): Option[RedisId]
 
@@ -73,6 +95,16 @@ trait RedisConn extends AutoCloseable {
 }
 
 object RedisConn {
+  /** The reference's per-record wire-format detection
+    * (RedisSource.java:58-62): a field of an entry with `fields` fields
+    * carries the envelope if it is the only field (compact) or its key is
+    * `value` (extended). An entry's envelope is its first such field.
+    */
+  def isEnvelopeField(fields: Int, keyIsValue: Boolean): Boolean = fields == 1 || keyIsValue
+
+  def noEnvelope(stream: String, id: RedisId): IllegalStateException =
+    new IllegalStateException(s"extended-format entry $id in $stream lacks a 'value' field")
+
   /** `mem://<name>` → shared JVM-local fake (CI; one instance per name);
     * `redis://host[:port]` → RESP2 socket client (production/integration).
     */
@@ -170,18 +202,21 @@ object InMemoryRedis {
   def reset(name: String): Unit = { registry.remove(name); () }
 }
 
-/** Minimal blocking RESP2 client over a plain socket — only the six
-  * commands in [[RedisConn]], no pooling, no pipelining (the connector's
-  * per-trigger command volume is tiny; data-plane reads are batched by
-  * COUNT). Protocol per the public Redis serialization spec.
+/** Minimal blocking RESP2 client over a plain socket — only the commands
+  * in [[RedisConn]], no pooling, no pipelining (the connector's per-trigger
+  * command volume is tiny; data-plane reads are batched by COUNT). Replies
+  * are read through one [[RespReader]]: range replies are walked in place,
+  * so an entry's id is parsed from the wire bytes, [[xrangeEnvelopes]]
+  * copies out only the envelope and [[xrangeIds]] copies out no body byte.
+  * Protocol per the public Redis serialization spec.
   */
 final class RespRedis(host: String, port: Int) extends RedisConn {
   private val socket = new Socket(host, port)
   socket.setTcpNoDelay(true)
-  private val in = new BufferedInputStream(socket.getInputStream)
+  private val in = new RespReader(socket.getInputStream)
   private val out = new BufferedOutputStream(socket.getOutputStream)
 
-  private def send(args: Seq[String]): Any = this.synchronized {
+  private def send[A](args: Seq[String])(read: RespReader => A): A = this.synchronized {
     out.write(s"*${args.size}\r\n".getBytes(UTF_8))
     args.foreach { a =>
       val b = a.getBytes(UTF_8)
@@ -189,90 +224,242 @@ final class RespRedis(host: String, port: Int) extends RedisConn {
       out.write(b); out.write('\r'); out.write('\n')
     }
     out.flush()
-    readReply(in)
+    read(in)
   }
 
-  private def readLine(s: InputStream): String = {
-    val sb = new java.lang.StringBuilder
-    var c = s.read()
-    while (c != '\r') {
-      if (c < 0) throw new java.io.EOFException("redis connection closed")
-      sb.append(c.toChar); c = s.read()
+  private def call(args: String*): Any = send(args)(_.reply())
+
+  private def xrangeArgs(stream: String, afterExclusive: RedisId, endInclusive: RedisId,
+                         count: Int): Seq[String] =
+    Seq("XRANGE", stream, s"($afterExclusive", endInclusive.toString, "COUNT", count.toString)
+
+  /** Walks an XRANGE/XREVRANGE reply: `entry` gets each entry's id and the
+    * count of its field array, whose bulks it must consume. */
+  private def entries[A](r: RespReader)(entry: (RedisId, Int) => A): IndexedSeq[A] = {
+    val n = r.header('*').toInt
+    val out = IndexedSeq.newBuilder[A]
+    var i = 0
+    while (i < n) {
+      if (r.header('*') != 2) throw new IllegalStateException("bad stream entry: want [id, fields]")
+      val id = r.id()
+      out += entry(id, math.max(r.header('*').toInt, 0))
+      i += 1
     }
-    s.read() // \n
-    sb.toString
-  }
-
-  private def readReply(s: InputStream): Any = s.read() match {
-    case '+' => readLine(s)
-    case '-' => throw new RespRedis.RedisError(readLine(s))
-    case ':' => readLine(s).toLong
-    case '$' =>
-      val n = readLine(s).toInt
-      if (n < 0) null
-      else {
-        val buf = new Array[Byte](n)
-        var off = 0
-        while (off < n) {
-          val r = s.read(buf, off, n - off)
-          if (r < 0) throw new java.io.EOFException("redis connection closed")
-          off += r
-        }
-        s.read(); s.read() // \r\n
-        new String(buf, UTF_8)
-      }
-    case '*' =>
-      val n = readLine(s).toInt
-      if (n < 0) null else Seq.fill(n)(readReply(s))
-    case c => throw new IllegalStateException(s"bad RESP type byte: $c")
+    out.result()
   }
 
   override def xgroupCreate(stream: String, group: String, from: RedisId): Unit =
-    try { send(Seq("XGROUP", "CREATE", stream, group, from.toString, "MKSTREAM")); () }
+    try { call("XGROUP", "CREATE", stream, group, from.toString, "MKSTREAM"); () }
     catch { case e: RespRedis.RedisError if e.getMessage.startsWith("BUSYGROUP") => () }
 
   override def xrange(stream: String, afterExclusive: RedisId,
                       endInclusive: RedisId, count: Int): Seq[(RedisId, Map[String, String])] =
-    send(Seq("XRANGE", stream, s"($afterExclusive", endInclusive.toString,
-        "COUNT", count.toString)) match {
-      case entries: Seq[_] => entries.map {
-        case Seq(id: String, fields: Seq[_]) =>
-          val kv = fields.asInstanceOf[Seq[String]].grouped(2)
-            .collect { case Seq(k, v) => k -> v }.toMap
-          (RedisId.parse(id), kv)
-        case other => throw new IllegalStateException(s"bad XRANGE entry: $other")
+    send(xrangeArgs(stream, afterExclusive, endInclusive, count))(r => entries(r) { (id, n) =>
+      id -> Map.from(Iterator.fill(n / 2)(r.string() -> r.string()))
+    })
+
+  override def xrangeEnvelopes(stream: String, afterExclusive: RedisId, endInclusive: RedisId,
+                               count: Int): IndexedSeq[(RedisId, Array[Byte])] = {
+    var missing: IllegalStateException = null
+    val es = send(xrangeArgs(stream, afterExclusive, endInclusive, count))(r => entries(r) { (id, n) =>
+      val fields = n / 2
+      var envelope: Array[Byte] = null
+      var i = 0
+      while (i < fields) {
+        val keyIsValue = r.bulkEquals(RespRedis.ValueKey)
+        if (envelope == null && RedisConn.isEnvelopeField(fields, keyIsValue)) envelope = r.bulk()
+        else r.skipBulk()
+        i += 1
       }
-      case null => Seq.empty
-      case other => throw new IllegalStateException(s"bad XRANGE reply: $other")
-    }
+      // the rest of the reply is still read, so the connection stays usable
+      if (envelope == null && missing == null) missing = RedisConn.noEnvelope(stream, id)
+      id -> envelope
+    })
+    if (missing != null) throw missing
+    es
+  }
+
+  override def xrangeIds(stream: String, afterExclusive: RedisId, endInclusive: RedisId,
+                         count: Int): IndexedSeq[RedisId] =
+    send(xrangeArgs(stream, afterExclusive, endInclusive, count))(r =>
+      entries(r) { (id, n) => r.skipBulks(n); id })
 
   override def xlatestId(stream: String): Option[RedisId] =
-    send(Seq("XREVRANGE", stream, "+", "-", "COUNT", "1")) match {
-      case Seq(Seq(id: String, _)) => Some(RedisId.parse(id))
-      case _ => None
-    }
+    send(Seq("XREVRANGE", stream, "+", "-", "COUNT", "1"))(r =>
+      entries(r) { (id, n) => r.skipBulks(n); id }).headOption
 
   override def xack(stream: String, group: String, ids: Seq[RedisId]): Long =
     if (ids.isEmpty) 0L
-    else send(Seq("XACK", stream, group) ++ ids.map(_.toString)).asInstanceOf[Long]
+    else call(Seq("XACK", stream, group) ++ ids.map(_.toString): _*).asInstanceOf[Long]
 
   override def xdel(stream: String, ids: Seq[RedisId]): Long =
     if (ids.isEmpty) 0L
-    else send(Seq("XDEL", stream) ++ ids.map(_.toString)).asInstanceOf[Long]
+    else call(Seq("XDEL", stream) ++ ids.map(_.toString): _*).asInstanceOf[Long]
 
   override def xadd(stream: String, body: Seq[(String, String)],
                     id: Option[RedisId]): RedisId = {
     val args = Seq("XADD", stream, id.map(_.toString).getOrElse("*")) ++
       body.flatMap { case (k, v) => Seq(k, v) }
-    RedisId.parse(send(args).asInstanceOf[String])
+    RedisId.parse(call(args: _*).asInstanceOf[String])
   }
 
-  override def xlen(stream: String): Long =
-    send(Seq("XLEN", stream)).asInstanceOf[Long]
+  override def xlen(stream: String): Long = call("XLEN", stream).asInstanceOf[Long]
 
   override def close(): Unit = socket.close()
 }
 
 object RespRedis {
   final class RedisError(msg: String) extends RuntimeException(msg)
+  private val ValueKey = "value".getBytes(UTF_8)
+}
+
+/** RESP2 reply reader over one unsynchronized buffer (one reader per
+  * connection, used under the connection's lock). Lengths and integers are
+  * parsed as numbers; bulk payloads are copied out, compared or skipped in
+  * place, across buffer refills.
+  */
+private final class RespReader(in: InputStream) {
+  private val buf = new Array[Byte](RespReader.BufferSize)
+  private var pos = 0
+  private var lim = 0
+
+  private def fill(): Unit = {
+    val n = in.read(buf, 0, buf.length)
+    if (n < 0) throw new java.io.EOFException("redis connection closed")
+    pos = 0; lim = n
+  }
+
+  private def byte(): Int = {
+    while (pos == lim) fill()
+    val b = buf(pos); pos += 1; b
+  }
+
+  private def crlf(): Unit = { byte(); byte(); () }
+
+  /** A signed decimal up to and including its CRLF. */
+  private def number(): Long = {
+    var b = byte()
+    val neg = b == '-'
+    if (neg) b = byte()
+    var v = 0L
+    while (b != '\r') {
+      if (b < '0' || b > '9') throw new IllegalStateException(s"bad RESP number byte: $b")
+      v = v * 10 + (b - '0'); b = byte()
+    }
+    byte() // \n
+    if (neg) -v else v
+  }
+
+  private def line(): String = {
+    val sb = new java.io.ByteArrayOutputStream
+    var b = byte()
+    while (b != '\r') { sb.write(b); b = byte() }
+    byte() // \n
+    sb.toString(UTF_8)
+  }
+
+  private def bytes(n: Int): Array[Byte] = {
+    val a = new Array[Byte](n)
+    var off = 0
+    while (off < n) {
+      if (pos == lim) fill()
+      val k = math.min(n - off, lim - pos)
+      System.arraycopy(buf, pos, a, off, k)
+      pos += k; off += k
+    }
+    crlf()
+    a
+  }
+
+  private def skip(n: Long): Unit = {
+    var left = n
+    while (left > 0) {
+      if (pos == lim) fill()
+      val k = math.min(left, (lim - pos).toLong).toInt
+      pos += k; left -= k
+    }
+    crlf()
+  }
+
+  /** The length of the next frame, which must be of `kind` (`*` or `$`); an
+    * error reply is consumed and raised as [[RespRedis.RedisError]]. */
+  def header(kind: Char): Long = byte() match {
+    case b if b == kind => number()
+    case '-' => throw new RespRedis.RedisError(line())
+    case b => throw new IllegalStateException(s"bad RESP type byte: $b (want '$kind')")
+  }
+
+  /** The next bulk string's payload; null for a null bulk. */
+  def bulk(): Array[Byte] = {
+    val n = header('$')
+    if (n < 0) null else bytes(n.toInt)
+  }
+
+  def string(): String = {
+    val b = bulk()
+    if (b == null) null else new String(b, UTF_8)
+  }
+
+  def skipBulk(): Unit = {
+    val n = header('$')
+    if (n >= 0) skip(n)
+  }
+
+  def skipBulks(n: Int): Unit = {
+    var i = 0
+    while (i < n) { skipBulk(); i += 1 }
+  }
+
+  /** Consumes the next bulk string; whether it equals `key`. */
+  def bulkEquals(key: Array[Byte]): Boolean = {
+    val n = header('$')
+    if (n != key.length) { if (n >= 0) skip(n); false }
+    else {
+      var same = true
+      var i = 0
+      while (i < n) { if (byte() != key(i)) same = false; i += 1 }
+      crlf()
+      same
+    }
+  }
+
+  /** The next bulk string parsed as an `ms-seq` entry id. */
+  def id(): RedisId = {
+    val n = header('$')
+    var ms = 0L
+    var seq = 0L
+    var dash = -1
+    var i = 0
+    while (i < n) {
+      val b = byte()
+      if (b == '-' && dash < 0 && i > 0) dash = i
+      else if (b >= '0' && b <= '9') {
+        // unsigned 64-bit: the wrap of v * 10 + d is the value mod 2^64
+        if (dash < 0) ms = ms * 10 + (b - '0') else seq = seq * 10 + (b - '0')
+      } else throw new IllegalStateException(s"bad redis id byte: $b")
+      i += 1
+    }
+    if (n <= 0 || dash == n - 1) throw new IllegalStateException("bad redis id")
+    crlf()
+    RedisId(ms, seq)
+  }
+
+  /** One whole reply: simple and bulk strings as `String`, integers as
+    * `Long`, arrays as `IndexedSeq`, nulls as null. */
+  def reply(): Any = byte() match {
+    case '+' => line()
+    case '-' => throw new RespRedis.RedisError(line())
+    case ':' => number()
+    case '$' =>
+      val n = number()
+      if (n < 0) null else new String(bytes(n.toInt), UTF_8)
+    case '*' =>
+      val n = number()
+      if (n < 0) null else IndexedSeq.fill(n.toInt)(reply())
+    case b => throw new IllegalStateException(s"bad RESP type byte: $b")
+  }
+}
+
+private object RespReader {
+  val BufferSize: Int = 64 * 1024
 }

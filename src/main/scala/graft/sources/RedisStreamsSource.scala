@@ -5,11 +5,12 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.mutable
 
 /** DSv2 micro-batch source over Redis Streams — the production counterpart
   * of [[CdcDirectorySource]], implementing the reference's actual I/O plane
@@ -36,8 +37,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * Scale notes: one input partition per stream per trigger — parallelism
   * follows stream fan-in like the reference's per-table fluxes (S3). Reads
   * are COUNT-batched ranges; executors open their own connections (the
-  * driver's handle never crosses the wire). Offset planning reads ONLY ids
-  * (capped by maxRecordsPerTrigger); entry bodies move executor-side.
+  * driver's handle never crosses the wire). The per-stream cap
+  * (maxRecordsPerTrigger, Spark's admission-control read limit) is planned
+  * from the checkpointed start with one XRANGE per stream; the planner
+  * decodes only its ids, but Redis has no id-only range command, so the
+  * bodies still cross the wire to the planner once. Entry bodies are
+  * decoded executor-side only. The planned ids are kept until their epoch
+  * commits, so `commit()` acks them without reading the range again.
   */
 class RedisStreamsSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-redis"
@@ -66,6 +72,20 @@ private[sources] object RedisStreamsSource {
   /** COUNT of every paged XRANGE: the reference's per-poll read size
     * (RedisSource.java:72-93). */
   val ReadCount = 1000
+
+  /** (from, to] as consecutive reads of at most [[ReadCount]] entries, the
+    * next one starting after the last id of the previous; `read(after)`
+    * runs lazily. Paging stops at a short page or at a page that ends at
+    * `to`, so a range of whole pages costs no trailing empty XRANGE.
+    */
+  def pages[A](from: RedisId, to: RedisId)(read: RedisId => IndexedSeq[A])(
+      idOf: A => RedisId): Iterator[IndexedSeq[A]] =
+    Iterator.unfold(Option(from)) { after =>
+      after.map(read).filter(_.nonEmpty).map { page =>
+        val last = idOf(page.last)
+        page -> Option.when(page.size == ReadCount && last != to)(last)
+      }
+    }
 }
 
 private[sources] case class RedisStreamsConfig(
@@ -127,7 +147,9 @@ private[sources] object RedisOffset {
   }
 }
 
-private class RedisStreamsStream(cfg: RedisStreamsConfig) extends MicroBatchStream {
+private class RedisStreamsStream(cfg: RedisStreamsConfig)
+    extends MicroBatchStream with SupportsAdmissionControl {
+  import RedisStreamsSource.{ReadCount, pages}
 
   private lazy val conn: RedisConn = {
     val c = RedisConn.open(cfg.url)
@@ -141,28 +163,41 @@ private class RedisStreamsStream(cfg: RedisStreamsConfig) extends MicroBatchStre
 
   override def deserializeOffset(json: String): Offset = RedisOffset.parse(json)
 
-  // latestOffset must be monotone per stream across calls within a run
-  @volatile private var lastEnds: Map[String, RedisId] = Map.empty
-  // ids below this are already XACKed (advanced in commit); re-acking after
-  // a restart is harmless (XACK is idempotent) so this is just an optimization
-  @volatile private var lastCommitted: Map[String, RedisId] = Map.empty
+  // Both are touched only by the query's stream execution thread, which
+  // calls latestOffset and commit. `planned(stream)(start)` = (end, ids) of
+  // a planned (start, end] not yet committed: at most maxRecordsPerTrigger
+  // ids per stream and pending epoch. `lastCommitted` is known only for
+  // epochs committed by this instance (not across a restart).
+  private val planned =
+    mutable.Map[String, mutable.Map[RedisId, (RedisId, IndexedSeq[RedisId])]]()
+  private val lastCommitted = mutable.Map[String, RedisId]()
 
-  override def latestOffset(): Offset = {
-    val ends = cfg.streams.map { s =>
-      val prev = lastEnds.getOrElse(s, RedisId.Zero)
-      val end =
-        if (cfg.maxRecordsPerTrigger == Int.MaxValue)
-          conn.xlatestId(s).filter(_ > prev).getOrElse(prev)
-        else {
-          // S2 XREADGROUP COUNT analogue: cap the batch at N records by
-          // scanning at most N ids past the previous end
-          val batch = conn.xrange(s, prev, RedisId(-1L, -1L), cfg.maxRecordsPerTrigger)
-          if (batch.nonEmpty) batch.last._1 else prev
-        }
-      s -> (if (end > prev) end else prev)
-    }.toMap
-    lastEnds = ends
-    RedisOffset(ends)
+  /** The cap applies per stream: each stream contributes at most
+    * `maxRecordsPerTrigger` entries to a trigger. */
+  override def getDefaultReadLimit: ReadLimit =
+    if (cfg.maxRecordsPerTrigger == Int.MaxValue) ReadLimit.allAvailable()
+    else ReadLimit.maxRows(cfg.maxRecordsPerTrigger)
+
+  override def latestOffset(): Offset = throw new UnsupportedOperationException(
+    "latestOffset(Offset, ReadLimit) should be called instead of this method")
+
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
+    val from = start.asInstanceOf[RedisOffset].ends
+    RedisOffset(cfg.streams.map { s =>
+      val prev = from.getOrElse(s, RedisId.Zero)
+      val end = limit match {
+        case cap: ReadMaxRows =>
+          // S2 XREADGROUP COUNT analogue: the next `cap` ids past the start
+          val ids = conn.xrangeIds(s, prev, RedisId.Max, math.min(cap.maxRows, Int.MaxValue).toInt)
+          if (ids.isEmpty) prev
+          else {
+            planned.getOrElseUpdate(s, mutable.Map.empty)(prev) = (ids.last, ids)
+            ids.last
+          }
+        case _ => conn.xlatestId(s).filter(_ > prev).getOrElse(prev)
+      }
+      s -> end
+    }.toMap)
   }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
@@ -184,23 +219,38 @@ private class RedisStreamsStream(cfg: RedisStreamsConfig) extends MicroBatchStre
   /** A5 XACK (+ A6 XDEL under acknowledge=delete) for every id in the
     * committed epoch — Spark invokes this exactly when all sinks of the
     * epoch have durably written, which is the reference's "every target
-    * wrote or discarded" ref-count completion condition.
+    * wrote or discarded" ref-count completion condition. The ids come from
+    * the planner when it planned all of (last commit, end]; otherwise
+    * (after a restart, or uncapped) from id-only XRANGE pages.
     */
-  override def commit(end: Offset): Unit = {
-    val ends = end.asInstanceOf[RedisOffset].ends
-    ends.foreach { case (stream, to) =>
-      var from = lastCommitted.getOrElse(stream, RedisId.Zero)
-      var batch = conn.xrange(stream, from, to, RedisStreamsSource.ReadCount)
-      while (batch.nonEmpty) {
-        val ids = batch.map(_._1)
-        conn.xack(stream, cfg.group, ids)
-        if (cfg.acknowledge == "delete") conn.xdel(stream, ids)
-        from = ids.last
-        batch = conn.xrange(stream, from, to, RedisStreamsSource.ReadCount)
+  override def commit(end: Offset): Unit =
+    end.asInstanceOf[RedisOffset].ends.foreach { case (stream, to) =>
+      val from = lastCommitted.getOrElse(stream, RedisId.Zero)
+      if (to > from) {
+        val idPages = plannedIds(stream, from, to).map(_.grouped(ReadCount))
+          .getOrElse(pages(from, to)(conn.xrangeIds(stream, _, to, ReadCount))(identity))
+        idPages.foreach { ids =>
+          conn.xack(stream, cfg.group, ids)
+          if (cfg.acknowledge == "delete") conn.xdel(stream, ids)
+        }
       }
-      lastCommitted += stream -> to
+      lastCommitted(stream) = to
+      planned.get(stream).foreach(_.filterInPlace { case (_, (e, _)) => e > to })
     }
-  }
+
+  /** The planner's ids of (from, to], if its planned ranges chain from
+    * `from` exactly to `to`. */
+  private def plannedIds(stream: String, from: RedisId, to: RedisId): Option[IndexedSeq[RedisId]] =
+    planned.get(stream).flatMap { ranges =>
+      val ids = IndexedSeq.newBuilder[RedisId]
+      var at = from
+      while (at < to && ranges.contains(at)) {
+        val (end, range) = ranges(at)
+        ids ++= range
+        at = end
+      }
+      Option.when(at == to)(ids.result())
+    }
 
   override def stop(): Unit = conn.close()
 }
@@ -211,44 +261,25 @@ private case class RedisStreamPartition(url: String, stream: String,
   extends InputPartition
 
 /** Executor-side range reader: pages through (from, to] with COUNT-bounded
-  * XRANGEs on its own connection. Envelope extraction replicates the
-  * reference's per-record wire-format detection (RedisSource.java:58-62):
-  * one field → compact (the sole value IS the envelope); otherwise
-  * extended (envelope under the `value` field).
+  * XRANGEs on its own connection, each entry already reduced to its
+  * envelope by [[RedisConn.xrangeEnvelopes]]'s per-record wire-format
+  * detection (RedisSource.java:58-62).
   */
 private class RedisPartitionReader(p: RedisStreamPartition)
     extends PartitionReader[InternalRow] {
   private val conn = RedisConn.open(p.url)
-  private val table =
-    if (p.prefix.nonEmpty && p.stream.startsWith(p.prefix))
-      p.stream.stripPrefix(p.prefix)
-    else p.stream
+  private val table = UTF8String.fromString(
+    if (p.prefix.nonEmpty && p.stream.startsWith(p.prefix)) p.stream.stripPrefix(p.prefix)
+    else p.stream)
   private val to = RedisId.parse(p.toInclusive)
-  private var cursor = RedisId.parse(p.fromExclusive)
-  private var page: Iterator[(RedisId, Map[String, String])] = Iterator.empty
-  private var pageExhausted = false
-  private var current: (RedisId, Map[String, String]) = _
+  private val entries = RedisStreamsSource.pages(RedisId.parse(p.fromExclusive), to)(
+    conn.xrangeEnvelopes(p.stream, _, to, RedisStreamsSource.ReadCount))(_._1).flatten
+  private var current: (RedisId, Array[Byte]) = _
 
-  override def next(): Boolean = {
-    if (!page.hasNext && !pageExhausted) {
-      val batch = conn.xrange(p.stream, cursor, to, RedisStreamsSource.ReadCount)
-      if (batch.nonEmpty) cursor = batch.last._1
-      if (batch.size < RedisStreamsSource.ReadCount) pageExhausted = true
-      page = batch.iterator
-    }
-    if (page.hasNext) { current = page.next(); true } else false
-  }
+  override def next(): Boolean = entries.hasNext && { current = entries.next(); true }
 
-  override def get(): InternalRow = {
-    val (id, body) = current
-    val envelope =
-      if (body.size == 1) body.head._2
-      else body.getOrElse("value",
-        throw new IllegalStateException(
-          s"extended-format entry $id in ${p.stream} lacks a 'value' field"))
-    InternalRow(UTF8String.fromString(id.toString),
-      UTF8String.fromString(table), UTF8String.fromString(envelope))
-  }
+  override def get(): InternalRow = InternalRow(UTF8String.fromString(current._1.toString),
+    table, UTF8String.fromBytes(current._2))
 
   override def close(): Unit = conn.close()
 }

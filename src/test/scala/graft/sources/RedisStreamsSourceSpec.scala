@@ -204,6 +204,37 @@ class RedisStreamsSourceSpec extends AnyFunSuite {
     assert(second.size == 1, s"restart must deliver only the new entry, got $second")
   }
 
+  // watch always caps the source (buffers.source.size); a restarted capped
+  // query must plan from the checkpointed offset, not rescan from 0-0
+  Seq("simple", "delete").foreach { mode =>
+    test(s"capped source resumes from the checkpointed offset on restart ($mode)") {
+      val (url, mem) = freshMem()
+      val cp = ckpt()
+      val first = (1 to 5).map(i => mem.xadd("t", Seq("v" -> envelope(i))))
+      val seen = scala.collection.mutable.ArrayBuffer[String]()
+      def run(): Unit = {
+        val records = spark.readStream.format("graft-redis")
+          .option("url", url).option("streams", "t").option("acknowledge", mode)
+          .option("maxRecordsPerTrigger", "2").load()
+        val q = records.writeStream
+          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+            val rows = batch.select("id").collect().map(_.getString(0))
+            seen.synchronized { seen ++= rows }
+            ()
+          }
+          .option("checkpointLocation", cp)
+          .start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      run()
+      assert(seen.synchronized(seen.toSeq) == first.map(_.toString))
+      val added = mem.xadd("t", Seq("v" -> envelope(6)))
+      run()
+      assert(seen.synchronized(seen.toSeq).drop(5) == Seq(added.toString),
+        "restart must deliver exactly the new entry")
+    }
+  }
+
   test("integration: same pipeline against a real server (REDIS_URL gate)") {
     val url = sys.env.getOrElse("REDIS_URL", "")
     assume(url.startsWith("redis://"), "REDIS_URL not set; integration skipped")

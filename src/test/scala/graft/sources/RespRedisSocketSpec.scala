@@ -1,6 +1,8 @@
 package graft.sources
 
 import graft.TestSpark
+import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.spark.sql.connector.read.streaming.Offset
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Byte-level coverage of the RESP2 socket client ([[RespRedis]]) against
@@ -86,6 +88,140 @@ class RespRedisSocketSpec extends AnyFunSuite {
       assert(c.xack("s", "g", Seq.empty) == 0L) // client short-circuits
       assert(c.xdel("s", ids.take(1)) == 1L)
       assert(c.xlen("s") == 2L)
+    }
+  }
+
+  private def utf8(es: Seq[(RedisId, Array[Byte])]): Seq[(RedisId, String)] =
+    es.map { case (id, b) => id -> new String(b, UTF_8) }
+
+  test("reply walker: a body larger than the read buffer spans refills") {
+    withServer { (_, c) =>
+      val big = "é" * 70000 + "x" * 100000 // 240,000 bytes, > 64 KiB
+      val ids = Seq("small1", big, "small2").map(v => c.xadd("s", Seq("v" -> v)))
+      val all = c.xrange("s", RedisId.Zero, RedisId.Max, 10)
+      assert(all == ids.zip(Seq("small1", big, "small2")).map { case (id, v) => id -> Map("v" -> v) })
+      assert(utf8(c.xrangeEnvelopes("s", RedisId.Zero, RedisId.Max, 10)) ==
+        all.map { case (id, kv) => id -> kv("v") })
+      assert(c.xrangeIds("s", RedisId.Zero, RedisId.Max, 10) == ids)
+      assert(c.xlen("s") == 3L) // the reader is aligned on the next reply
+    }
+  }
+
+  test("reply walker: a multi-byte UTF-8 envelope comes back byte-identical") {
+    withServer { (_, c) =>
+      val envelope = """{"before":null,"after":{"name":"héllo→世界 🚀","crlf":"a\r\nb"}}"""
+      val id = c.xadd("s", Seq("key" -> """{"id":1}""", "value" -> envelope))
+      val Seq((gotId, bytes)) = c.xrangeEnvelopes("s", RedisId.Zero, RedisId.Max, 10)
+      assert(gotId == id)
+      assert(bytes.sameElements(envelope.getBytes(UTF_8)))
+    }
+  }
+
+  test("reply walker: xrangeIds equals the ids of xrange on the same range") {
+    withServer { (_, c) =>
+      val ids = (1 to 7).map(i => c.xadd("s", Seq("a" -> s"x$i", "b" -> ("y" * i))))
+      for ((after, end, count) <- Seq((RedisId.Zero, RedisId.Max, 100),
+          (ids(1), RedisId.Max, 100), (ids(0), ids(4), 100), (ids(2), RedisId.Max, 3)))
+        assert(c.xrangeIds("s", after, end, count) ==
+          c.xrange("s", after, end, count).map(_._1))
+    }
+  }
+
+  test("reply walker: an empty range") {
+    withServer { (_, c) =>
+      assert(c.xrangeIds("s", RedisId.Zero, RedisId.Max, 10).isEmpty)
+      assert(c.xrangeEnvelopes("s", RedisId.Zero, RedisId.Max, 10).isEmpty)
+      val id = c.xadd("s", Seq("v" -> "e"))
+      assert(c.xrange("s", id, RedisId.Max, 10).isEmpty)
+      assert(c.xrangeIds("s", id, RedisId.Max, 10).isEmpty)
+      assert(c.xrangeEnvelopes("s", id, RedisId.Max, 10).isEmpty)
+    }
+  }
+
+  test("reply walker: an -ERR reply raises RedisError and leaves the connection usable") {
+    withServer { (srv, c) =>
+      val ids = (1 to 3).map(i => c.xadd("s", Seq("v" -> s"e$i")))
+      val wrongType = "WRONGTYPE Operation against a key holding the wrong kind of value"
+      srv.failNext("XRANGE", wrongType)
+      val e1 = intercept[RespRedis.RedisError](c.xrangeEnvelopes("s", RedisId.Zero, RedisId.Max, 10))
+      assert(e1.getMessage == wrongType)
+      srv.failNext("XRANGE", "ERR boom")
+      intercept[RespRedis.RedisError](c.xrangeIds("s", RedisId.Zero, RedisId.Max, 10))
+      srv.failNext("XACK", "ERR boom")
+      intercept[RespRedis.RedisError](c.xack("s", "g", ids))
+      assert(c.xrangeIds("s", RedisId.Zero, RedisId.Max, 10) == ids)
+      assert(utf8(c.xrangeEnvelopes("s", RedisId.Zero, RedisId.Max, 10)).map(_._2) ==
+        Seq("e1", "e2", "e3"))
+    }
+  }
+
+  test("reply walker: compact and extended bodies, as the in-memory default reads them") {
+    withServer { (srv, c) =>
+      val bodies = Seq(
+        Seq("payload" -> "e1"), // compact: the only field, any name
+        Seq("key" -> """{"k":2}""", "value" -> "e2"), // extended
+        Seq("value" -> "e3", "key" -> """{"k":3}"""), // extended, value first
+        Seq("value" -> "e4"), // compact named value
+        Seq("key" -> "", "value" -> "", "op" -> "c")) // extended, empty envelope
+      val ids = bodies.map(b => c.xadd("s", b))
+      val want = ids.zip(Seq("e1", "e2", "e3", "e4", ""))
+      assert(utf8(c.xrangeEnvelopes("s", RedisId.Zero, RedisId.Max, 10)) == want)
+      assert(utf8(srv.mem.xrangeEnvelopes("s", RedisId.Zero, RedisId.Max, 10)) == want)
+
+      val bad = c.xadd("s", Seq("key" -> """{"k":6}""", "payload" -> "e6"))
+      c.xadd("s", Seq("v" -> "e7"))
+      for (conn <- Seq(c, srv.mem)) {
+        val e = intercept[IllegalStateException](
+          conn.xrangeEnvelopes("s", RedisId.Zero, RedisId.Max, 10))
+        assert(e.getMessage == s"extended-format entry $bad in s lacks a 'value' field")
+      }
+      assert(c.xlen("s") == 7L) // the failed reply was read to its end
+    }
+  }
+
+  test("capped epochs: commit() issues no XRANGE and acks exactly the committed ids") {
+    withServer { (srv, c) =>
+      val streams = Seq("a", "b")
+      val ids = streams.map(s => s -> (1 to 5).map(i => c.xadd(s, Seq("v" -> s"$s$i")))).toMap
+      val cfg = RedisStreamsConfig(srv.url, streams, "g", "", "simple", maxRecordsPerTrigger = 2)
+      def xranges[A](f: => A): (A, Long) = {
+        val before = srv.count("XRANGE")
+        val a = f
+        (a, srv.count("XRANGE") - before)
+      }
+      val source = new RedisStreamsStream(cfg)
+      def read(start: Offset, end: Offset): Seq[String] =
+        source.planInputPartitions(start, end).toSeq.flatMap { p =>
+          val r = source.createReaderFactory().createReader(p)
+          try Iterator.continually(r.next()).takeWhile(identity)
+            .map(_ => r.get().getUTF8String(2).toString).toList
+          finally r.close()
+        }
+      def acked: Map[String, Set[RedisId]] = streams.map(s => s -> srv.mem.ackedIds(s, "g")).toMap
+      try {
+        // Spark's order: plan epoch N, commit epoch N-1, run epoch N
+        val start = source.initialOffset()
+        val (end1, plan1) = xranges(source.latestOffset(start, source.getDefaultReadLimit))
+        assert(plan1 == 2L) // one XRANGE per stream
+        val (rows1, read1) = xranges(read(start, end1))
+        assert(rows1.sorted == Seq("a1", "a2", "b1", "b2") && read1 == 2L) // one per partition
+        val (end2, plan2) = xranges(source.latestOffset(end1, source.getDefaultReadLimit))
+        assert(plan2 == 2L)
+        assert(xranges(source.commit(end1))._2 == 0L)
+        assert(acked == ids.map { case (s, is) => s -> is.take(2).toSet })
+        val (rows2, read2) = xranges(read(end1, end2))
+        assert(rows2.sorted == Seq("a3", "a4", "b3", "b4") && read2 == 2L)
+        assert(xranges(source.commit(end2))._2 == 0L)
+        assert(acked == ids.map { case (s, is) => s -> is.take(4).toSet })
+      } finally source.stop()
+
+      // a restarted source has no planned ids: it pages the ids instead
+      val restarted = new RedisStreamsStream(cfg)
+      try {
+        val end = RedisOffset(ids.map { case (s, is) => s -> is(4) })
+        assert(xranges(restarted.commit(end))._2 == 2L)
+        assert(acked == ids.map { case (s, is) => s -> is.toSet })
+      } finally restarted.stop()
     }
   }
 

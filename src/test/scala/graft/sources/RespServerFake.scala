@@ -15,7 +15,9 @@ import java.nio.charset.StandardCharsets.UTF_8
   * always-on tests over a real TCP socket: request serialization, every
   * reply type it parses (+, -, :, $, *, nested arrays, null bulks), error
   * propagation (-BUSYGROUP swallow, -ERR raise), CRLF-bearing bulk
-  * payloads, and multi-connection behavior.
+  * payloads, and multi-connection behavior. It counts the commands it
+  * serves per name, and can fail the next command of a name with an error
+  * reply.
   *
   * Protocol per the public Redis serialization spec (RESP2). The dialect
   * is deliberately the CLIENT'S dialect: XRANGE start must be `-` or the
@@ -35,6 +37,20 @@ final class RespServerFake extends AutoCloseable {
   def url: String = s"redis://127.0.0.1:$port"
   /** Direct backend handle for spec assertions / seeding. */
   def mem: InMemoryRedis = backend
+
+  private val served =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
+  /** Commands served so far with this name (upper case), on every connection. */
+  def count(command: String): Long =
+    Option(served.get(command)).map(_.get()).getOrElse(0L)
+
+  private val injected =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The next `command` (upper case) gets the error reply `-<message>`
+    * instead of being served, as a server replies e.g. WRONGTYPE. */
+  def failNext(command: String, message: String): Unit = {
+    injected.put(command, message); ()
+  }
 
   private val acceptor = new Thread(() => {
     while (running) {
@@ -148,8 +164,18 @@ final class RespServerFake extends AutoCloseable {
     } finally sock.close()
   }
 
-  private def dispatch(cmd: Seq[String], out: OutputStream): Unit =
-    cmd.head.toUpperCase(java.util.Locale.ROOT) match {
+  private def dispatch(cmd: Seq[String], out: OutputStream): Unit = {
+    val name = cmd.head.toUpperCase(java.util.Locale.ROOT)
+    served.computeIfAbsent(name, _ => new java.util.concurrent.atomic.AtomicLong())
+      .incrementAndGet()
+    Option(injected.remove(name)) match {
+      case Some(message) => wError(out, message)
+      case None => execute(cmd, name, out)
+    }
+  }
+
+  private def execute(cmd: Seq[String], name: String, out: OutputStream): Unit =
+    name match {
       case "XGROUP" =>
         val Seq(_, sub, stream, group, from, rest @ _*) = cmd
         require(sub.equalsIgnoreCase("CREATE") &&

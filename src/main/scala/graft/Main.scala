@@ -67,10 +67,15 @@ object Main {
     *
     * Config knobs: `buffers.source.size` caps each source stream per
     * trigger, `buffers.dedupe.time` is the trigger interval, and
-    * `buffers.target.size` caps the ids of one output chunk.
+    * `buffers.target.size` caps the ids of one output chunk; both sizes
+    * must be positive.
     */
   private[graft] def watch(spark: SparkSession, args: Array[String]): StreamingQuery = {
     val cfg = CdcConfig.load(opt(args, "--config").getOrElse("./config.yaml"))
+    require(cfg.buffers.source.size > 0,
+      s"buffers.source.size must be positive, got ${cfg.buffers.source.size}")
+    require(cfg.buffers.target.size > 0,
+      s"buffers.target.size must be positive, got ${cfg.buffers.target.size}")
     val in = req(args, "--in")
     val ckpt = req(args, "--checkpoint")
     val records = opt(args, "--source").getOrElse("graft-cdc") match {

@@ -4,7 +4,7 @@ import java.util
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
@@ -20,15 +20,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * the reference's one stream per watched table, WatchStream.java:323).
   * Each line is one Debezium envelope.
   * Emitted schema = the engine's CDC record contract:
-  * `id STRING, table STRING, envelope STRING` with `id` a fixed-width
-  * zero-padded `<seq>-<line>` ([[CdcDirectorySource.recordId]]) mirroring
-  * Redis's `ms-seq` RecordId totally-ordered offsets; fixed width keeps
-  * string order == arrival order for downstream keep-first/chunk stages.
+  * `id STRING, table STRING, envelope STRING` with `id` a zero-padded
+  * `<seq>-<line>` ([[CdcDirectorySource.recordId]]) in Redis's `ms-seq`
+  * RecordId form, so keep-first orders it numerically like a Redis id; the
+  * fixed width only keeps the string sortable as well.
   *
   * Semantics carried over from the reference:
-  *   - S1 consumer-group attach ⇒ `initialOffset` (idempotent, starts at 0).
-  *   - S2 `XREADGROUP` batch ⇒ `latestOffset` caps each micro-batch at
-  *     `maxSegmentsPerTrigger` segments (`buffers.source.size` analogue).
+  *   - S1 consumer-group attach ⇒ `initialOffset` (idempotent, starts
+  *     before segment 0).
+  *   - S2 `XREADGROUP` batch ⇒ Spark's read limit: `latestOffset` plans each
+  *     micro-batch from the start offset Spark hands it, capped at
+  *     `maxSegmentsPerTrigger` segments (`buffers.source.size` analogue), so
+  *     a restarted query resumes from its checkpoint, exactly like
+  *     [[RedisStreamsSource]].
   *   - A5 `XACK` ⇒ `commit(offset)`: Spark calls it exactly when every sink
   *     of the epoch has written — the whole ref-counted countdown (F1,
   *     A1–A7) collapses into this one callback.
@@ -51,9 +55,13 @@ class CdcDirectorySource extends TableProvider with DataSourceRegister {
     // case-insensitive like everywhere else in DSv2 (callers write
     // `maxSegmentsPerTrigger`).
     val opts = new CaseInsensitiveStringMap(properties)
-    new CdcDirectoryTable(opts.get("path"),
-      Option(opts.get("acknowledge")).getOrElse("simple"),
-      Option(opts.get("maxSegmentsPerTrigger")).map(_.toInt).getOrElse(Int.MaxValue))
+    val path = opts.get("path")
+    require(path != null, "option 'path' is required")
+    val acknowledge = Option(opts.get("acknowledge")).getOrElse("simple")
+    val maxPerTrigger =
+      Option(opts.get("maxSegmentsPerTrigger")).map(_.toInt).getOrElse(Int.MaxValue)
+    new CdcTable(s"graft-cdc:$path",
+      () => new CdcDirectoryStream(path, acknowledge, maxPerTrigger))
   }
 }
 
@@ -78,31 +86,29 @@ object CdcDirectorySource {
     }.toSeq.sortBy(s => (s.seq, s.table))
   }
 
-  /** Record offset id: zero-padded `<seq>-<line>` so LEXICOGRAPHIC order ==
-    * numeric (seq, line) arrival order — downstream keep-first/chunk stages
-    * order by this string directly (a bare "10-3" < "9-1" would invert
-    * arrival order once seq passes one digit).
+  /** Record offset id: zero-padded `<seq>-<line>`. Keep-first parses it as
+    * an `ms-seq` id and orders it numerically; the fixed width makes plain
+    * string order agree with that (a bare "10-3" < "9-1" would not).
     */
   def recordId(seq: Long, line: Long): String = f"$seq%012d-$line%09d"
 
   case class SegmentFile(table: String, seq: Long, path: String)
 }
 
-private class CdcDirectoryTable(path: String, acknowledge: String,
-                                maxPerTrigger: Int)
+/** The one DSv2 table shell of both CDC sources: a micro-batch-only table
+  * over [[CdcDirectorySource.schema]] whose scan opens `stream()`.
+  */
+private[sources] class CdcTable(tableName: String, stream: () => MicroBatchStream)
     extends Table with SupportsRead {
-  require(path != null, "option 'path' is required")
-  override def name(): String = s"graft-cdc:$path"
+  override def name(): String = tableName
   override def schema(): StructType = CdcDirectorySource.schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan {
-        override def readSchema(): StructType = CdcDirectorySource.schema
-        override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new CdcDirectoryStream(path, acknowledge, maxPerTrigger)
-      }
+    new ScanBuilder with Scan {
+      override def build(): Scan = this
+      override def readSchema(): StructType = CdcDirectorySource.schema
+      override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = stream()
     }
 }
 
@@ -115,7 +121,8 @@ private case class SegOffset(n: Long) extends Offset {
 }
 
 private class CdcDirectoryStream(path: String, acknowledge: String,
-                                 maxPerTrigger: Int) extends MicroBatchStream {
+                                 maxPerTrigger: Int)
+    extends MicroBatchStream with SupportsAdmissionControl {
   import CdcDirectorySource._
 
   // S1: attach BEFORE the first possible segment — a `<table>.0.log` is
@@ -124,15 +131,23 @@ private class CdcDirectoryStream(path: String, acknowledge: String,
   override def initialOffset(): Offset = SegOffset(-1L)
   override def deserializeOffset(json: String): Offset = SegOffset(json.toLong)
 
-  // `latestOffset` must be monotone across calls; `lastEnd` remembers the
-  // highest end handed out (per run — the WAL re-seeds progress on restart,
-  // and a stale low end only yields one empty batch before catching up)
-  @volatile private var lastEnd = -1L
+  override def getDefaultReadLimit: ReadLimit =
+    if (maxPerTrigger == Int.MaxValue) ReadLimit.allAvailable()
+    else ReadLimit.maxFiles(maxPerTrigger)
 
-  override def latestOffset(): Offset = {
-    val visible = segments(path).map(_.seq).filter(_ > lastEnd).sorted
-    if (visible.nonEmpty) lastEnd = visible.take(maxPerTrigger).last
-    SegOffset(lastEnd)
+  override def latestOffset(): Offset = throw new UnsupportedOperationException(
+    "latestOffset(Offset, ReadLimit) should be called instead of this method")
+
+  /** The seq of the last of the first `cap` segments after `start`, or
+    * `start` if there are none. */
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
+    val from = start.asInstanceOf[SegOffset].n
+    val after = segments(path).map(_.seq).filter(_ > from)
+    val admitted = limit match {
+      case cap: ReadMaxFiles => after.take(cap.maxFiles)
+      case _ => after
+    }
+    SegOffset(admitted.lastOption.getOrElse(from))
   }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {

@@ -1,8 +1,9 @@
 package graft.sources
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import java.util
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl}
@@ -11,6 +12,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** DSv2 micro-batch source over Redis Streams — the production counterpart
   * of [[CdcDirectorySource]], implementing the reference's actual I/O plane
@@ -57,14 +59,15 @@ class RedisStreamsSource extends TableProvider with DataSourceRegister {
     val streams = Option(opts.get("streams")).map(_.split(",").map(_.trim).toSeq)
       .getOrElse(Seq.empty)
     require(streams.nonEmpty, "option 'streams' is required (comma-separated)")
-    new RedisStreamsTable(RedisStreamsConfig(
+    val cfg = RedisStreamsConfig(
       url = url,
       streams = streams,
       group = Option(opts.get("group")).getOrElse("graft"),
       prefix = Option(opts.get("prefix")).getOrElse(""),
       acknowledge = Option(opts.get("acknowledge")).getOrElse("simple"),
       maxRecordsPerTrigger =
-        Option(opts.get("maxRecordsPerTrigger")).map(_.toInt).getOrElse(Int.MaxValue)))
+        Option(opts.get("maxRecordsPerTrigger")).map(_.toInt).getOrElse(Int.MaxValue))
+    new CdcTable(s"graft-redis:$url", () => new RedisStreamsStream(cfg))
   }
 }
 
@@ -92,59 +95,20 @@ private[sources] case class RedisStreamsConfig(
     url: String, streams: Seq[String], group: String, prefix: String,
     acknowledge: String, maxRecordsPerTrigger: Int)
 
-private class RedisStreamsTable(cfg: RedisStreamsConfig)
-    extends Table with SupportsRead {
-  override def name(): String = s"graft-redis:${cfg.url}"
-  override def schema(): StructType = CdcDirectorySource.schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan {
-        override def readSchema(): StructType = CdcDirectorySource.schema
-        override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new RedisStreamsStream(cfg)
-      }
-    }
-}
-
 /** Per-stream high-water marks, JSON `{"<stream>":"<ms-seq>", ...}` with
   * keys sorted for a stable WAL representation.
   */
 private[sources] case class RedisOffset(ends: Map[String, RedisId]) extends Offset {
-  override def json(): String = ends.toSeq.sortBy(_._1).map { case (s, id) =>
-    "\"" + RedisOffset.esc(s) + "\":\"" + id + "\""
-  }.mkString("{", ",", "}")
+  override def json(): String = RedisOffset.mapper.writeValueAsString(
+    new util.TreeMap[String, String](ends.map { case (s, id) => s -> id.toString }.asJava))
 }
 
 private[sources] object RedisOffset {
-  def esc(s: String): String =
-    s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString }
+  private val mapper = new ObjectMapper()
 
-  /** Parse the json() form (flat string-to-string object). */
-  def parse(json: String): RedisOffset = {
-    val inner = json.trim.stripPrefix("{").stripSuffix("}")
-    if (inner.isEmpty) RedisOffset(Map.empty)
-    else {
-      // split on "," BETWEEN quoted tokens: scan, honoring backslash escapes
-      val pairs = scala.collection.mutable.ListBuffer[(String, String)]()
-      val cur = new StringBuilder
-      var tokens = Vector[String]()
-      var inStr = false
-      var i = 0
-      while (i < inner.length) {
-        val c = inner.charAt(i)
-        if (inStr) c match {
-          case '\\' => cur.append(inner.charAt(i + 1)); i += 1
-          case '"' => inStr = false; tokens :+= cur.toString; cur.clear()
-          case other => cur.append(other)
-        } else if (c == '"') inStr = true
-        i += 1
-      }
-      tokens.grouped(2).foreach { case Seq(k, v) => pairs += (k -> v); case _ => () }
-      RedisOffset(pairs.map { case (k, v) => k -> RedisId.parse(v) }.toMap)
-    }
-  }
+  def parse(json: String): RedisOffset = RedisOffset(
+    mapper.readValue(json, classOf[util.Map[String, String]]).asScala
+      .map { case (s, id) => s -> RedisId.parse(id) }.toMap)
 }
 
 private class RedisStreamsStream(cfg: RedisStreamsConfig)
@@ -206,10 +170,8 @@ private class RedisStreamsStream(cfg: RedisStreamsConfig)
     cfg.streams.flatMap { stream =>
       val from = s.getOrElse(stream, RedisId.Zero)
       val to = e.getOrElse(stream, RedisId.Zero)
-      if (to > from)
-        Some(RedisStreamPartition(cfg.url, stream, cfg.prefix, from.toString,
-          to.toString): InputPartition)
-      else None
+      Option.when(to > from)(
+        RedisStreamPartition(cfg.url, stream, cfg.prefix, from, to): InputPartition)
     }.toArray
   }
 
@@ -256,8 +218,8 @@ private class RedisStreamsStream(cfg: RedisStreamsConfig)
 }
 
 private case class RedisStreamPartition(url: String, stream: String,
-                                        prefix: String, fromExclusive: String,
-                                        toInclusive: String)
+                                        prefix: String, fromExclusive: RedisId,
+                                        toInclusive: RedisId)
   extends InputPartition
 
 /** Executor-side range reader: pages through (from, to] with COUNT-bounded
@@ -271,9 +233,8 @@ private class RedisPartitionReader(p: RedisStreamPartition)
   private val table = UTF8String.fromString(
     if (p.prefix.nonEmpty && p.stream.startsWith(p.prefix)) p.stream.stripPrefix(p.prefix)
     else p.stream)
-  private val to = RedisId.parse(p.toInclusive)
-  private val entries = RedisStreamsSource.pages(RedisId.parse(p.fromExclusive), to)(
-    conn.xrangeEnvelopes(p.stream, _, to, RedisStreamsSource.ReadCount))(_._1).flatten
+  private val entries = RedisStreamsSource.pages(p.fromExclusive, p.toInclusive)(
+    conn.xrangeEnvelopes(p.stream, _, p.toInclusive, RedisStreamsSource.ReadCount))(_._1).flatten
   private var current: (RedisId, Array[Byte]) = _
 
   override def next(): Boolean = entries.hasNext && { current = entries.next(); true }

@@ -11,8 +11,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Semantics mapping (SURVEY §7):
   *   - count-or-time dedupe window (bufferTimeout(100k, 5s)) → micro-batch =
   *     `Trigger.ProcessingTime(windowMillis)` for the time arm; the count arm
-  *     is enforced at the SOURCE (`maxOffsetsPerTrigger` / `maxFilesPerTrigger`
-  *     on the reader), which is where Spark bounds batch size.
+  *     is enforced at the SOURCE as Spark's read limit (`maxRecordsPerTrigger`
+  *     on `graft-redis`, `maxSegmentsPerTrigger` on `graft-cdc`,
+  *     `maxFilesPerTrigger` on the json file source), which is where Spark
+  *     bounds batch size.
   *   - dedupe state RESETS per flush in the reference (ids re-emit in later
   *     windows — its tests assert this); per-micro-batch `foreachBatch` +
   *     batch-local dedupe reproduces exactly that. Cross-window dedupe is a

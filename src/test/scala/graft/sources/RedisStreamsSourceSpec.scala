@@ -46,6 +46,10 @@ class RedisStreamsSourceSpec extends AnyFunSuite {
       """we"ird\name""" -> RedisId(1, 0)))
     assert(RedisOffset.parse(o.json()) == o)
     assert(RedisOffset.parse("{}") == RedisOffset(Map.empty))
+    // the WAL form is fixed: checkpointed offsets must keep resuming
+    val wal = """{"m2.m2.catalog_product_entity":"12-3","we\"ird\\name":"1-0"}"""
+    assert(o.json() == wal)
+    assert(RedisOffset.parse(wal) == o)
   }
 
   test("reads incrementally; CDC plane runs on top; delete-mode commit XDELs") {

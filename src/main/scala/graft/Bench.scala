@@ -1,5 +1,4 @@
 package graft
-import graft.cdc.Route
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 object Bench {
@@ -91,75 +90,38 @@ object Bench {
   // spread_retime_skipped) but the run still EMITS.
   private val RetimeCap = 8
 
-  /** Streaming-plane throughput: events staged as segment-log files, consumed
-    * through the DSv2 source in `nBatches` micro-batches running the full
-    * parse→route→dedupe→batch plane per epoch. Measures the stream from
-    * start to drain (setup/staging excluded).
+  /** Streaming-plane throughput: the events staged as `watch`'s default
+    * source reads them ([[SparkEntry.stageCdcSegments]]), drained through
+    * `Main.watch` at [[SparkEntry.demoWatchConfig]] in 4 epochs. Measures
+    * the stream from start to drain (setup/staging excluded).
     */
-  private def streamingThroughput(spark: SparkSession, sfDir: String,
-                                  stateProvider: Option[String] = None): Double = {
-    import java.nio.file.{Files, Paths}
-    val segDir = Files.createTempDirectory("graft-bench-segs").toString
-    val nSegments = 32
-    val ev = Tables(spark, sfDir, "events")
-    val nEvents = ev.count()
-    ev.select(concat(
-        col("event_type"), lit("\u0001"),
-        lit("{\"before\": null, \"after\": "), col("props"), lit("}")).as("value"))
-      .repartition(nSegments)
-      .write.mode("overwrite").text(segDir + "/raw")
-    // one segment per part file; seq from file order. All segments share one
-    // logical "table" per line prefix, so the reader's table column comes
-    // from the line itself — reuse the envelope column and split in-stream.
-    val parts = new java.io.File(segDir + "/raw").listFiles()
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    parts.zipWithIndex.foreach { case (f, i) =>
-      Files.move(f.toPath, Paths.get(segDir, s"events.${i + 1}.log"))
-    }
-    val routes = Seq(
-      Route("click", "k", "t_all"), Route("click", "k", "t_click"),
-      Route("purchase", "k", "t_all"), Route("purchase", "k", "t_purchase"),
-      Route("signup", "k", "t_signup"),
-      Route("view", "k", "t_all"), Route("view", "k", "t_view"))
-    val records = spark.readStream.format("graft-cdc")
-      .option("path", segDir)
-      .option("maxSegmentsPerTrigger", nSegments / 4) // 4 micro-batches
-      .load()
-      // line = "<type>\\u0001<envelope>": recover the real route key
-      .select(col("id"),
-        split(col("envelope"), "\u0001").getItem(0).as("table"),
-        split(col("envelope"), "\u0001").getItem(1).as("envelope"))
-    // simple-mode source leaves segments in place, so the staged stream can
-    // be consumed repeatedly (fresh checkpoint per run): run 1 warms
+  private def streamingThroughput(spark: SparkSession, sfDir: String): Double = {
+    val segDir = java.nio.file.Files.createTempDirectory("graft-bench-segs").toString
+    val (nEvents, segments) = SparkEntry.stageCdcSegments(spark, sfDir, segDir)
+    val config = SparkEntry.demoWatchConfig(segments)
+    // the simple-mode source leaves segments in place, so the staged stream
+    // can be drained repeatedly (fresh checkpoint per run): run 1 warms
     // codegen/JIT for the per-epoch plan (measured 2.5x on the first
     // micro-batch), later runs are steady state — the same warmup
     // methodology as the batch queries in main().
-    def runOnce(): Double = {
-      val runCkpt = Files.createTempDirectory("graft-bench-ckpt").toString
-      val t0 = System.nanoTime()
-      val q = graft.streaming.CdcStream.startWith(records, routes,
-          maxBatch = 1000, runCkpt, windowMillis = 50L) { (batch: DataFrame, _: Long) =>
-        batch.write.format("noop").mode("overwrite").save()
-      }
-      try q.processAllAvailable() finally q.stop()
-      (System.nanoTime() - t0) / 1e9
-    }
-    // state provider is read at query start from the session conf, so a
-    // per-measurement override (HDFS-heap vs RocksDB) is just a conf flip
-    val confKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(confKey)
-    stateProvider.foreach(spark.conf.set(confKey, _))
-    try {
-      runOnce() // warmup
-      nEvents / (1 to StreamTimedRuns).map(_ => runOnce()).min
-    } finally {
-      stateProvider.foreach { _ =>
-        prev match {
-          case Some(v) => spark.conf.set(confKey, v)
-          case None => spark.conf.unset(confKey)
-        }
-      }
-    }
+    drainWatch(spark, segDir, config) // warmup
+    nEvents / (1 to StreamTimedRuns).map(_ => drainWatch(spark, segDir, config)).min
+  }
+
+  /** One `Main.watch` run of `config` over the segment directory `segDir`,
+    * drained to the end: graft-cdc source, XADD sink into a fresh in-memory
+    * target (`mem://`) dropped afterwards. Returns the wall seconds from
+    * start to stop.
+    */
+  private[graft] def drainWatch(spark: SparkSession, segDir: String, config: String): Double = {
+    val target = s"graft-drain-${java.util.UUID.randomUUID()}"
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-bench-ckpt").toString
+    val t0 = System.nanoTime()
+    val q = Main.watch(spark, Array("watch", "--config", config, "--in", segDir,
+      "--checkpoint", ckpt, "--sink", "redis", "--target-url", s"mem://$target"))
+    try q.processAllAvailable()
+    finally { q.stop(); graft.sources.InMemoryRedis.reset(target) }
+    (System.nanoTime() - t0) / 1e9
   }
 
   /** Fixed synthetic CPU probe — a deterministic hash-reduce over a range,
@@ -688,8 +650,7 @@ object Bench {
         println(s"""{"metric":"total","value":${r4(rs.map(_.med).sum)},""" +
           s""""unit":"sec","partial":true,"n_queries":${rs.size},""" +
           s""""queries":${headlineJson(rs)},""" +
-          s""""cdc_events_per_sec":0,"stream_events_per_sec":0,""" +
-          s""""stream_events_per_sec_rocksdb":0,"sf":"$sfDir"}""")
+          s""""cdc_events_per_sec":0,"stream_events_per_sec":0,"sf":"$sfDir"}""")
         System.out.flush()
       }
     }))
@@ -904,16 +865,6 @@ object Bench {
     catch { case e: Throwable =>
       System.err.println(s"[bench] streaming throughput failed: ${e.getMessage}"); 0.0
     }
-    // same plane under RocksDB keyed state — the 100 TB default provider
-    // (bounded off-heap state); reported side by side with the in-heap
-    // number so a provider-induced regression is visible per round
-    val streamRateRocksDb =
-      if (!runPlanes) 0.0
-      else try streamingThroughput(spark, sfDir, Some(GraftSession.RocksDbProvider))
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] rocksdb streaming throughput failed: " +
-          e.getMessage); 0.0
-      }
     val streamProbeAfter = calibrationProbe(spark)
     // standalone adjudication (round 15): an ACCEPTED regression — a
     // reproduced committed-arm violation on a steal-clean window — used to
@@ -1041,7 +992,6 @@ object Bench {
       s"""{$shardFields"queries":$full,$context,""" +
       s""""cdc_events_per_sec":${throughput.round},""" +
       s""""stream_events_per_sec":${streamRate.round},""" +
-      s""""stream_events_per_sec_rocksdb":${streamRateRocksDb.round},""" +
       s""""sf":"$sfDir"}""" + "\n"
     try {
       val dir = java.nio.file.Paths.get("target")
@@ -1070,7 +1020,6 @@ object Bench {
       s"""$shardFields"queries":$qs,"n_queries":${results.size},$context,""" +
       s""""cdc_events_per_sec":${throughput.round},""" +
       s""""stream_events_per_sec":${streamRate.round},""" +
-      s""""stream_events_per_sec_rocksdb":${streamRateRocksDb.round},""" +
       s""""sf":"$sfDir"}""")
   }
 }

@@ -2,24 +2,23 @@ package graft
 
 import graft.cdc.{CdcConfig, DebeziumConfigGen}
 import graft.streaming.{CdcStream, RedisStreamsSink}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types._
 
 /** CLI — the engine's equivalent of the reference's Spring Shell commands
   * (Application.java + WatchStream.watch + DebeziumConfiguration.generate):
   *
   *   watch    --config <cfg> --in <dir-or-url> [--out <parquet-dir>]
-  *            --checkpoint <dir> [--once] [--source graft-cdc|json|redis]
+  *            --checkpoint <dir> [--once] [--source graft-cdc|redis]
   *            [--sink parquet|redis] [--target-url <url>]
   *            runs the streaming CDC plane. Sources are pluggable on the
   *            shared `id, table, envelope` contract: the segment-directory
-  *            source (CI default), a plain json file source, or the Redis
-  *            Streams connector (`--source redis`, production parity with
-  *            the reference's XREADGROUP/XACK/XDEL plane). Sinks: per-epoch
-  *            parquet (default, needs --out) or the reference's XADD output
-  *            plane (`--sink redis`, RedisStreamsSink, WatchStream.java
-  *            :261-295).
+  *            source (default) or the Redis Streams connector
+  *            (`--source redis`, XRANGE reads acked on epoch commit). Sinks:
+  *            per-epoch parquet (default, needs --out) or the reference's
+  *            XADD output plane (`--sink redis`, RedisStreamsSink,
+  *            WatchStream.java:261-295).
   *   watch    --ingest-gate --in <docs-dir> --checkpoint <dir>
   *            --corpus-table <t> --index-table <t> --map-table <t>
   *            [--format json|parquet] [--gate-threshold 0.8]
@@ -88,14 +87,6 @@ object Main {
           .option("maxSegmentsPerTrigger",
             math.max(1, cfg.buffers.source.size / 1000))
           .load()
-      case "json" =>
-        val schema = StructType(Seq(
-          StructField("id", LongType), StructField("table", StringType),
-          StructField("envelope", StringType)))
-        spark.readStream.schema(schema)
-          // count arm of the reference's count-or-time source buffer
-          .option("maxFilesPerTrigger", math.max(1, cfg.buffers.source.size / 1000))
-          .json(in)
       case "redis" =>
         // the reference's actual I/O plane: one stream per watched table
         // named <source.prefix><table> (WatchStream.java:323), consumer
@@ -112,27 +103,26 @@ object Main {
           .option("maxRecordsPerTrigger", cfg.buffers.source.size)
           .load()
       case other =>
-        throw new IllegalArgumentException(s"unknown --source $other (graft-cdc|json|redis)")
+        throw new IllegalArgumentException(s"unknown --source $other (graft-cdc|redis)")
     }
-    opt(args, "--sink").getOrElse("parquet") match {
+    val writer: (DataFrame, Long) => Unit = opt(args, "--sink").getOrElse("parquet") match {
       case "parquet" =>
-        CdcStream.start(records, cfg.routes, cfg.buffers.target.size,
-          req(args, "--out"), ckpt, windowMillis = cfg.buffers.dedupe.time)
+        val out = req(args, "--out")
+        (batch, epoch) => batch.withColumn("epoch", lit(epoch)).write.mode("append").parquet(out)
       case "redis" =>
         // the reference's actual output plane: XADD id-array entries to
         // <target.prefix><target> with startup priming (WatchStream
         // .java:261-295). --target-url overrides the config's target.
-        val turl = opt(args, "--target-url").getOrElse(
-          s"redis://${cfg.target.connection.host}:${cfg.target.connection.port}")
+        val t = cfg.target.connection
+        val turl = opt(args, "--target-url").getOrElse(s"redis://${t.host}:${t.port}/${t.db}")
         RedisStreamsSink.prime(turl, cfg.target.prefix,
           cfg.routes.map(_.target).distinct)
-        CdcStream.startWith(records, cfg.routes,
-          cfg.buffers.target.size, ckpt,
-          windowMillis = cfg.buffers.dedupe.time)(
-          RedisStreamsSink.writer(turl, cfg.target.prefix))
+        RedisStreamsSink.writer(turl, cfg.target.prefix)
       case other =>
         throw new IllegalArgumentException(s"unknown --sink $other (parquet|redis)")
     }
+    CdcStream.startWith(records, cfg.routes, cfg.buffers.target.size, ckpt,
+      windowMillis = cfg.buffers.dedupe.time)(writer)
   }
 
   private def opt(args: Array[String], name: String): Option[String] = {

@@ -151,6 +151,62 @@ object SparkEntry {
       concat(lit("{\"before\": null, \"after\": "), col("props"), lit("}"))
         .as("envelope"))
 
+  /** Stages the events table as `watch`'s default source (`graft-cdc`)
+    * reads it: `<event_type>.<seq>.log` segments under `out`, one per
+    * (staging task, event type), seqs 1..n, each line a [[cdcRecords]]
+    * envelope. `reps` > 1 stages every event `reps` times with its numeric
+    * `k` re-keyed k → k*reps + r (injective for any reps; a digit append
+    * would collide past r = 9), so each replica keeps the base's duplicate
+    * structure and dedupe holds reps× the keys; `reps` = 1 passes the events
+    * through unchanged. Returns (events staged, segments).
+    */
+  def stageCdcSegments(s: SparkSession, dir: String, out: String,
+                       reps: Int = 1): (Long, Int) = {
+    import java.nio.file.{Files, Paths}
+    val recs = cdcRecords(s, dir)
+    val lines =
+      if (reps == 1) recs
+      else {
+        val k = regexp_extract(col("envelope"), """"k":\s*(\d+)""", 1).try_cast("long")
+        recs.select(col("table"), col("envelope"),
+            explode(sequence(lit(0), lit(reps - 1))).as("r"))
+          .select(col("table"), when(k.isNull, col("envelope")).otherwise(
+            regexp_replace(col("envelope"), lit(""""k":\s*\d+"""),
+              concat(lit("\"k\": "), (k * reps + col("r")).cast("string")))).as("envelope"))
+      }
+    val raw = s"$out/raw"
+    lines.select(col("table"), col("envelope").as("value")).repartition(8)
+      .write.partitionBy("table").text(raw)
+    val parts = for {
+      tableDir <- new java.io.File(raw).listFiles().toSeq if tableDir.isDirectory
+      f <- tableDir.listFiles().toSeq if f.getName.startsWith("part-")
+    } yield (f.getName, tableDir.getName.stripPrefix("table="), f)
+    parts.sortBy(p => (p._1, p._2)).zipWithIndex.foreach { case ((_, table, f), i) =>
+      Files.move(f.toPath, Paths.get(out, s"$table.${i + 1}.log"))
+    }
+    (t(s, dir, "events").count() * reps, parts.size)
+  }
+
+  /** `watch`'s config for the demo topology over `segments` staged segments,
+    * written as JSON to a fresh temp file whose path it returns: the
+    * [[demoRouteRows]] mapping, a 50 ms trigger (`buffers.dedupe.time`),
+    * ⌈segments / 4⌉ segments per trigger (`buffers.source.size`, 1000 per
+    * segment) so the events arrive in 4 epochs, and ≤ 1000 ids per chunk.
+    */
+  def demoWatchConfig(segments: Int): String = {
+    import graft.cdc.{Buffer, Buffers, CdcConfig}
+    val cfg = CdcConfig(
+      buffers = Buffers(source = Buffer(1000 * ((segments + 3) / 4), 1000),
+        dedupe = Buffer(100000, 50), target = Buffer(1000, 1000)),
+      mapping = demoRouteRows.groupMap(_._1)(r => (r._2, r._3))
+        .map { case (table, cols) => table -> cols.groupMap(_._1)(_._2) })
+    val f = java.nio.file.Files.createTempFile("graft-demo-watch", ".json")
+    new com.fasterxml.jackson.databind.ObjectMapper()
+      .registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
+      .writeValue(f.toFile, cfg)
+    f.toString
+  }
+
   private def routed(s: SparkSession, dir: String): DataFrame =
     CdcPipeline.parseAndRoute(cdcRecords(s, dir), demoRoutes(s))
       .withColumn("entity_id", col("entity_id").cast("long"))

@@ -52,12 +52,6 @@ final case class CdcConfig(
       (column, targets) <- cols.toSeq.sortBy(_._1)
       target <- targets
     } yield Route(table, column, target)
-
-  /** Fan-out degree per table = Σ |targets| over its columns — the reference's
-    * ack countdown initial value (WatchStream.java:338-344).
-    */
-  def fanoutDegree: Map[String, Int] =
-    mapping.map { case (t, cols) => t -> cols.valuesIterator.map(_.size).sum }
 }
 
 final case class Route(table: String, column: String, target: String)

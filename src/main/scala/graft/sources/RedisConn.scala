@@ -106,18 +106,25 @@ object RedisConn {
     new IllegalStateException(s"extended-format entry $id in $stream lacks a 'value' field")
 
   /** `mem://<name>` → shared JVM-local fake (CI; one instance per name);
-    * `redis://host[:port]` → RESP2 socket client (production/integration).
+    * `redis://host[:port][/db]` → RESP2 socket client (production/integration)
+    * on database `db` (default 0).
     */
   def open(url: String): RedisConn = url match {
     case s if s.startsWith("mem://") => InMemoryRedis.named(s.stripPrefix("mem://"))
     case s if s.startsWith("redis://") =>
-      val hp = s.stripPrefix("redis://")
-      val (host, port) = hp.split(":") match {
-        case Array(h, p) => (h, p.toInt)
-        case Array(h) => (h, 6379)
-        case _ => throw new IllegalArgumentException(s"bad redis url: $url")
+      def bad = new IllegalArgumentException(s"bad redis url: $url")
+      val (hp, db) = s.stripPrefix("redis://").split("/", -1) match {
+        case Array(hp) => (hp, 0)
+        case Array(hp, "") => (hp, 0)
+        case Array(hp, db) => (hp, db.toIntOption.getOrElse(throw bad))
+        case _ => throw bad
       }
-      new RespRedis(host, port)
+      val (host, port) = hp.split(":") match {
+        case Array(h, p) => (h, p.toIntOption.getOrElse(throw bad))
+        case Array(h) => (h, 6379)
+        case _ => throw bad
+      }
+      new RespRedis(host, port, db)
     case _ => throw new IllegalArgumentException(
       s"unsupported redis url (want mem:// or redis://): $url")
   }
@@ -208,9 +215,10 @@ object InMemoryRedis {
   * are read through one [[RespReader]]: range replies are walked in place,
   * so an entry's id is parsed from the wire bytes, [[xrangeEnvelopes]]
   * copies out only the envelope and [[xrangeIds]] copies out no body byte.
-  * Protocol per the public Redis serialization spec.
+  * Database `db` is SELECTed on connect when it is not 0, the server's
+  * default. Protocol per the public Redis serialization spec.
   */
-final class RespRedis(host: String, port: Int) extends RedisConn {
+final class RespRedis(host: String, port: Int, db: Int = 0) extends RedisConn {
   private val socket = new Socket(host, port)
   socket.setTcpNoDelay(true)
   private val in = new RespReader(socket.getInputStream)
@@ -228,6 +236,9 @@ final class RespRedis(host: String, port: Int) extends RedisConn {
   }
 
   private def call(args: String*): Any = send(args)(_.reply())
+
+  if (db != 0)
+    try call("SELECT", db.toString) catch { case e: Throwable => socket.close(); throw e }
 
   private def xrangeArgs(stream: String, afterExclusive: RedisId, endInclusive: RedisId,
                          count: Int): Seq[String] =

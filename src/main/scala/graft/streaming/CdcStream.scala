@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.cdc.{CdcPipeline, Route}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Structured Streaming form of the CDC plane — the engine's equivalent of
@@ -12,9 +11,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *   - count-or-time dedupe window (bufferTimeout(100k, 5s)) → micro-batch =
   *     `Trigger.ProcessingTime(windowMillis)` for the time arm; the count arm
   *     is enforced at the SOURCE as Spark's read limit (`maxRecordsPerTrigger`
-  *     on `graft-redis`, `maxSegmentsPerTrigger` on `graft-cdc`,
-  *     `maxFilesPerTrigger` on the json file source), which is where Spark
-  *     bounds batch size.
+  *     on `graft-redis`, `maxSegmentsPerTrigger` on `graft-cdc`), which is
+  *     where Spark bounds batch size.
   *   - dedupe state RESETS per flush in the reference (ids re-emit in later
   *     windows — its tests assert this); per-micro-batch `foreachBatch` +
   *     batch-local dedupe reproduces exactly that. Cross-window dedupe is a
@@ -27,8 +25,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * Input contract: a STREAMING DataFrame with `id`, `table`, `envelope` —
   * from any source (Kafka, file, socket, a custom Redis-stream DSv2
-  * connector); tests use MemoryStream. Output: per-epoch parquet (or any
-  * writer the caller supplies) of (target, chunk_no, ids, n_ids, epoch).
+  * connector); tests use MemoryStream. Output: the batched chunks
+  * (target, chunk_no, ids, n_ids) of each epoch, handed to the caller's
+  * writer (`Main.watch`: per-epoch parquet or XADD).
   *
   * Epoch plan: the route edges (`CdcConfig.routes`, on the driver) are
   * compiled into the fan-out expression, so an epoch runs no job for them.
@@ -41,19 +40,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object CdcStream {
 
-  /** Start the pipeline with the default parquet sink. */
-  def start(records: DataFrame, edges: Seq[Route], maxBatch: Int,
-            outDir: String, checkpointDir: String,
-            windowMillis: Long = 5000L): StreamingQuery =
-    startWith(records, edges, maxBatch, checkpointDir, windowMillis) {
-      (batch, epoch) =>
-        batch.withColumn("epoch", lit(epoch))
-          .write.mode("append").parquet(outDir)
-    }
-
-  /** Start with a caller-supplied epoch writer (e.g. a Redis XADD writer in
-    * production, memory sink in tests). The writer receives the BATCHED
-    * output (target, chunk_no, ids, n_ids) for one epoch.
+  /** Start the plane with a caller-supplied epoch writer: `Main.watch`'s
+    * parquet or Redis XADD writer, a collecting writer in tests. The writer
+    * receives the BATCHED output (target, chunk_no, ids, n_ids) for one
+    * epoch.
     */
   def startWith(records: DataFrame, edges: Seq[Route], maxBatch: Int,
                 checkpointDir: String, windowMillis: Long)(

@@ -97,7 +97,7 @@ object PromoteShards {
       objectSpan(base, "shard_promotions")
         .map { case (s, e) => entries(base.substring(s, e)) }
         .getOrElse(Seq.empty): _*)
-    var planes: Option[(Long, Long, Long)] = None
+    var planes: Option[(Long, Long)] = None
 
     // GRAFT_PROMOTE_PER_QUERY=1: promote INDIVIDUAL clean queries out of a
     // refused shard. The shard-level refusal exists because one dirty entry
@@ -172,8 +172,6 @@ object PromoteShards {
           if (promotable && cdc.exists(_ > 0))
             planes = Some((cdc.get,
               field(ctx, "stream_events_per_sec").map(_.toDouble.toLong)
-                .getOrElse(0L),
-              field(ctx, "stream_events_per_sec_rocksdb").map(_.toDouble.toLong)
                 .getOrElse(0L)))
           println(s"PROMOTE[$mode] $f: ${es.size}/${allEs.size} queries " +
             s"(run steal_sec=${field(ctx, "steal_sec").getOrElse("?")})")
@@ -196,14 +194,12 @@ object PromoteShards {
         base.substring(0, e2) + s""","shard_promotions":$promoObj""" +
           base.substring(e2)
     }
-    planes.foreach { case (c, st, ro) =>
+    planes.foreach { case (c, st) =>
       base = base
         .replaceAll(""""cdc_events_per_sec":\d+""",
           s""""cdc_events_per_sec":$c""")
         .replaceAll(""""stream_events_per_sec":\d+""",
           s""""stream_events_per_sec":$st""")
-        .replaceAll(""""stream_events_per_sec_rocksdb":\d+""",
-          s""""stream_events_per_sec_rocksdb":$ro""")
     }
     // stamp the merge at top level: after a merge the RUN-LEVEL gate
     // fields (steal_sec, spread_*, probes_quiet, calibration_*,

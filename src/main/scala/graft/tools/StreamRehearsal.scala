@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft._
-import graft.cdc.Route
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,13 +11,11 @@ import org.apache.spark.sql.functions._
   * grows 10x. Two planes, each at 1x and `reps`x, RocksDB state store (the
   * 100 TB default):
   *
-  *  1. the CDC plane (`CdcStream`: parse -> route -> watermarked keep-first
-  *     dedupe -> count-or-time batch) over `reps`x the staged events. Event
-  *     keys are re-keyed injectively (k -> k*reps + r) so every replica
-  *     keeps the base's within-replica duplicate structure and the dedupe
-  *     state must hold reps x the keys — exactly the axis that breaks a
-  *     state store sized to 1x. Recorded: events/s plus the final epoch's
-  *     state-operator rows/memory from the progress feed.
+  *  1. the CDC plane as `Main.watch` runs it ([[Bench.drainWatch]]) over
+  *     `reps`x the events, staged by [[SparkEntry.stageCdcSegments]] with
+  *     injectively re-keyed keys (k -> k*reps + r), so every replica keeps
+  *     the base's duplicate structure and each epoch's dedupe holds reps x
+  *     the keys. Recorded: events/s.
   *
   *  2. the ingest near-dup gate (`StreamingIngestGate` over the minhash
   *     banding index) fed `reps`x the documents in multiple epochs via
@@ -31,92 +28,6 @@ import org.apache.spark.sql.functions._
   * micro-benchmarks, same policy as ScaleRehearsal.
   */
 object StreamRehearsal {
-
-  /** Stage the events table as `nSegments` segment logs under a fresh dir,
-    * replicated `reps`x with injectively re-keyed entity ids (numeric k ->
-    * k*reps + r keeps per-replica dup structure identical to base).
-    */
-  private def stageSegments(spark: SparkSession, sfDir: String, reps: Int,
-                            nSegments: Int): (String, Long) = {
-    import java.nio.file.{Files, Paths}
-    val segDir = Files.createTempDirectory(s"graft-srehearse-${reps}x").toString
-    val ev = Tables(spark, sfDir, "events")
-    val rep = explode(sequence(lit(0), lit(reps - 1))).as("r")
-    // props is the CDC "after" payload; its numeric "k" field is the
-    // route/dedupe key — re-key k -> k*reps + r IN PLACE (injective for any
-    // reps; a bare digit-append would collide past r=9), JSON shape
-    // untouched so the parse stage sees production-identical envelopes.
-    // reps=1 passes through byte-identical to Bench's staging, keeping the
-    // base leg comparable to the committed anchors.
-    val kNum = regexp_extract(col("props"), """"k":\s*(\d+)""", 1)
-      .try_cast("long")
-    val rekeyed =
-      if (reps == 1) ev.select(col("event_type"), col("props"))
-      else ev.select(col("event_type"), col("props"), rep)
-        .select(col("event_type"),
-          when(kNum.isNull, col("props")).otherwise(
-            regexp_replace(col("props"), lit(""""k":\s*\d+"""),
-              concat(lit("\"k\": "),
-                (kNum * reps + col("r")).cast("string")))).as("props"))
-    val n = rekeyed.count()
-    rekeyed.select(concat(col("event_type"), lit("\u0001"),
-        lit("{\"before\": null, \"after\": "), col("props"), lit("}")).as("value"))
-      .repartition(nSegments)
-      .write.mode("overwrite").text(segDir + "/raw")
-    val parts = new java.io.File(segDir + "/raw").listFiles()
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    parts.zipWithIndex.foreach { case (f, i) =>
-      Files.move(f.toPath, Paths.get(segDir, s"events.${i + 1}.log"))
-    }
-    (segDir, n)
-  }
-
-  /** One full CDC-plane replay; returns (wallSec, stateRowsMax,
-    * stateMemoryBytesMax) where the state figures are the max across the
-    * run's progress records (the high-water mark is the sizing question).
-    */
-  private def replayCdc(spark: SparkSession, segDir: String,
-                        nSegments: Int): (Double, Long, Long) = {
-    val routes = Seq(
-      Route("click", "k", "t_all"), Route("click", "k", "t_click"),
-      Route("purchase", "k", "t_all"), Route("purchase", "k", "t_purchase"),
-      Route("signup", "k", "t_signup"),
-      Route("view", "k", "t_all"), Route("view", "k", "t_view"))
-    val records = spark.readStream.format("graft-cdc")
-      .option("path", segDir)
-      .option("maxSegmentsPerTrigger", nSegments / 4)
-      .load()
-      .select(col("id"),
-        split(col("envelope"), "\u0001").getItem(0).as("table"),
-        split(col("envelope"), "\u0001").getItem(1).as("envelope"))
-    val runCkpt = java.nio.file.Files
-      .createTempDirectory("graft-srehearse-ckpt").toString
-    val t0 = System.nanoTime()
-    val q = graft.streaming.CdcStream.startWith(records, routes,
-        maxBatch = 1000, runCkpt, windowMillis = 50L) { (b: DataFrame, _: Long) =>
-      b.write.format("noop").mode("overwrite").save()
-    }
-    try {
-      q.processAllAvailable()
-      val wall = (System.nanoTime() - t0) / 1e9
-      // progress events land on the listener bus asynchronously — give the
-      // final batch's record a beat before reading the high-water marks
-      Thread.sleep(500)
-      val states = q.recentProgress.flatMap(_.stateOperators)
-      val rows = if (states.isEmpty) -1L else states.map(_.numRowsTotal).max
-      val mem = if (states.isEmpty) -1L else states.map(_.memoryUsedBytes).max
-      (wall, rows, mem)
-    } finally q.stop()
-  }
-
-  /** Best-of-2 CDC replays (same policy as Bench's streaming anchor — a
-    * single replay carries multi-second machine noise); state marks from
-    * the better run.
-    */
-  private def replayCdcBest(spark: SparkSession, segDir: String,
-                            nSegments: Int): (Double, Long, Long) =
-    Seq(replayCdc(spark, segDir, nSegments),
-      replayCdc(spark, segDir, nSegments)).minBy(_._1)
 
   /** One ingest-gate replay over a staged documents dir consumed in
     * multiple epochs; returns (wallSec, docsAccepted, indexRows).
@@ -213,17 +124,22 @@ object StreamRehearsal {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // --- CDC plane at 1x and reps x ---
-    val nSegments = 32
-    val (seg1, n1) = stageSegments(spark, base, 1, nSegments)
-    val (segN, nN) = stageSegments(spark, base, reps, nSegments)
-    replayCdc(spark, seg1, nSegments) // warmup: codegen + RocksDB load paths
-    val (w1, rows1, mem1) = replayCdcBest(spark, seg1, nSegments)
-    val (wN, rowsN, memN) = replayCdcBest(spark, segN, nSegments)
-    System.err.println(f"[stream-rehearsal] cdc 1x: $n1 ev in $w1%.1fs " +
-      f"(${n1 / w1}%.0f ev/s, state rows=$rows1 mem=$mem1)")
-    System.err.println(f"[stream-rehearsal] cdc ${reps}x: $nN ev in $wN%.1fs " +
-      f"(${nN / wN}%.0f ev/s, state rows=$rowsN mem=$memN)")
+    // --- CDC plane at 1x and reps x, best of 2 drains after a warmup (a
+    // single drain carries multi-second machine noise) ---
+    def stage(r: Int): (Long, String, String) = {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-srehearse-${r}x").toString
+      val (n, segments) = SparkEntry.stageCdcSegments(spark, base, dir, r)
+      (n, dir, SparkEntry.demoWatchConfig(segments))
+    }
+    def drainBest(dir: String, config: String): Double =
+      Seq.fill(2)(Bench.drainWatch(spark, dir, config)).min
+    val (n1, seg1, cfg1) = stage(1)
+    val (nN, segN, cfgN) = stage(reps)
+    Bench.drainWatch(spark, seg1, cfg1) // warmup: codegen
+    val w1 = drainBest(seg1, cfg1)
+    val wN = drainBest(segN, cfgN)
+    System.err.println(f"[stream-rehearsal] cdc 1x: $n1 ev in $w1%.1fs (${n1 / w1}%.0f ev/s)")
+    System.err.println(f"[stream-rehearsal] cdc ${reps}x: $nN ev in $wN%.1fs (${nN / wN}%.0f ev/s)")
 
     // --- ingest gate at 1x and reps x (reuse ScaleRehearsal's synthesized
     // documents so the replica semantics match the batch rehearsal) ---
@@ -263,9 +179,7 @@ object StreamRehearsal {
     val json =
       s"""{"base_sf":"$base","scaled_reps":$reps,""" +
       s""""state_store":"rocksdb",""" +
-      s""""cdc":{"state_note":"batch-local dedupe by design (reference """ +
-      s"""per-flush reset) - no cross-batch state operator",""" +
-      s""""base":{"events":$n1,"sec":${r3(w1)},"events_per_sec":${(n1 / w1).round}},""" +
+      s""""cdc":{"base":{"events":$n1,"sec":${r3(w1)},"events_per_sec":${(n1 / w1).round}},""" +
       s""""scaled":{"events":$nN,"sec":${r3(wN)},"events_per_sec":${(nN / wN).round}}},""" +
       s""""stateful_dedupe":{""" +
       s""""base":{"events":$sn1,"sec":${r3(sw1)},"events_per_sec":${(sn1 / sw1).round},""" +

@@ -225,6 +225,35 @@ class RespRedisSocketSpec extends AnyFunSuite {
     }
   }
 
+  test("a /<db> url SELECTs that database before the first command; writes land only there") {
+    withServer { (srv, c0) =>
+      val c1 = RedisConn.open(srv.url + "/1")
+      try {
+        assert(srv.count("SELECT") == 1L && srv.count("XADD") == 0L)
+        c1.xadd("s", Seq("k" -> "v"))
+        assert(srv.db(1).xlen("s") == 1L)
+        assert(srv.mem.xlen("s") == 0L && c0.xlen("s") == 0L)
+        assert(c1.xlen("s") == 1L)
+      } finally c1.close()
+    }
+  }
+
+  test("a url without a db, or with db 0, sends no SELECT") {
+    withServer { (srv, c) =>
+      val c0 = RedisConn.open(srv.url + "/0")
+      try {
+        c.xadd("s", Seq("k" -> "v"))
+        assert(c0.xlen("s") == 1L)
+      } finally c0.close()
+      assert(srv.count("SELECT") == 0L)
+    }
+  }
+
+  test("a non-numeric db is an IllegalArgumentException naming the url") {
+    val e = intercept[IllegalArgumentException](RedisConn.open("redis://127.0.0.1:6379/one"))
+    assert(e.getMessage == "bad redis url: redis://127.0.0.1:6379/one")
+  }
+
   test("two concurrent connections share server state") {
     withServer { (srv, c1) =>
       val c2 = RedisConn.open(srv.url)

@@ -5,8 +5,10 @@ import java.net.{InetAddress, ServerSocket, Socket, SocketException}
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** Minimal RESP2 *server* speaking exactly the command surface
-  * [[RespRedis]] issues (XGROUP CREATE / XRANGE / XREVRANGE / XACK /
-  * XDEL / XADD / XLEN), backed by the [[InMemoryRedis]] data structures.
+  * [[RespRedis]] issues (SELECT / XGROUP CREATE / XRANGE / XREVRANGE /
+  * XACK / XDEL / XADD / XLEN), backed by the [[InMemoryRedis]] data
+  * structures: one backend per database index, as a server keeps one
+  * keyspace per database, and each connection starts on database 0.
   *
   * Purpose: the sandbox has no redis-server binary, so the RESP2 socket
   * client — the production data path — would otherwise ship with ZERO CI
@@ -25,9 +27,11 @@ import java.nio.charset.StandardCharsets.UTF_8
   */
 final class RespServerFake extends AutoCloseable {
   private val name = s"resp-fake-${System.nanoTime()}"
-  private val backend = InMemoryRedis.named(name)
+  /** A server's default number of databases (`databases 16`). */
+  private val Databases = 16
+  private def backend(db: Int): InMemoryRedis = InMemoryRedis.named(s"$name-db$db")
   private val createdGroups =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
+    java.util.concurrent.ConcurrentHashMap.newKeySet[(Int, String, String)]()
   private val server =
     new ServerSocket(0, 16, InetAddress.getLoopbackAddress)
   @volatile private var running = true
@@ -35,8 +39,10 @@ final class RespServerFake extends AutoCloseable {
 
   def port: Int = server.getLocalPort
   def url: String = s"redis://127.0.0.1:$port"
-  /** Direct backend handle for spec assertions / seeding. */
-  def mem: InMemoryRedis = backend
+  /** Direct backend handle of database 0 for spec assertions / seeding. */
+  def mem: InMemoryRedis = backend(0)
+  /** Direct backend handle of database `i`. */
+  def db(i: Int): InMemoryRedis = backend(i)
 
   private val served =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
@@ -71,7 +77,7 @@ final class RespServerFake extends AutoCloseable {
     running = false
     server.close()
     pool.shutdownNow()
-    InMemoryRedis.reset(name)
+    (0 until Databases).foreach(db => InMemoryRedis.reset(s"$name-db$db"))
     ()
   }
 
@@ -148,10 +154,11 @@ final class RespServerFake extends AutoCloseable {
     sock.setTcpNoDelay(true)
     val in = new BufferedInputStream(sock.getInputStream)
     val out = new BufferedOutputStream(sock.getOutputStream)
+    var db = 0
     try {
       while (running) {
         val cmd = readCommand(in)
-        try dispatch(cmd, out)
+        try db = dispatch(cmd, db, out)
         catch {
           case e: EOFException => throw e
           case e: Throwable => wError(out, s"ERR ${e.getMessage}")
@@ -164,24 +171,33 @@ final class RespServerFake extends AutoCloseable {
     } finally sock.close()
   }
 
-  private def dispatch(cmd: Seq[String], out: OutputStream): Unit = {
+  /** Serves one command on the connection's database `db`; returns the
+    * connection's database after it. */
+  private def dispatch(cmd: Seq[String], db: Int, out: OutputStream): Int = {
     val name = cmd.head.toUpperCase(java.util.Locale.ROOT)
     served.computeIfAbsent(name, _ => new java.util.concurrent.atomic.AtomicLong())
       .incrementAndGet()
     Option(injected.remove(name)) match {
-      case Some(message) => wError(out, message)
-      case None => execute(cmd, name, out)
+      case Some(message) => wError(out, message); db
+      case None if name == "SELECT" =>
+        cmd.lift(1).flatMap(_.toIntOption) match {
+          case Some(i) if i >= 0 && i < Databases => wSimple(out, "OK"); i
+          case Some(_) => wError(out, "ERR DB index is out of range"); db
+          case None => wError(out, "ERR value is not an integer or out of range"); db
+        }
+      case None => execute(cmd, name, backend(db), db, out); db
     }
   }
 
-  private def execute(cmd: Seq[String], name: String, out: OutputStream): Unit =
+  private def execute(cmd: Seq[String], name: String, backend: InMemoryRedis, db: Int,
+                      out: OutputStream): Unit =
     name match {
       case "XGROUP" =>
         val Seq(_, sub, stream, group, from, rest @ _*) = cmd
         require(sub.equalsIgnoreCase("CREATE") &&
           rest.map(_.toUpperCase(java.util.Locale.ROOT)) == Seq("MKSTREAM"),
           s"unsupported XGROUP form: $cmd")
-        if (!createdGroups.add((stream, group)))
+        if (!createdGroups.add((db, stream, group)))
           wError(out, "BUSYGROUP Consumer Group name already exists")
         else {
           backend.xgroupCreate(stream, group,

@@ -4,7 +4,6 @@ import graft.TestSpark
 import graft.cdc.Route
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -56,23 +55,5 @@ class CdcStreamSpec extends AnyFunSuite {
     val second = out.filter(_._1 == epochsWithData(1))
     assert(second.map(t => (t._2, t._3)).toSet ==
       Set(("catalog_product_flat", "[1]"), ("catalog_category_product", "[1]")))
-  }
-
-  test("parquet sink variant writes per-epoch batches with cap") {
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(Long, String, String)]
-    val records = mem.toDF().toDF("id", "table", "envelope")
-    val outDir = Files.createTempDirectory("graft-out").toString
-    val ckpt = Files.createTempDirectory("graft-ckpt2").toString
-    val q = CdcStream.start(records, routes,
-      maxBatch = 3, outDir, ckpt, windowMillis = 100L)
-    try {
-      mem.addData((1 to 7).map(i => (i.toLong, "catalog_category_entity", envelope(i))): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val out = spark.read.parquet(outDir)
-    assert(out.filter(col("target") === "catalog_product_flat")
-      .agg(sum("n_ids")).as[Long].head() == 7L)
-    assert(out.agg(max("n_ids")).as[Long].head() <= 3L)
   }
 }

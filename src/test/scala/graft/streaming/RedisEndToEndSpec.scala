@@ -46,14 +46,17 @@ class RedisEndToEndSpec extends AnyFunSuite {
        |  ["catalog_product_flat", "catalog_category_product"]}}}""".stripMargin
 
   /** One full `watch --source redis --sink redis` run through the CLI's own
-    * wiring ([[graft.Main.watch]]), with Redis on both ends at `url`.
+    * wiring ([[graft.Main.watch]]), with Redis on both ends at `url`, or
+    * with the target at the config's `target.connection` when
+    * `configuredTarget`.
     */
-  private def runWatch(url: String, mem: InMemoryRedis, config: String): Unit = {
+  private def runWatch(url: String, mem: InMemoryRedis, config: String,
+                       configuredTarget: Boolean = false): Unit = {
     val cfgFile = java.nio.file.Files.createTempFile("graft-e2e", ".json")
     java.nio.file.Files.writeString(cfgFile, config)
     val q = graft.Main.watch(spark, Array("watch", "--config", cfgFile.toString,
-      "--source", "redis", "--sink", "redis", "--in", url, "--target-url", url,
-      "--checkpoint", ckpt()))
+      "--source", "redis", "--sink", "redis", "--in", url, "--checkpoint", ckpt()) ++
+      (if (configuredTarget) Nil else Seq("--target-url", url)))
     try {
       q.processAllAvailable()
       // epoch N's source ack fires when epoch N+1 plans; poke an empty epoch
@@ -144,5 +147,20 @@ class RedisEndToEndSpec extends AnyFunSuite {
     // nothing listens on port 1: reading source.connection fails the query
     runWatch(url, mem, config(ack = "simple", sourcePort = 1))
     assert(idArrays(mem, "target.catalog_product_flat").contains("[1,2]"))
+  }
+
+  test("watch: without --target-url, --sink redis XADDs into target.connection's db") {
+    val (url, mem) = freshMem()
+    Seq(1, 2).foreach(i =>
+      mem.xadd("m2.catalog_category_entity", Seq("v" -> envelope(i))))
+    val srv = new graft.sources.RespServerFake
+    try {
+      val cfg = config(ack = "simple").replace(""""target": {"prefix": "target."}""",
+        s""""target": {"prefix": "target.",
+           |  "connection": {"host": "127.0.0.1", "port": ${srv.port}, "db": 1}}""".stripMargin)
+      runWatch(url, mem, cfg, configuredTarget = true)
+      assert(idArrays(srv.db(1), "target.catalog_product_flat").take(2) == Seq("[]", "[1,2]"))
+      assert(srv.mem.xlen("target.catalog_product_flat") == 0L)
+    } finally srv.close()
   }
 }

@@ -7,8 +7,8 @@ import java.nio.file.{Files, Paths}
 /** `watch` on its defaults — the segment-directory source (`graft-cdc`)
   * into the per-epoch parquet sink — run through [[graft.Main.watch]], the
   * function the CLI runs: the `buffers.source.size` → `maxSegmentsPerTrigger`
-  * mapping, restart over one checkpoint, and the start-up checks on the
-  * buffer sizes.
+  * mapping, the `buffers.target.size` chunk cap, restart over one
+  * checkpoint, and the start-up checks on the buffer sizes.
   */
 class WatchDefaultsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -39,9 +39,10 @@ class WatchDefaultsSpec extends AnyFunSuite {
     * --sink flag, so the source is graft-cdc and the sink parquet. Returns
     * the written rows as (epoch, target, ids).
     */
-  private def runWatch(dir: String, ckpt: String): Set[(Long, String, String)] = {
+  private def runWatch(dir: String, ckpt: String,
+                       cfg: String = config()): Set[(Long, String, String)] = {
     val out = tmp("graft-watch-out")
-    val q = graft.Main.watch(spark, Array("watch", "--config", config(),
+    val q = graft.Main.watch(spark, Array("watch", "--config", cfg,
       "--in", dir, "--out", out, "--checkpoint", ckpt))
     try q.processAllAvailable() finally q.stop()
     spark.read.parquet(out).select("epoch", "target", "ids").collect()
@@ -61,6 +62,17 @@ class WatchDefaultsSpec extends AnyFunSuite {
     val second = runWatch(dir, ckpt)
     assert(second.map { case (_, t, ids) => (t, ids) } == targets.map(_ -> "[4,5]").toSet,
       s"a restart must emit only the new segment's chunks, got $second")
+  }
+
+  test("watch's parquet sink caps every chunk at buffers.target.size") {
+    val dir = tmp("graft-watch-in")
+    writeSegment(dir, 1L, 1 to 7)
+    val out = runWatch(dir, tmp("graft-watch-ckpt"), config(targetSize = 3))
+    val chunks = out.toSeq.map { case (_, t, ids) =>
+      t -> ids.stripPrefix("[").stripSuffix("]").split(",").map(_.toInt).toSeq }
+    assert(chunks.forall(_._2.size <= 3), s"a chunk exceeds 3 ids: $out")
+    assert(chunks.groupMap(_._1)(_._2).view.mapValues(_.flatten.sorted).toMap ==
+      targets.map(_ -> (1 to 7)).toMap)
   }
 
   Seq("source", "target").foreach { buffer =>

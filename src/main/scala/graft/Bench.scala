@@ -1,4 +1,5 @@
 package graft
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 object Bench {
@@ -93,35 +94,48 @@ object Bench {
   /** Streaming-plane throughput: the events staged as `watch`'s default
     * source reads them ([[SparkEntry.stageCdcSegments]]), drained through
     * `Main.watch` at [[SparkEntry.demoWatchConfig]] in 4 epochs. Measures
-    * the stream from start to drain (setup/staging excluded).
+    * the stream from start to drain (setup/staging excluded). The staged
+    * segments and the config are deleted afterwards.
     */
-  private def streamingThroughput(spark: SparkSession, sfDir: String): Double = {
-    val segDir = java.nio.file.Files.createTempDirectory("graft-bench-segs").toString
-    val (nEvents, segments) = SparkEntry.stageCdcSegments(spark, sfDir, segDir)
-    val config = SparkEntry.demoWatchConfig(segments)
-    // the simple-mode source leaves segments in place, so the staged stream
-    // can be drained repeatedly (fresh checkpoint per run): run 1 warms
-    // codegen/JIT for the per-epoch plan (measured 2.5x on the first
-    // micro-batch), later runs are steady state — the same warmup
-    // methodology as the batch queries in main().
-    drainWatch(spark, segDir, config) // warmup
-    nEvents / (1 to StreamTimedRuns).map(_ => drainWatch(spark, segDir, config)).min
-  }
+  private def streamingThroughput(spark: SparkSession, sfDir: String): Double =
+    withTempDir("graft-bench-segs") { segDir =>
+      val (nEvents, segments) = SparkEntry.stageCdcSegments(spark, sfDir, segDir)
+      val config = SparkEntry.demoWatchConfig(segments)
+      // the simple-mode source leaves segments in place, so the staged stream
+      // can be drained repeatedly (fresh checkpoint per run): run 1 warms
+      // codegen/JIT for the per-epoch plan (measured 2.5x on the first
+      // micro-batch), later runs are steady state — the same warmup
+      // methodology as the batch queries in main().
+      try {
+        drainWatch(spark, segDir, config) // warmup
+        nEvents / (1 to StreamTimedRuns).map(_ => drainWatch(spark, segDir, config)).min
+      } finally FileUtils.deleteQuietly(new java.io.File(config))
+    }
 
   /** One `Main.watch` run of `config` over the segment directory `segDir`,
     * drained to the end: graft-cdc source, XADD sink into a fresh in-memory
-    * target (`mem://`) dropped afterwards. Returns the wall seconds from
-    * start to stop.
+    * target (`mem://`), checkpoint in a fresh temp dir; the target and the
+    * checkpoint are dropped afterwards. Returns the wall seconds from start
+    * to stop.
     */
-  private[graft] def drainWatch(spark: SparkSession, segDir: String, config: String): Double = {
-    val target = s"graft-drain-${java.util.UUID.randomUUID()}"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-bench-ckpt").toString
-    val t0 = System.nanoTime()
-    val q = Main.watch(spark, Array("watch", "--config", config, "--in", segDir,
-      "--checkpoint", ckpt, "--sink", "redis", "--target-url", s"mem://$target"))
-    try q.processAllAvailable()
-    finally { q.stop(); graft.sources.InMemoryRedis.reset(target) }
-    (System.nanoTime() - t0) / 1e9
+  private[graft] def drainWatch(spark: SparkSession, segDir: String, config: String): Double =
+    withTempDir("graft-bench-ckpt") { ckpt =>
+      val target = s"graft-drain-${java.util.UUID.randomUUID()}"
+      val t0 = System.nanoTime()
+      val q = Main.watch(spark, Array("watch", "--config", config, "--in", segDir,
+        "--checkpoint", ckpt, "--sink", "redis", "--target-url", s"mem://$target"))
+      try q.processAllAvailable()
+      finally { q.stop(); graft.sources.InMemoryRedis.reset(target) }
+      (System.nanoTime() - t0) / 1e9
+    }
+
+  /** Runs `body` on a fresh directory under the system temp dir, then
+    * deletes the directory with everything in it, whether `body` returns or
+    * throws.
+    */
+  private[graft] def withTempDir[A](prefix: String)(body: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(dir.toString) finally FileUtils.deleteQuietly(dir)
   }
 
   /** Fixed synthetic CPU probe — a deterministic hash-reduce over a range,

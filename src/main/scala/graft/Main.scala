@@ -65,7 +65,8 @@ object Main {
     * or unknown flag value is an IllegalArgumentException.
     *
     * Config knobs: `buffers.source.size` caps each source stream per
-    * trigger, `buffers.dedupe.time` is the trigger interval, and
+    * trigger, `buffers.dedupe.time` is the trigger interval (counted from
+    * each trigger's start, see [[CdcStream.startWith]]), and
     * `buffers.target.size` caps the ids of one output chunk; both sizes
     * must be positive.
     */

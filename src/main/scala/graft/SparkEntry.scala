@@ -144,7 +144,7 @@ object SparkEntry {
   /** events → CDC record shape (id, table, envelope): the synthetic `props`
     * payload becomes the Debezium `after` image.
     */
-  private def cdcRecords(s: SparkSession, dir: String): DataFrame =
+  private[graft] def cdcRecords(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "events").select(
       col("event_id").as("id"),
       col("event_type").as("table"),

@@ -1,12 +1,11 @@
 package graft.cdc
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftBridge.{column, expression}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Debezium-envelope decoding as pure `Column` functions (no UDFs — everything
-  * stays inside whole-stage codegen and Catalyst's `OptimizeJsonExprs` can
-  * prune the parsed struct down to the single accessed field).
+/** Debezium-envelope decoding as `Column` functions (no UDFs).
   *
   * Reference semantics (RedisSource.java:58-66):
   *   - format detect is structural, per record: a body with exactly one field
@@ -14,6 +13,10 @@ import org.apache.spark.sql.types._
   *     (envelope under the `value` field). The Redis source does this while
   *     it reads an entry, so the envelope reaches these functions as a string.
   *   - only `after.<column>` is read, and it must be an integer.
+  *
+  * The plane reads its routed columns with [[afterColumns]]: one walk over
+  * each envelope's bytes, `from_json` ([[parse]]) only for rows the walk
+  * cannot vouch for, the same ids as `from_json` on every input.
   */
 object Envelope {
 
@@ -27,6 +30,17 @@ object Envelope {
 
   /** Parse an envelope JSON string to (before, after) maps. */
   def parse(envelopeJson: Column): Column = from_json(envelopeJson, schema)
+
+  /** `after.<column>` for each of `columns`, as an `array<string>` in that
+    * order: what `element_at(parse(e).after, column)` gives, read by one
+    * in-place walk per envelope ([[AfterColumns]]), with `parse(e).after`
+    * evaluated only for the rows the walk falls back on. Catalyst's
+    * `OptimizeJsonExprs` prunes that `from_json` to the `after` field, so
+    * `before` is never type-checked on either path.
+    */
+  def afterColumns(envelopeJson: Column, columns: Seq[String]): Column =
+    column(AfterColumns(expression(envelopeJson),
+      expression(parse(envelopeJson).getField("after")), columns))
 
   /** Extract `after.<field>` as the integer entity id — the strict
     * integer-cast semantics of RedisSource.java:66 become a try_cast that

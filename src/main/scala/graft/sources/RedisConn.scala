@@ -17,6 +17,16 @@ final case class RedisId(ms: Long, seq: Long) extends Ordered[RedisId] {
   }
   override def toString: String = s"${java.lang.Long.toUnsignedString(ms)}-" +
     java.lang.Long.toUnsignedString(seq)
+
+  /** [[toString]]'s UTF-8 bytes, written digit by digit with no String. */
+  def utf8: Array[Byte] = {
+    val m = RedisId.digits(ms)
+    val out = new Array[Byte](m + 1 + RedisId.digits(seq))
+    RedisId.write(ms, out, m)
+    out(m) = '-'
+    RedisId.write(seq, out, out.length)
+    out
+  }
 }
 
 object RedisId {
@@ -24,6 +34,57 @@ object RedisId {
   /** The largest id, `18446744073709551615-18446744073709551615`: the
     * open end of a range read. */
   val Max: RedisId = RedisId(-1L, -1L)
+  /** The number of decimal digits of `v` read as unsigned: 10^19 and up
+    * (negative as signed) have 20.
+    */
+  private def digits(v: Long): Int =
+    if (v < 0) { if (java.lang.Long.compareUnsigned(v, -8446744073709551616L) >= 0) 20 else 19 }
+    else {
+      var n = 1
+      var p = 10L
+      while (n < 19 && v >= p) { p *= 10; n += 1 }
+      n
+    }
+
+  /** "00" to "99": two digits per table lookup. */
+  private val DigitPairs: Array[Byte] =
+    (0 until 100).map(i => f"$i%02d").mkString.getBytes("US-ASCII")
+
+  /** Writes `v`'s unsigned decimal digits into `out`, ending before `end`:
+    * two digits per step, in int arithmetic once the rest fits an int.
+    */
+  private def write(v: Long, out: Array[Byte], end: Int): Unit = {
+    var i = end
+    var x = v
+    if (x < 0) {
+      val q = java.lang.Long.divideUnsigned(x, 10)
+      i -= 1
+      out(i) = ('0' + (x - q * 10)).toByte
+      x = q
+    }
+    while (x > Int.MaxValue) {
+      val q = x / 100
+      i -= 2
+      pair((x - q * 100).toInt, out, i)
+      x = q
+    }
+    var y = x.toInt
+    while (y >= 100) {
+      val q = y / 100
+      i -= 2
+      pair(y - q * 100, out, i)
+      y = q
+    }
+    if (y >= 10) pair(y, out, i - 2)
+    else out(i - 1) = ('0' + y).toByte
+  }
+
+  /** Writes the two digits of `r` (0-99) at `out(i)`, `out(i + 1)`. */
+  private def pair(r: Int, out: Array[Byte], i: Int): Unit = {
+    out(i) = DigitPairs(2 * r)
+    out(i + 1) = DigitPairs(2 * r + 1)
+  }
+
   def parse(s: String): RedisId = s.split("-") match {
     case Array(ms, seq) => RedisId(java.lang.Long.parseUnsignedLong(ms),
       java.lang.Long.parseUnsignedLong(seq))
@@ -63,19 +124,14 @@ trait RedisConn extends AutoCloseable {
     * no envelope field fails the read with [[RedisConn.noEnvelope]].
     */
   def xrangeEnvelopes(stream: String, afterExclusive: RedisId, endInclusive: RedisId,
-                      count: Int): IndexedSeq[(RedisId, Array[Byte])] =
-    xrange(stream, afterExclusive, endInclusive, count).iterator.map { case (id, body) =>
-      body.collectFirst {
-        case (k, v) if RedisConn.isEnvelopeField(body.size, k == "value") => id -> v.getBytes(UTF_8)
-      }.getOrElse(throw RedisConn.noEnvelope(stream, id))
-    }.toIndexedSeq
+                      count: Int): IndexedSeq[(RedisId, Array[Byte])]
 
   /** The ids of the same range as [[xrange]]. Redis has no id-only range
-    * command, so the bodies still cross the wire; the client skips them.
+    * command, so over RESP the bodies still cross the wire; the client
+    * skips them.
     */
   def xrangeIds(stream: String, afterExclusive: RedisId, endInclusive: RedisId,
-                count: Int): IndexedSeq[RedisId] =
-    xrange(stream, afterExclusive, endInclusive, count).iterator.map(_._1).toIndexedSeq
+                count: Int): IndexedSeq[RedisId]
 
   /** Highest id present, `XREVRANGE <stream> + - COUNT 1`; None if empty. */
   def xlatestId(stream: String): Option[RedisId]
@@ -130,71 +186,60 @@ object RedisConn {
   }
 }
 
-/** Complete in-memory Redis Streams fake — real data structures (sorted
-  * entry log per stream, per-group ack sets), not canned responses, so the
-  * connector's offset/commit/retention logic is exercised for real in CI
-  * where no Redis server exists. JVM-global by name: local-mode executors
+/** Complete in-memory Redis Streams fake — real data structures (an
+  * ordered entry log per stream, per-group ack sets), not canned responses,
+  * so the connector's offset/commit/retention logic is exercised for real in
+  * CI where no Redis server exists. JVM-global by name: local-mode executors
   * and the driver resolve `mem://x` to the same instance.
+  *
+  * Each stream is an append-only log in flat arrays (see
+  * [[InMemoryRedis.Log]]): a range read, ack or delete walks consecutive
+  * slots, so its cost does not hang on where the garbage collector last
+  * moved per-entry objects, and a large backlog gives the collector almost
+  * nothing to copy.
   */
 final class InMemoryRedis private () extends RedisConn {
-  import scala.jdk.CollectionConverters._
-  private val streams =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      java.util.concurrent.ConcurrentSkipListMap[RedisId, Map[String, String]]]()
-  private val groups =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      java.util.concurrent.ConcurrentSkipListSet[RedisId]]()
-  private val lastId = new java.util.concurrent.ConcurrentHashMap[String, RedisId]()
+  import InMemoryRedis.Log
+  private val streams = new java.util.concurrent.ConcurrentHashMap[String, Log]()
 
-  private def log(stream: String) = streams.computeIfAbsent(stream,
-    _ => new java.util.concurrent.ConcurrentSkipListMap[RedisId, Map[String, String]](
-      Ordering[RedisId]))
+  private def log(stream: String): Log = streams.computeIfAbsent(stream, _ => new Log)
 
-  override def xgroupCreate(stream: String, group: String, from: RedisId): Unit = {
-    log(stream)
-    groups.computeIfAbsent((stream, group),
-      _ => new java.util.concurrent.ConcurrentSkipListSet[RedisId](Ordering[RedisId]))
-    ()
-  }
+  override def xgroupCreate(stream: String, group: String, from: RedisId): Unit =
+    log(stream).createGroup(group)
 
   override def xrange(stream: String, afterExclusive: RedisId,
                       endInclusive: RedisId, count: Int): Seq[(RedisId, Map[String, String])] =
-    log(stream).subMap(afterExclusive, false, endInclusive, true)
-      .entrySet().iterator().asScala.take(count)
-      .map(e => (e.getKey, e.getValue)).toSeq
+    log(stream).range(afterExclusive, endInclusive, count)((l, p) => (l.id(p), l.body(p)))
 
-  override def xlatestId(stream: String): Option[RedisId] =
-    Option(log(stream).lastEntry()).map(_.getKey)
+  override def xrangeEnvelopes(stream: String, afterExclusive: RedisId, endInclusive: RedisId,
+                               count: Int): IndexedSeq[(RedisId, Array[Byte])] =
+    log(stream).range(afterExclusive, endInclusive, count) { (l, p) =>
+      l.id(p) -> l.envelope(p).getOrElse(throw RedisConn.noEnvelope(stream, l.id(p)))
+    }
+
+  override def xrangeIds(stream: String, afterExclusive: RedisId, endInclusive: RedisId,
+                         count: Int): IndexedSeq[RedisId] =
+    log(stream).range(afterExclusive, endInclusive, count)(_.id(_))
+
+  override def xlatestId(stream: String): Option[RedisId] = log(stream).latest
 
   override def xack(stream: String, group: String, ids: Seq[RedisId]): Long = {
-    val g = groups.get((stream, group))
-    require(g != null, s"NOGROUP $stream $group")
-    ids.count(id => log(stream).containsKey(id) && g.add(id)).toLong
+    val l = streams.get(stream)
+    require(l != null && l.hasGroup(group), s"NOGROUP $stream $group")
+    l.ack(group, ids)
   }
 
-  override def xdel(stream: String, ids: Seq[RedisId]): Long =
-    ids.count(id => log(stream).remove(id) != null).toLong
+  override def xdel(stream: String, ids: Seq[RedisId]): Long = log(stream).delete(ids)
 
   override def xadd(stream: String, body: Seq[(String, String)],
-                    id: Option[RedisId]): RedisId = this.synchronized {
-    val prev = lastId.getOrDefault(stream, RedisId.Zero)
-    val next = id match {
-      case Some(explicit) =>
-        require(explicit > prev, s"XADD id $explicit <= last $prev")
-        explicit
-      case None => RedisId(prev.ms + 1, 0L) // deterministic logical clock
-    }
-    log(stream).put(next, body.toMap)
-    lastId.put(stream, next)
-    next
-  }
+                    id: Option[RedisId]): RedisId = log(stream).append(body.toMap, id)
 
-  override def xlen(stream: String): Long = log(stream).size().toLong
+  override def xlen(stream: String): Long = log(stream).live.toLong
 
   /** Ack-set view for spec assertions (the fake's PEL-completion analogue). */
   def ackedIds(stream: String, group: String): Set[RedisId] = {
-    val g = groups.get((stream, group))
-    if (g == null) Set.empty else g.iterator().asScala.toSet
+    val l = streams.get(stream)
+    if (l == null) Set.empty else l.acked(group)
   }
 
   override def close(): Unit = () // shared instance; nothing to release
@@ -207,6 +252,193 @@ object InMemoryRedis {
     registry.computeIfAbsent(name, _ => new InMemoryRedis())
   /** Drop an instance (test isolation between specs). */
   def reset(name: String): Unit = { registry.remove(name); () }
+
+  /** One stream: entries at positions 0, 1, ... in id order, ids as two
+    * `Long` columns, deletions as a bit set, acks as one bit set per group.
+    * Bodies are packed in position order into one byte arena as UTF-8
+    * `[key length][key][value length][value]...`, the bytes a Redis server
+    * would hold, and rebuilt on read. Positions are never reused, so acks
+    * outlive the deletion of their entries, as they did in the ack sets this
+    * replaces. Arena bytes before the first live entry are dropped once they
+    * make up half of it. Every method holds the log's lock.
+    */
+  private[sources] final class Log {
+    private var ms = new Array[Long](16)
+    private var seq = new Array[Long](16)
+    private var bodyAt = new Array[Long](16) // arena offset of the body
+    private var envAt = new Array[Long](16)  // arena offset of the envelope's length, or -1
+    private var size = 0
+    private val dead = new java.util.BitSet
+    private var liveCount = 0
+    private var firstLive = 0
+    private val groups = scala.collection.mutable.Map.empty[String, java.util.BitSet]
+    // arena(i) holds offset arenaBase + i; offsets below arenaBase are dropped
+    private var arena = new Array[Byte](1024)
+    private var arenaBase = 0L
+    private var arenaEnd = 0L
+
+    def live: Int = synchronized(liveCount)
+
+    private def compareAt(p: Int, id: RedisId): Int = {
+      val c = java.lang.Long.compareUnsigned(ms(p), id.ms)
+      if (c != 0) c else java.lang.Long.compareUnsigned(seq(p), id.seq)
+    }
+
+    /** The first position whose id is above `id`. */
+    private def after(id: RedisId): Int = {
+      var lo = 0
+      var hi = size
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (compareAt(mid, id) <= 0) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
+
+    /** The live position holding `id`, or -1; `hint` is tried first. */
+    private def liveAt(id: RedisId, hint: Int): Int = {
+      val p = if (hint < size && compareAt(hint, id) == 0) hint else after(id) - 1
+      if (p >= 0 && compareAt(p, id) == 0 && !dead.get(p)) p else -1
+    }
+
+    def range[A](afterExclusive: RedisId, endInclusive: RedisId, count: Int)(
+        f: (Log, Int) => A): IndexedSeq[A] = synchronized {
+      val out = Vector.newBuilder[A]
+      var n = 0
+      var p = dead.nextClearBit(after(afterExclusive))
+      while (n < count && p < size && compareAt(p, endInclusive) <= 0) {
+        out += f(this, p)
+        n += 1
+        p = dead.nextClearBit(p + 1)
+      }
+      out.result()
+    }
+
+    def latest: Option[RedisId] = synchronized {
+      val p = if (size == 0) -1 else dead.previousClearBit(size - 1)
+      Option.when(p >= 0)(id(p))
+    }
+
+    // id, body and envelope read position `p` for `range` and `acked`,
+    // which hold the lock
+
+    private[InMemoryRedis] def id(p: Int): RedisId = RedisId(ms(p), seq(p))
+
+    private[InMemoryRedis] def body(p: Int): Map[String, String] = {
+      val b = Map.newBuilder[String, String]
+      var i = index(bodyAt(p))
+      val end = if (p + 1 < size) index(bodyAt(p + 1)) else index(arenaEnd)
+      while (i < end) {
+        val k = new String(arena, i + 4, intAt(i), UTF_8)
+        i += 4 + intAt(i)
+        b += k -> new String(arena, i + 4, intAt(i), UTF_8)
+        i += 4 + intAt(i)
+      }
+      b.result()
+    }
+
+    /** The envelope field's ([[RedisConn.isEnvelopeField]]) UTF-8 bytes. */
+    private[InMemoryRedis] def envelope(p: Int): Option[Array[Byte]] =
+      Option.when(envAt(p) >= 0) {
+        val i = index(envAt(p))
+        java.util.Arrays.copyOfRange(arena, i + 4, i + 4 + intAt(i))
+      }
+
+    def append(body: Map[String, String], explicit: Option[RedisId]): RedisId = synchronized {
+      val prev = if (size == 0) RedisId.Zero else id(size - 1)
+      val next = explicit match {
+        case Some(e) =>
+          require(e > prev, s"XADD id $e <= last $prev")
+          e
+        case None => RedisId(prev.ms + 1, 0L) // deterministic logical clock
+      }
+      if (size == ms.length) {
+        val n = 2 * size
+        ms = java.util.Arrays.copyOf(ms, n)
+        seq = java.util.Arrays.copyOf(seq, n)
+        bodyAt = java.util.Arrays.copyOf(bodyAt, n)
+        envAt = java.util.Arrays.copyOf(envAt, n)
+      }
+      val p = size
+      ms(p) = next.ms
+      seq(p) = next.seq
+      bodyAt(p) = arenaEnd
+      envAt(p) = -1L
+      body.foreach { case (k, v) =>
+        put(k.getBytes(UTF_8))
+        if (envAt(p) < 0 && RedisConn.isEnvelopeField(body.size, k == "value")) envAt(p) = arenaEnd
+        put(v.getBytes(UTF_8))
+      }
+      size += 1
+      liveCount += 1
+      next
+    }
+
+    def delete(ids: Seq[RedisId]): Long = synchronized {
+      var hint = 0
+      var n = 0L
+      ids.foreach { id =>
+        val p = liveAt(id, hint)
+        if (p >= 0) {
+          dead.set(p)
+          liveCount -= 1
+          n += 1
+          hint = p + 1
+        }
+      }
+      firstLive = dead.nextClearBit(firstLive)
+      val keepFrom = if (firstLive < size) bodyAt(firstLive) else arenaEnd
+      if (2 * (keepFrom - arenaBase) >= arenaEnd - arenaBase && keepFrom > arenaBase) {
+        System.arraycopy(arena, index(keepFrom), arena, 0, (arenaEnd - keepFrom).toInt)
+        arenaBase = keepFrom
+      }
+      n
+    }
+
+    def createGroup(group: String): Unit = synchronized {
+      groups.getOrElseUpdate(group, new java.util.BitSet); ()
+    }
+
+    def hasGroup(group: String): Boolean = synchronized(groups.contains(group))
+
+    def ack(group: String, ids: Seq[RedisId]): Long = synchronized {
+      val g = groups(group)
+      var hint = 0
+      var n = 0L
+      ids.foreach { id =>
+        val p = liveAt(id, hint)
+        if (p >= 0) {
+          if (!g.get(p)) { g.set(p); n += 1 }
+          hint = p + 1
+        }
+      }
+      n
+    }
+
+    def acked(group: String): Set[RedisId] = synchronized {
+      groups.get(group).fold(Set.empty[RedisId]) { g =>
+        Iterator.iterate(g.nextSetBit(0))(p => g.nextSetBit(p + 1)).takeWhile(_ >= 0).map(id).toSet
+      }
+    }
+
+    private def index(offset: Long): Int = (offset - arenaBase).toInt
+
+    private def intAt(i: Int): Int =
+      (arena(i) & 0xFF) << 24 | (arena(i + 1) & 0xFF) << 16 | (arena(i + 2) & 0xFF) << 8 | arena(i + 3) & 0xFF
+
+    /** Appends `b` to the arena, length first. */
+    private def put(b: Array[Byte]): Unit = {
+      val i = index(arenaEnd)
+      if (i + 4 + b.length > arena.length)
+        arena = java.util.Arrays.copyOf(arena, math.max(i + 4 + b.length, 2 * arena.length))
+      arena(i) = (b.length >>> 24).toByte
+      arena(i + 1) = (b.length >>> 16).toByte
+      arena(i + 2) = (b.length >>> 8).toByte
+      arena(i + 3) = b.length.toByte
+      System.arraycopy(b, 0, arena, i + 4, b.length)
+      arenaEnd += 4 + b.length
+    }
+  }
 }
 
 /** Minimal blocking RESP2 client over a plain socket — only the commands

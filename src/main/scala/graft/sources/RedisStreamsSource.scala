@@ -3,6 +3,7 @@ package graft.sources
 import com.fasterxml.jackson.databind.ObjectMapper
 import java.util
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -239,8 +240,8 @@ private class RedisPartitionReader(p: RedisStreamPartition)
 
   override def next(): Boolean = entries.hasNext && { current = entries.next(); true }
 
-  override def get(): InternalRow = InternalRow(UTF8String.fromString(current._1.toString),
-    table, UTF8String.fromBytes(current._2))
+  override def get(): InternalRow = new GenericInternalRow(Array[Any](
+    UTF8String.fromBytes(current._1.utf8), table, UTF8String.fromBytes(current._2)))
 
   override def close(): Unit = conn.close()
 }

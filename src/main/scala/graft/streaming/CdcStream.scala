@@ -1,15 +1,18 @@
 package graft.streaming
 
 import graft.cdc.{CdcPipeline, Route}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Structured Streaming form of the CDC plane — the engine's equivalent of
   * the reference's `watch` command (WatchStream.java:61-136).
   *
   * Semantics mapping (SURVEY §7):
   *   - count-or-time dedupe window (bufferTimeout(100k, 5s)) → micro-batch =
-  *     `Trigger.ProcessingTime(windowMillis)` for the time arm; the count arm
+  *     `Trigger.ProcessingTime(windowMillis)` for the time arm, counted from
+  *     each trigger's start rather than from the wall clock's multiples of
+  *     the window ([[GraftBridge.startForeachBatch]]), so the epoch cadence
+  *     does not depend on when the plane started; the count arm
   *     is enforced at the SOURCE as Spark's read limit (`maxRecordsPerTrigger`
   *     on `graft-redis`, `maxSegmentsPerTrigger` on `graft-cdc`), which is
   *     where Spark bounds batch size.
@@ -48,14 +51,11 @@ object CdcStream {
   def startWith(records: DataFrame, edges: Seq[Route], maxBatch: Int,
                 checkpointDir: String, windowMillis: Long)(
                 writer: (DataFrame, Long) => Unit): StreamingQuery =
-    records.writeStream
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
+    GraftBridge.startForeachBatch(records, checkpointDir, windowMillis) {
+      (batch: DataFrame, epoch: Long) =>
         // batch-local dedupe = reference flush semantics (state reset/window)
         writer(CdcPipeline.run(batch, edges, maxBatch), epoch)
-      }
-      .trigger(Trigger.ProcessingTime(windowMillis))
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    }
 
   /** Semantic-upgrade variant: dedupe persists ACROSS micro-batches within a
     * watermark horizon (`dropDuplicatesWithinWatermark`) — an id seen twice

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft._
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,9 +24,12 @@ import org.apache.spark.sql.functions._
   *     bounded = rows grow linearly (bands per doc), probes stay
   *     Exchange-free.
   *
-  * Writes bench/scale_rehearsal_streaming.json + target/ copy. Single timed
-  * replay per (plane, scale) after a warmup replay — ratios, not
-  * micro-benchmarks, same policy as ScaleRehearsal.
+  * Usage: `StreamRehearsal [<sf-dir> [<reps> [<out.json>]]]`. Writes
+  * `target/scale_rehearsal_streaming.json`, or `<out.json>` when given: name
+  * `bench/scale_rehearsal_streaming.json` to refresh the committed sf0.1 x 10
+  * record. Everything staged in the system temp dir is deleted at the end.
+  * Single timed replay per (plane, scale) after a warmup replay — ratios,
+  * not micro-benchmarks, same policy as ScaleRehearsal.
   */
 object StreamRehearsal {
 
@@ -47,16 +51,16 @@ object StreamRehearsal {
       val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(loc)) fs.delete(loc, true)
     }
-    val runCkpt = java.nio.file.Files
-      .createTempDirectory("graft-srehearse-gate-ckpt").toString
     val docs = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 4).parquet(docsDir)
-    val t0 = System.nanoTime()
-    val q = graft.streaming.StreamingIngestGate.start(docs, "doc_id", "text",
-      corpusTable, indexTable, n = 3, k = 64, bands = 16, threshold = 0.8,
-      checkpointDir = runCkpt)()
-    try q.processAllAvailable() finally q.stop()
-    val wall = (System.nanoTime() - t0) / 1e9
+    val wall = Bench.withTempDir("graft-srehearse-gate-ckpt") { runCkpt =>
+      val t0 = System.nanoTime()
+      val q = graft.streaming.StreamingIngestGate.start(docs, "doc_id", "text",
+        corpusTable, indexTable, n = 3, k = 64, bands = 16, threshold = 0.8,
+        checkpointDir = runCkpt)()
+      try q.processAllAvailable() finally q.stop()
+      (System.nanoTime() - t0) / 1e9
+    }
     val accepted = spark.table(corpusTable).count()
     val idxRows = spark.table(indexTable).count()
     (wall, accepted, idxRows)
@@ -72,48 +76,49 @@ object StreamRehearsal {
     * high-water mark must scale ~linearly in distinct keys.
     */
   private def replayStatefulDedupe(spark: SparkSession, sfDir: String,
-                                   reps: Int): (Double, Long, Long, Long) = {
-    val dir = java.nio.file.Files
-      .createTempDirectory(s"graft-srehearse-state-${reps}x").toString
-    val ev = Tables(spark, sfDir, "events")
-    val rep = explode(sequence(lit(0), lit(reps - 1))).as("r")
-    ev.select(col("event_type"), col("user_id"), col("ts_ns"), rep)
-      .select(col("event_type"),
-        (col("user_id") * reps + col("r")).as("k"),
-        timestamp_micros(expr("ts_ns div 1000")).as("ts"))
-      .repartition(16)
-      .write.mode("overwrite").parquet(dir)
-    val n = spark.read.parquet(dir).count()
-    val src = spark.readStream
-      .schema(spark.read.parquet(dir).schema)
-      .option("maxFilesPerTrigger", 4).parquet(dir)
-    val runCkpt = java.nio.file.Files
-      .createTempDirectory("graft-srehearse-state-ckpt").toString
-    val t0 = System.nanoTime()
-    val q = graft.streaming.CdcStream
-      .dedupedAcrossBatches(
-        src.withColumnRenamed("event_type", "target")
-          .withColumnRenamed("k", "entity_id"), "ts", "365 days")
-      .writeStream
-      .option("checkpointLocation", runCkpt)
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        b.write.format("noop").mode("overwrite").save()
+                                   reps: Int): (Double, Long, Long, Long) =
+    Bench.withTempDir(s"graft-srehearse-state-${reps}x") { dir =>
+      Bench.withTempDir("graft-srehearse-state-ckpt") { runCkpt =>
+        val ev = Tables(spark, sfDir, "events")
+        val rep = explode(sequence(lit(0), lit(reps - 1))).as("r")
+        ev.select(col("event_type"), col("user_id"), col("ts_ns"), rep)
+          .select(col("event_type"),
+            (col("user_id") * reps + col("r")).as("k"),
+            timestamp_micros(expr("ts_ns div 1000")).as("ts"))
+          .repartition(16)
+          .write.mode("overwrite").parquet(dir)
+        val n = spark.read.parquet(dir).count()
+        val src = spark.readStream
+          .schema(spark.read.parquet(dir).schema)
+          .option("maxFilesPerTrigger", 4).parquet(dir)
+        val t0 = System.nanoTime()
+        val q = graft.streaming.CdcStream
+          .dedupedAcrossBatches(
+            src.withColumnRenamed("event_type", "target")
+              .withColumnRenamed("k", "entity_id"), "ts", "365 days")
+          .writeStream
+          .option("checkpointLocation", runCkpt)
+          .foreachBatch { (b: DataFrame, _: Long) =>
+            b.write.format("noop").mode("overwrite").save()
+          }
+          .start()
+        try {
+          q.processAllAvailable()
+          val wall = (System.nanoTime() - t0) / 1e9
+          Thread.sleep(500)
+          val states = q.recentProgress.flatMap(_.stateOperators)
+          val rows = if (states.isEmpty) -1L else states.map(_.numRowsTotal).max
+          val mem = if (states.isEmpty) -1L else states.map(_.memoryUsedBytes).max
+          (wall, n, rows, mem)
+        } finally q.stop()
       }
-      .start()
-    try {
-      q.processAllAvailable()
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500)
-      val states = q.recentProgress.flatMap(_.stateOperators)
-      val rows = if (states.isEmpty) -1L else states.map(_.numRowsTotal).max
-      val mem = if (states.isEmpty) -1L else states.map(_.memoryUsedBytes).max
-      (wall, n, rows, mem)
-    } finally q.stop()
-  }
+    }
 
   def main(args: Array[String]): Unit = {
     val base = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 10
+    val out = java.nio.file.Paths.get(
+      if (args.length > 2) args(2) else "target/scale_rehearsal_streaming.json")
     val spark = GraftSession.tune(SparkSession.builder()
         .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
         .config("spark.sql.shuffle.partitions",
@@ -124,59 +129,66 @@ object StreamRehearsal {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // --- CDC plane at 1x and reps x, best of 2 drains after a warmup (a
-    // single drain carries multi-second machine noise) ---
-    def stage(r: Int): (Long, String, String) = {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-srehearse-${r}x").toString
-      val (n, segments) = SparkEntry.stageCdcSegments(spark, base, dir, r)
-      (n, dir, SparkEntry.demoWatchConfig(segments))
+    // every directory and config staged in the system temp dir, deleted at the end
+    val staged = scala.collection.mutable.ArrayBuffer[java.io.File]()
+    def tempDir(prefix: String): String = {
+      val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+      staged += dir
+      dir.toString
     }
-    def drainBest(dir: String, config: String): Double =
-      Seq.fill(2)(Bench.drainWatch(spark, dir, config)).min
-    val (n1, seg1, cfg1) = stage(1)
-    val (nN, segN, cfgN) = stage(reps)
-    Bench.drainWatch(spark, seg1, cfg1) // warmup: codegen
-    val w1 = drainBest(seg1, cfg1)
-    val wN = drainBest(segN, cfgN)
-    System.err.println(f"[stream-rehearsal] cdc 1x: $n1 ev in $w1%.1fs (${n1 / w1}%.0f ev/s)")
-    System.err.println(f"[stream-rehearsal] cdc ${reps}x: $nN ev in $wN%.1fs (${nN / wN}%.0f ev/s)")
+    val json = try {
+      // --- CDC plane at 1x and reps x, best of 2 drains after a warmup (a
+      // single drain carries multi-second machine noise) ---
+      def stage(r: Int): (Long, String, String) = {
+        val dir = tempDir(s"graft-srehearse-${r}x")
+        val (n, segments) = SparkEntry.stageCdcSegments(spark, base, dir, r)
+        val config = SparkEntry.demoWatchConfig(segments)
+        staged += new java.io.File(config)
+        (n, dir, config)
+      }
+      def drainBest(dir: String, config: String): Double =
+        Seq.fill(2)(Bench.drainWatch(spark, dir, config)).min
+      val (n1, seg1, cfg1) = stage(1)
+      val (nN, segN, cfgN) = stage(reps)
+      Bench.drainWatch(spark, seg1, cfg1) // warmup: codegen
+      val w1 = drainBest(seg1, cfg1)
+      val wN = drainBest(segN, cfgN)
+      System.err.println(f"[stream-rehearsal] cdc 1x: $n1 ev in $w1%.1fs (${n1 / w1}%.0f ev/s)")
+      System.err.println(f"[stream-rehearsal] cdc ${reps}x: $nN ev in $wN%.1fs (${nN / wN}%.0f ev/s)")
 
-    // --- ingest gate at 1x and reps x (reuse ScaleRehearsal's synthesized
-    // documents so the replica semantics match the batch rehearsal) ---
-    val out = java.nio.file.Files
-      .createTempDirectory(s"graft-srehearse-docs").toString
-    ScaleRehearsal.synthesize(spark, base, out, reps)
-    // the file-stream source requires a DIRECTORY; the base table is a
-    // single parquet file, so stage a directory copy (the synthesized
-    // scaled table is already a directory of part files)
-    val baseDocs = java.nio.file.Files
-      .createTempDirectory("graft-srehearse-basedocs").toString
-    spark.read.parquet(s"$base/documents.parquet")
-      .repartition(8).write.mode("overwrite").parquet(baseDocs)
-    val bigDocs = s"$out/documents.parquet"
-    val schema = spark.read.parquet(baseDocs).schema
-    val bigSchema = spark.read.parquet(bigDocs).schema
-    val (gw0, _, _) = replayGate(spark, baseDocs, "warm", schema)
-    val (gw1, acc1, idx1) = replayGate(spark, baseDocs, "b1", schema)
-    val (gwN, accN, idxN) = replayGate(spark, bigDocs, s"b$reps", bigSchema)
-    val d1 = spark.read.parquet(baseDocs).count()
-    val dN = spark.read.parquet(bigDocs).count()
-    System.err.println(f"[stream-rehearsal] gate 1x: $d1 docs in $gw1%.1fs " +
-      f"(warm $gw0%.1fs, accepted=$acc1, index rows=$idx1)")
-    System.err.println(f"[stream-rehearsal] gate ${reps}x: $dN docs in " +
-      f"$gwN%.1fs (accepted=$accN, index rows=$idxN)")
+      // --- ingest gate at 1x and reps x (reuse ScaleRehearsal's synthesized
+      // documents so the replica semantics match the batch rehearsal) ---
+      val docs = tempDir("graft-srehearse-docs")
+      ScaleRehearsal.synthesize(spark, base, docs, reps)
+      // the file-stream source requires a DIRECTORY; the base table is a
+      // single parquet file, so stage a directory copy (the synthesized
+      // scaled table is already a directory of part files)
+      val baseDocs = tempDir("graft-srehearse-basedocs")
+      spark.read.parquet(s"$base/documents.parquet")
+        .repartition(8).write.mode("overwrite").parquet(baseDocs)
+      val bigDocs = s"$docs/documents.parquet"
+      val schema = spark.read.parquet(baseDocs).schema
+      val bigSchema = spark.read.parquet(bigDocs).schema
+      val (gw0, _, _) = replayGate(spark, baseDocs, "warm", schema)
+      val (gw1, acc1, idx1) = replayGate(spark, baseDocs, "b1", schema)
+      val (gwN, accN, idxN) = replayGate(spark, bigDocs, s"b$reps", bigSchema)
+      val d1 = spark.read.parquet(baseDocs).count()
+      val dN = spark.read.parquet(bigDocs).count()
+      System.err.println(f"[stream-rehearsal] gate 1x: $d1 docs in $gw1%.1fs " +
+        f"(warm $gw0%.1fs, accepted=$acc1, index rows=$idx1)")
+      System.err.println(f"[stream-rehearsal] gate ${reps}x: $dN docs in " +
+        f"$gwN%.1fs (accepted=$accN, index rows=$idxN)")
 
-    // --- stateful cross-batch dedupe (the watermark path) at 1x / reps x ---
-    replayStatefulDedupe(spark, base, 1) // warmup
-    val (sw1, sn1, srows1, smem1) = replayStatefulDedupe(spark, base, 1)
-    val (swN, snN, srowsN, smemN) = replayStatefulDedupe(spark, base, reps)
-    System.err.println(f"[stream-rehearsal] stateful 1x: $sn1 ev in $sw1%.1fs " +
-      f"(state rows=$srows1 mem=$smem1)")
-    System.err.println(f"[stream-rehearsal] stateful ${reps}x: $snN ev in " +
-      f"$swN%.1fs (state rows=$srowsN mem=$smemN)")
+      // --- stateful cross-batch dedupe (the watermark path) at 1x / reps x ---
+      replayStatefulDedupe(spark, base, 1) // warmup
+      val (sw1, sn1, srows1, smem1) = replayStatefulDedupe(spark, base, 1)
+      val (swN, snN, srowsN, smemN) = replayStatefulDedupe(spark, base, reps)
+      System.err.println(f"[stream-rehearsal] stateful 1x: $sn1 ev in $sw1%.1fs " +
+        f"(state rows=$srows1 mem=$smem1)")
+      System.err.println(f"[stream-rehearsal] stateful ${reps}x: $snN ev in " +
+        f"$swN%.1fs (state rows=$srowsN mem=$smemN)")
 
-    def r3(v: Double) = math.round(v * 1000) / 1000.0
-    val json =
+      def r3(v: Double) = math.round(v * 1000) / 1000.0
       s"""{"base_sf":"$base","scaled_reps":$reps,""" +
       s""""state_store":"rocksdb",""" +
       s""""cdc":{"base":{"events":$n1,"sec":${r3(w1)},"events_per_sec":${(n1 / w1).round}},""" +
@@ -191,12 +203,9 @@ object StreamRehearsal {
       s""""accepted":$acc1,"index_rows":$idx1},""" +
       s""""scaled":{"docs":$dN,"sec":${r3(gwN)},"docs_per_sec":${(dN / gwN).round},""" +
       s""""accepted":$accN,"index_rows":$idxN}}}""" + "\n"
-    for (d <- Seq("target", "bench")) {
-      val dir = java.nio.file.Paths.get(d)
-      java.nio.file.Files.createDirectories(dir)
-      java.nio.file.Files.writeString(
-        dir.resolve("scale_rehearsal_streaming.json"), json)
-    }
+    } finally staged.foreach(FileUtils.deleteQuietly)
+    java.nio.file.Files.createDirectories(out.toAbsolutePath.getParent)
+    java.nio.file.Files.writeString(out, json)
     try spark.stop() catch { case _: Throwable => () }
     println(json)
   }

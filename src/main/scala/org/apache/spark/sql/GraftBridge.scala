@@ -1,6 +1,9 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.streaming.sources.ForeachBatchSink
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.util.SystemClock
 
 /** Bridge into the `private[sql]` Column↔Expression converters — the standard
   * pattern used by external Spark connectors/extensions to build `Column`s
@@ -21,4 +24,38 @@ object GraftBridge {
   def withSession(df: DataFrame, session: SparkSession): DataFrame =
     classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession],
       df.queryExecution.analyzed)
+
+  /** `df.writeStream.foreachBatch(writer).trigger(ProcessingTime(intervalMs))
+    * .option("checkpointLocation", checkpointDir).start()`, except that the
+    * interval counts from the start of each trigger. Spark's processing-time
+    * trigger fires on the multiples of the interval since 1970, so where in
+    * the interval the query happened to start decides which epochs of a
+    * catch-up start back to back and which wait. Here trigger k+1 starts
+    * `intervalMs` after trigger k started (the first counts from the query's
+    * start), or as soon as trigger k ends if it ran longer than that.
+    */
+  def startForeachBatch(df: DataFrame, checkpointDir: String, intervalMs: Long)(
+      writer: (DataFrame, Long) => Unit): StreamingQuery = {
+    require(df.isStreaming, "startForeachBatch needs a streaming DataFrame")
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    ds.sparkSession.sessionState.streamingQueryManager.startQuery(
+      userSpecifiedName = None, userSpecifiedCheckpointLocation = Some(checkpointDir),
+      df = ds, extraOptions = Map("checkpointLocation" -> checkpointDir),
+      sink = new ForeachBatchSink[Row](writer, ds.exprEnc), outputMode = OutputMode.Append(),
+      trigger = Trigger.ProcessingTime(intervalMs), triggerClock = new TriggerStartClock(intervalMs))
+  }
+
+  /** The system clock, except that the processing-time trigger's wait for
+    * its next grid point becomes a wait for `intervalMs` after the current
+    * trigger's start (the return of the previous wait). Spark calls
+    * `waitTillTime` only from that trigger loop; every timestamp it reports
+    * still reads the system clock.
+    */
+  private[sql] final class TriggerStartClock(intervalMs: Long) extends SystemClock {
+    @volatile private var triggerStartMs = getTimeMillis()
+    override def waitTillTime(targetTime: Long): Long = {
+      triggerStartMs = super.waitTillTime(triggerStartMs + intervalMs)
+      triggerStartMs
+    }
+  }
 }

@@ -25,13 +25,9 @@ class CdcPlaneEquivalenceSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  // ---- the reference plane ----
+  import CdcPlaneEquivalenceSpec.referenceRoute
 
-  private def referenceRoute(records: DataFrame, routes: DataFrame): DataFrame =
-    records.join(broadcast(routes), records("table") === routes("table"), "inner")
-      .select(records("id"), records("table"), routes("column"), routes("target"),
-        element_at(from_json(records("envelope"), Envelope.schema).getField("after"),
-          routes("column")).try_cast("int").as("entity_id"))
+  // ---- the reference plane ----
 
   /** Numeric offset: (ms, seq) of a `ms-seq` string, or the integral id. */
   private def offset(id: Column, text: Boolean): Column =
@@ -169,4 +165,16 @@ class CdcPlaneEquivalenceSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val plan = executed(RedisStreamsSink.perTarget(CdcPipeline.run(scanned(textRecords), routes, 2)))
     assert(collect(plan) { case s: ShuffleExchangeLike => s }.size == 1, plan.toString)
   }
+}
+
+object CdcPlaneEquivalenceSpec {
+
+  /** The reference route: a broadcast join to the routes, then each edge's
+    * column read from `from_json`'s `after` map and cast to int.
+    */
+  def referenceRoute(records: DataFrame, routes: DataFrame): DataFrame =
+    records.join(broadcast(routes), records("table") === routes("table"), "inner")
+      .select(records("id"), records("table"), routes("column"), routes("target"),
+        element_at(from_json(records("envelope"), Envelope.schema).getField("after"),
+          routes("column")).try_cast("int").as("entity_id"))
 }

@@ -41,6 +41,17 @@ class RedisStreamsSourceSpec extends AnyFunSuite {
     assert(RedisId.parse("3-7").toString == "3-7")
   }
 
+  test("RedisId's UTF-8 bytes, the source's id column, are its toString's") {
+    val edges = Seq(0L, 1L, 9L, 10L, 99L, 100L, 1700000000000L, Long.MaxValue, Long.MinValue,
+      Long.MinValue + 9, -10L, -1L)
+    val r = new scala.util.Random(11)
+    val ids = (for (ms <- edges; seq <- edges) yield RedisId(ms, seq)) ++
+      Seq.fill(1000)(RedisId(r.nextLong(), r.nextLong())) ++
+      Seq.fill(1000)(RedisId(r.nextLong() >>> r.nextInt(64), r.nextLong() >>> r.nextInt(64)))
+    for (id <- ids) assert(new String(id.utf8, "UTF-8") == id.toString)
+    assert(new String(RedisId.Max.utf8, "UTF-8") == "18446744073709551615-18446744073709551615")
+  }
+
   test("RedisOffset json round-trips, including quoted/escaped stream names") {
     val o = RedisOffset(Map("m2.m2.catalog_product_entity" -> RedisId(12, 3),
       """we"ird\name""" -> RedisId(1, 0)))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{Main, SparkEntry, TestSpark}
+import graft.{Bench, Main, SparkEntry, TestSpark}
 import graft.sources.{InMemoryRedis, RedisId}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -39,5 +39,19 @@ class StagedEventsWatchSpec extends AnyFunSuite {
       ).toMap
       assert(got == want)
     } finally InMemoryRedis.reset(target)
+  }
+
+  test("Bench.drainWatch leaves nothing behind in the temp dir") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def entries: Set[String] = tmp.list().toSet
+    Bench.withTempDir("graft-staged-segs") { dir =>
+      val (_, segments) = SparkEntry.stageCdcSegments(spark, TestSpark.sf0001, dir)
+      val config = new java.io.File(SparkEntry.demoWatchConfig(segments))
+      try {
+        val before = entries
+        assert(Bench.drainWatch(spark, dir, config.toString) > 0)
+        assert(entries -- before == Set.empty)
+      } finally config.delete()
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft.cdc
 
 import java.nio.ByteBuffer
 
+import graft.sources.RedisId
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.GraftBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -12,6 +13,7 @@ import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Working buffer of [[KeepFirstChunksAgg]]: entity id → its first offset,
@@ -75,7 +77,7 @@ final class FirstOffsets(expected: Int = 8) {
   *     order as a JSON array: `[(chunk_no, ids, n_ids)]`.
   *
   * Offsets order numerically, never as text: an integral offset compares as
-  * a number, a `ms-seq` string as [[graft.sources.RedisId]] does (unsigned
+  * a number, a `ms-seq` string as the [[RedisId]] it parses to (unsigned
   * ms, then seq). A null offset sorts first. The entity id breaks ties (the
   * same offset in two streams), so a replayed epoch cuts the same chunks
   * whichever order its partial buffers merge in. Null entities are skipped.
@@ -185,26 +187,21 @@ case class KeepFirstChunksAgg(
 }
 
 object KeepFirstChunksAgg {
-  /** Offer a `ms-seq` (or bare `ms`) offset, read straight from the UTF-8
-    * bytes. Both parts are unsigned, as in Redis; flipping the sign bit makes
-    * the signed comparison in [[FirstOffsets]] an unsigned one.
+  /** Offer a `ms-seq` (or bare `ms`) offset, read by [[RedisId.parse]]
+    * from the UTF-8 bytes in place. Both parts are unsigned, as in Redis;
+    * flipping the sign bit makes the signed comparison in [[FirstOffsets]]
+    * an unsigned one.
     */
   private def offerText(buf: FirstOffsets, entity: Long, s: UTF8String): Unit = {
-    val n = s.numBytes
-    var ms, seq = 0L
-    var dash = -1
-    var i = 0
-    while (i < n) {
-      val b = s.getByte(i)
-      if (b == '-' && dash < 0 && i > 0) dash = i
-      else if (b >= '0' && b <= '9') {
-        if (dash < 0) ms = ms * 10 + (b - '0') else seq = seq * 10 + (b - '0')
-      } else throw new IllegalArgumentException(s"offset is not a ms-seq id: '$s'")
-      i += 1
+    val id = s.getBaseObject match {
+      case b: Array[Byte] =>
+        val from = (s.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt
+        RedisId.parse(b, from, from + s.numBytes)
+      case _ =>
+        val b = s.getBytes
+        RedisId.parse(b, 0, b.length)
     }
-    if (n == 0 || dash == n - 1)
-      throw new IllegalArgumentException(s"offset is not a ms-seq id: '$s'")
-    buf.offer(entity, ms ^ Long.MinValue, seq ^ Long.MinValue)
+    buf.offer(entity, id.ms ^ Long.MinValue, id.seq ^ Long.MinValue)
   }
 
   /** `[id,id,...]`, the reference's `{"ids": "[1,2,3]"}` payload. */

@@ -18,6 +18,11 @@ import org.apache.spark.sql.functions._
   *     surviving row are needed without enumerating them. One shuffle, no
   *     partial agg — use only when the row is wide and dynamic.
   *
+  * Both order by `order` as Spark compares it, so a `ms-seq` text offset
+  * orders as text here ("10-0" < "9-0"). The plane's aggregate reads such
+  * offsets with the one `ms-seq` decoder, [[graft.sources.RedisId.parse]];
+  * `after.<column>` likewise has one decoder, [[Envelope.afterColumns]].
+  *
   * Cross-window semantics: the reference's dedupe state RESETS at each buffer
   * flush (an id re-arriving after a flush is emitted again — asserted by its
   * own tests, SURVEY §2.4 D1). Batch mode = one window; streaming mode applies

@@ -14,9 +14,11 @@ import org.apache.spark.sql.types._
   *     it reads an entry, so the envelope reaches these functions as a string.
   *   - only `after.<column>` is read, and it must be an integer.
   *
-  * The plane reads its routed columns with [[afterColumns]]: one walk over
-  * each envelope's bytes, `from_json` ([[parse]]) only for rows the walk
-  * cannot vouch for, the same ids as `from_json` on every input.
+  * [[afterColumns]] is the one decoder of `after.<column>`: the plane reads
+  * its routed columns with it, and [[entityId]] and [[rejects]] are built on
+  * it, so the audit flags exactly the rows the plane drops. It is one walk
+  * over each envelope's bytes, with `from_json` ([[parse]]) only for rows
+  * the walk cannot vouch for: the same ids as `from_json` on every input.
   */
 object Envelope {
 
@@ -42,13 +44,14 @@ object Envelope {
     column(AfterColumns(expression(envelopeJson),
       expression(parse(envelopeJson).getField("after")), columns))
 
-  /** Extract `after.<field>` as the integer entity id — the strict
-    * integer-cast semantics of RedisSource.java:66 become a try_cast that
-    * yields NULL on non-integers (ANSI-safe: a poison record must not kill a
-    * 100 TB job); use [[rejects]] for the FAILFAST-style audit.
+  /** Extract `after.<field>` as the integer entity id, decoded as the plane
+    * decodes it ([[afterColumns]]) — the strict integer-cast semantics of
+    * RedisSource.java:66 become a try_cast that yields NULL on non-integers
+    * (ANSI-safe: a poison record must not kill a 100 TB job); use
+    * [[rejects]] for the FAILFAST-style audit.
     */
   def entityId(envelopeJson: Column, field: String): Column =
-    get_json_object(envelopeJson, s"$$.after.$field").try_cast(IntegerType)
+    afterColumns(envelopeJson, Seq(field)).getItem(0).try_cast(IntegerType)
 
   /** Rows the reference would have crashed on (missing `after.<field>` or a
     * non-integer value): surfaced as a filterable flag instead of an error

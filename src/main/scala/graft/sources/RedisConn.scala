@@ -2,9 +2,9 @@ package graft.sources
 
 import java.io.{BufferedOutputStream, InputStream}
 import java.net.Socket
-import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
 
-/** A Redis stream entry id, `ms-seq` (two unsigned-ish longs). String order
+/** A Redis stream entry id, `ms-seq` (two unsigned 64-bit parts). String order
   * is NOT entry order ("10-0" < "9-0" lexicographically) — all offset math
   * goes through this numeric ordering, mirroring Redis's RecordId total
   * order per stream (the reference keys its in-flight ack countdowns on it,
@@ -15,8 +15,7 @@ final case class RedisId(ms: Long, seq: Long) extends Ordered[RedisId] {
     val c = java.lang.Long.compareUnsigned(ms, that.ms)
     if (c != 0) c else java.lang.Long.compareUnsigned(seq, that.seq)
   }
-  override def toString: String = s"${java.lang.Long.toUnsignedString(ms)}-" +
-    java.lang.Long.toUnsignedString(seq)
+  override def toString: String = new String(utf8, US_ASCII)
 
   /** [[toString]]'s UTF-8 bytes, written digit by digit with no String. */
   def utf8: Array[Byte] = {
@@ -85,12 +84,43 @@ object RedisId {
     out(i + 1) = DigitPairs(2 * r + 1)
   }
 
-  def parse(s: String): RedisId = s.split("-") match {
-    case Array(ms, seq) => RedisId(java.lang.Long.parseUnsignedLong(ms),
-      java.lang.Long.parseUnsignedLong(seq))
-    case Array(ms) => RedisId(java.lang.Long.parseUnsignedLong(ms), 0L)
-    case _ => throw new IllegalArgumentException(s"bad redis id: $s")
+  /** [[parse]] of `s`'s UTF-8 bytes. */
+  def parse(s: String): RedisId = {
+    val b = s.getBytes(UTF_8)
+    parse(b, 0, b.length)
   }
+
+  /** The id written as ASCII in `b(from until until)`: `ms-seq`, or a bare
+    * `ms` (`seq` 0), each part one or more decimal digits of at most
+    * 2^64 - 1. The one reader of the format: checkpoint offsets, server
+    * replies and the dedupe's text offsets all go through it, so an id
+    * orders the same wherever it is read.
+    */
+  def parse(b: Array[Byte], from: Int, until: Int): RedisId = {
+    def part(lo: Int, hi: Int): Long = {
+      if (lo == hi) throw bad(b, from, until)
+      var v = 0L
+      var i = lo
+      while (i < hi) {
+        val d = b(i) - '0'
+        if (d < 0 || d > 9 || java.lang.Long.compareUnsigned(v, MaxDiv10) > 0 || v == MaxDiv10 && d > 5)
+          throw bad(b, from, until)
+        v = v * 10 + d
+        i += 1
+      }
+      v
+    }
+    var dash = from
+    while (dash < until && b(dash) != '-') dash += 1
+    if (dash == until) RedisId(part(from, until), 0L)
+    else RedisId(part(from, dash), part(dash + 1, until))
+  }
+
+  /** (2^64 - 1) / 10: a part above it cannot take another digit. */
+  private final val MaxDiv10 = 1844674407370955161L
+
+  private def bad(b: Array[Byte], from: Int, until: Int): IllegalArgumentException =
+    new IllegalArgumentException(s"not a ms-seq id: '${new String(b, from, until - from, UTF_8)}'")
 }
 
 /** The handful of Redis Streams commands the connector needs — the exact
@@ -558,19 +588,22 @@ object RespRedis {
 
 /** RESP2 reply reader over one unsynchronized buffer (one reader per
   * connection, used under the connection's lock). Lengths and integers are
-  * parsed as numbers; bulk payloads are copied out, compared or skipped in
-  * place, across buffer refills.
+  * parsed as numbers and entry ids by [[RedisId.parse]]; bulk payloads are
+  * copied out, compared or skipped in place, across buffer refills.
   */
 private final class RespReader(in: InputStream) {
   private val buf = new Array[Byte](RespReader.BufferSize)
   private var pos = 0
   private var lim = 0
 
-  private def fill(): Unit = {
-    val n = in.read(buf, 0, buf.length)
+  /** Reads more bytes into the buffer after `lim`. */
+  private def more(): Unit = {
+    val n = in.read(buf, lim, buf.length - lim)
     if (n < 0) throw new java.io.EOFException("redis connection closed")
-    pos = 0; lim = n
+    lim += n
   }
+
+  private def fill(): Unit = { pos = 0; lim = 0; more() }
 
   private def byte(): Int = {
     while (pos == lim) fill()
@@ -666,25 +699,21 @@ private final class RespReader(in: InputStream) {
     }
   }
 
-  /** The next bulk string parsed as an `ms-seq` entry id. */
+  /** The next bulk string read by [[RedisId.parse]] in the buffer. */
   def id(): RedisId = {
     val n = header('$')
-    var ms = 0L
-    var seq = 0L
-    var dash = -1
-    var i = 0
-    while (i < n) {
-      val b = byte()
-      if (b == '-' && dash < 0 && i > 0) dash = i
-      else if (b >= '0' && b <= '9') {
-        // unsigned 64-bit: the wrap of v * 10 + d is the value mod 2^64
-        if (dash < 0) ms = ms * 10 + (b - '0') else seq = seq * 10 + (b - '0')
-      } else throw new IllegalStateException(s"bad redis id byte: $b")
-      i += 1
+    if (n < 0 || n > buf.length) throw new IllegalStateException(s"bad redis id length: $n")
+    if (lim - pos < n) {
+      // move the partial id to the front of the buffer and read the rest
+      System.arraycopy(buf, pos, buf, 0, lim - pos)
+      lim -= pos
+      pos = 0
+      while (lim < n) more()
     }
-    if (n <= 0 || dash == n - 1) throw new IllegalStateException("bad redis id")
+    val id = RedisId.parse(buf, pos, pos + n.toInt)
+    pos += n.toInt
     crlf()
-    RedisId(ms, seq)
+    id
   }
 
   /** One whole reply: simple and bulk strings as `String`, integers as

@@ -3,11 +3,12 @@ package graft.cdc
 import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.TestSpark
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `CdcPipeline.parseAndRoute`'s `entity_id` against the reference route
+/** `CdcPipeline.parseAndRoute`'s `entity_id`, `Envelope.entityId` and
+  * `Envelope.rejects` against the reference route
   * (`element_at(from_json(envelope).after, column).try_cast("int")`,
   * [[CdcPlaneEquivalenceSpec.referenceRoute]]) on every input: a table of
   * the decode rules, each with the id `from_json` gives, and a seeded
@@ -24,7 +25,7 @@ class EnvelopeParitySpec extends AnyFunSuite {
     ("t", "entity_id", "t1"), ("t", "entity_id", "t2"), ("t", "b", "t3"),
     ("compact", "entity_id", "t1"), ("compact", "entity_id", "t2"),
     ("extended", "entity_id", "t1"), ("extended", "c3", "t4"),
-    ("events", "k", "t1")).toDF("table", "column", "target")
+    ("t", "k", "t5"), ("events", "k", "t1")).toDF("table", "column", "target")
 
   /** (id, table, envelope bytes) as the plane's input, the envelope cast from
     * binary so its bytes reach the plane unchanged; `scan` puts the records
@@ -43,18 +44,38 @@ class EnvelopeParitySpec extends AnyFunSuite {
         (if (r.isNullAt(3)) None else Some(r.getInt(3)))
     }.toMap
 
-  /** parseAndRoute and the reference route agree on every (record, edge). */
+  /** `f(column)` as `entity_id` for each (record, edge) of the routes: the
+    * route of [[Envelope.entityId]] and [[Envelope.rejects]], which take
+    * their column by name.
+    */
+  private def byColumn(recs: DataFrame)(f: String => Column): DataFrame =
+    routes.select("column").distinct().as[String].collect().toSeq.map { c =>
+      recs.join(broadcast(routes.filter(col("column") === c)), "table")
+        .select(col("id"), col("column"), col("target"), f(c).as("entity_id"))
+    }.reduce(_ union _)
+
+  /** parseAndRoute, entityId and rejects agree with the reference route on
+    * every (record, edge); parseAndRoute's ids are returned. */
   private def assertParity(rows: Seq[(Long, String, Array[Byte])], scan: Boolean)
       : Map[(Long, String, String), Option[Int]] = {
     val recs = records(rows, scan)
     val got = routed(CdcPipeline.parseAndRoute(recs, routes))
     val want = routed(referenceRoute(recs, routes))
     val byId = rows.map(r => r._1 -> r._3).toMap
-    val diffs = (got.keySet ++ want.keySet).toSeq.sorted
-      .filter(k => got.get(k) != want.get(k))
-      .map(k => s"$k: plane ${got.get(k)} reference ${want.get(k)} for " +
-        new String(byId(k._1), UTF_8).take(200))
-    assert(diffs.isEmpty, s"${diffs.size} differences, first: ${diffs.take(5).mkString("\n")}")
+    def diffs(route: String, got: Map[(Long, String, String), Any],
+              want: Map[(Long, String, String), Any]): Seq[String] =
+      (got.keySet ++ want.keySet).toSeq.sorted
+        .filter(k => got.get(k) != want.get(k))
+        .map(k => s"$route $k: ${got.get(k)} reference ${want.get(k)} for " +
+          new String(byId(k._1), UTF_8).take(200))
+    val all = diffs("parseAndRoute", got, want) ++
+      diffs("Envelope.entityId", routed(byColumn(recs)(Envelope.entityId(col("envelope"), _))), want) ++
+      diffs("Envelope.rejects",
+        byColumn(recs)(Envelope.rejects(col("envelope"), _)).collect().map { r =>
+          (r.getLong(0), r.getString(1), r.getString(2)) -> r.getBoolean(3)
+        }.toMap,
+        want.map { case (k, id) => k -> id.isEmpty })
+    assert(all.isEmpty, s"${all.size} differences, first: ${all.take(5).mkString("\n")}")
     got
   }
 
@@ -92,6 +113,7 @@ object EnvelopeParitySpec {
     ("second routed column present", env("""{"b":"x","entity_id":7}"""), Some(7)),
     ("duplicate key in after: first wins", env("""{"entity_id":3,"entity_id":4}"""), Some(3)),
     ("duplicate after: last wins", b("""{"after":{"entity_id":3},"after":{"entity_id":4}}"""), Some(4)),
+    ("duplicate after, routed k: last wins, no entity_id", b("""{"after":{"k":1},"after":{"k":2}}"""), None),
     ("duplicate after: last is null", b("""{"after":{"entity_id":3},"after":null}"""), None),
     ("duplicate after: last is not an object", b("""{"after":{"entity_id":3},"after":5}"""), Some(3)),
     ("after null", env("null"), None),

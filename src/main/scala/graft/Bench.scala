@@ -91,38 +91,49 @@ object Bench {
   // spread_retime_skipped) but the run still EMITS.
   private val RetimeCap = 8
 
-  /** Streaming-plane throughput: the events staged as `watch`'s default
-    * source reads them ([[SparkEntry.stageCdcSegments]]), drained through
-    * `Main.watch` at [[SparkEntry.demoWatchConfig]] in 4 epochs. Measures
-    * the stream from start to drain (setup/staging excluded). The staged
-    * segments and the config are deleted afterwards.
+  /** Streaming-plane throughput: the events staged as `mem://` streams
+    * ([[withStagedEvents]]), drained through `Main.watch` at
+    * [[SparkEntry.demoWatchConfig]] in 4 epochs. Measures the stream from
+    * start to drain (setup/staging excluded).
     */
   private def streamingThroughput(spark: SparkSession, sfDir: String): Double =
-    withTempDir("graft-bench-segs") { segDir =>
-      val (nEvents, segments) = SparkEntry.stageCdcSegments(spark, sfDir, segDir)
-      val config = SparkEntry.demoWatchConfig(segments)
-      // the simple-mode source leaves segments in place, so the staged stream
-      // can be drained repeatedly (fresh checkpoint per run): run 1 warms
+    withStagedEvents(spark, sfDir) { (nEvents, in, config) =>
+      // the simple-mode source keeps its entries, so the staged streams can
+      // be drained repeatedly (fresh checkpoint per run): run 1 warms
       // codegen/JIT for the per-epoch plan (measured 2.5x on the first
       // micro-batch), later runs are steady state — the same warmup
       // methodology as the batch queries in main().
-      try {
-        drainWatch(spark, segDir, config) // warmup
-        nEvents / (1 to StreamTimedRuns).map(_ => drainWatch(spark, segDir, config)).min
-      } finally FileUtils.deleteQuietly(new java.io.File(config))
+      drainWatch(spark, in, config) // warmup
+      nEvents / (1 to StreamTimedRuns).map(_ => drainWatch(spark, in, config)).min
     }
 
-  /** One `Main.watch` run of `config` over the segment directory `segDir`,
-    * drained to the end: graft-cdc source, XADD sink into a fresh in-memory
-    * target (`mem://`), checkpoint in a fresh temp dir; the target and the
-    * checkpoint are dropped afterwards. Returns the wall seconds from start
-    * to stop.
+  /** Stages the events of `sfDir` (`reps`x, [[SparkEntry.stageCdcStreams]])
+    * into a fresh `mem://` store, writes their
+    * [[SparkEntry.demoWatchConfig]], and runs `body(events, in, config)`
+    * with the store's URL; the store is dropped and the config deleted
+    * afterwards, whether `body` returns or throws.
     */
-  private[graft] def drainWatch(spark: SparkSession, segDir: String, config: String): Double =
+  private[graft] def withStagedEvents[A](spark: SparkSession, sfDir: String, reps: Int = 1)(
+      body: (Long, String, String) => A): A = {
+    val store = s"graft-staged-${java.util.UUID.randomUUID()}"
+    try {
+      val (events, longest) = SparkEntry.stageCdcStreams(spark, sfDir, store, reps)
+      val config = new java.io.File(SparkEntry.demoWatchConfig(longest))
+      try body(events, s"mem://$store", config.toString)
+      finally FileUtils.deleteQuietly(config)
+    } finally graft.sources.InMemoryRedis.reset(store)
+  }
+
+  /** One `Main.watch` run of `config` over the source URL `in`, drained to
+    * the end: XADD sink into a fresh in-memory target (`mem://`),
+    * checkpoint in a fresh temp dir; the target and the checkpoint are
+    * dropped afterwards. Returns the wall seconds from start to stop.
+    */
+  private[graft] def drainWatch(spark: SparkSession, in: String, config: String): Double =
     withTempDir("graft-bench-ckpt") { ckpt =>
       val target = s"graft-drain-${java.util.UUID.randomUUID()}"
       val t0 = System.nanoTime()
-      val q = Main.watch(spark, Array("watch", "--config", config, "--in", segDir,
+      val q = Main.watch(spark, Array("watch", "--config", config, "--in", in,
         "--checkpoint", ckpt, "--sink", "redis", "--target-url", s"mem://$target"))
       try q.processAllAvailable()
       finally { q.stop(); graft.sources.InMemoryRedis.reset(target) }

@@ -9,16 +9,16 @@ import org.apache.spark.sql.streaming.StreamingQuery
 /** CLI — the engine's equivalent of the reference's Spring Shell commands
   * (Application.java + WatchStream.watch + DebeziumConfiguration.generate):
   *
-  *   watch    --config <cfg> --in <dir-or-url> [--out <parquet-dir>]
-  *            --checkpoint <dir> [--once] [--source graft-cdc|redis]
-  *            [--sink parquet|redis] [--target-url <url>]
-  *            runs the streaming CDC plane. Sources are pluggable on the
-  *            shared `id, table, envelope` contract: the segment-directory
-  *            source (default) or the Redis Streams connector
-  *            (`--source redis`, XRANGE reads acked on epoch commit). Sinks:
-  *            per-epoch parquet (default, needs --out) or the reference's
-  *            XADD output plane (`--sink redis`, RedisStreamsSink,
-  *            WatchStream.java:261-295).
+  *   watch    --config <cfg> [--in <url>] [--out <parquet-dir>]
+  *            --checkpoint <dir> [--once] [--sink parquet|redis]
+  *            [--target-url <url>]
+  *            runs the streaming CDC plane on the Redis Streams source
+  *            (RedisStreamsSource: one stream per watched table, XRANGE
+  *            reads acked on epoch commit). `--in` is its `mem://<name>` or
+  *            `redis://host[:port][/db]` URL, by default the config's
+  *            `source.connection`. Sinks: per-epoch parquet (default, needs
+  *            --out) or the reference's XADD output plane (`--sink redis`,
+  *            RedisStreamsSink, WatchStream.java:261-295).
   *   watch    --ingest-gate --in <docs-dir> --checkpoint <dir>
   *            --corpus-table <t> --index-table <t> --map-table <t>
   *            [--format json|parquet] [--gate-threshold 0.8]
@@ -62,7 +62,8 @@ object Main {
   /** Starts the CDC plane of `watch` (source → [[CdcStream]] → sink) on
     * `spark` and returns the running query; the caller owns the session and
     * decides between draining (`--once`) and awaiting termination. A missing
-    * or unknown flag value is an IllegalArgumentException.
+    * or unknown flag value, or an `--in` that is not a `mem://` or
+    * `redis://` URL, is an IllegalArgumentException.
     *
     * Config knobs: `buffers.source.size` caps each source stream per
     * trigger, `buffers.dedupe.time` is the trigger interval (counted from
@@ -76,36 +77,21 @@ object Main {
       s"buffers.source.size must be positive, got ${cfg.buffers.source.size}")
     require(cfg.buffers.target.size > 0,
       s"buffers.target.size must be positive, got ${cfg.buffers.target.size}")
-    val in = req(args, "--in")
+    val in = opt(args, "--in").getOrElse(cfg.source.connection.url)
     val ckpt = req(args, "--checkpoint")
-    val records = opt(args, "--source").getOrElse("graft-cdc") match {
-      case "graft-cdc" =>
-        // DSv2 segment-log source: epoch-commit ack + delete-mode
-        // retention (the XACK/XDEL analogue; sources/CdcDirectorySource)
-        spark.readStream.format("graft-cdc")
-          .option("path", in)
-          .option("acknowledge", cfg.source.acknowledge)
-          .option("maxSegmentsPerTrigger",
-            math.max(1, cfg.buffers.source.size / 1000))
-          .load()
-      case "redis" =>
-        // the reference's actual I/O plane: one stream per watched table
-        // named <source.prefix><table> (WatchStream.java:323), consumer
-        // group + XACK/XDEL handled by the DSv2 source. --in is the
-        // redis:// (or mem://) URL here.
-        val streams = cfg.mapping.keys.toSeq.sorted
-          .map(t => s"${cfg.source.prefix}$t").mkString(",")
-        spark.readStream.format("graft-redis")
-          .option("url", in)
-          .option("streams", streams)
-          .option("group", cfg.source.group)
-          .option("prefix", cfg.source.prefix)
-          .option("acknowledge", cfg.source.acknowledge)
-          .option("maxRecordsPerTrigger", cfg.buffers.source.size)
-          .load()
-      case other =>
-        throw new IllegalArgumentException(s"unknown --source $other (graft-cdc|redis)")
-    }
+    // the reference's I/O plane: one stream per watched table named
+    // <source.prefix><table> (WatchStream.java:323), consumer group +
+    // XACK/XDEL handled by the DSv2 source
+    val streams = cfg.mapping.keys.toSeq.sorted
+      .map(t => s"${cfg.source.prefix}$t").mkString(",")
+    val records = spark.readStream.format("graft-redis")
+      .option("url", in)
+      .option("streams", streams)
+      .option("group", cfg.source.group)
+      .option("prefix", cfg.source.prefix)
+      .option("acknowledge", cfg.source.acknowledge)
+      .option("maxRecordsPerTrigger", cfg.buffers.source.size)
+      .load()
     val writer: (DataFrame, Long) => Unit = opt(args, "--sink").getOrElse("parquet") match {
       case "parquet" =>
         val out = req(args, "--out")
@@ -114,8 +100,7 @@ object Main {
         // the reference's actual output plane: XADD id-array entries to
         // <target.prefix><target> with startup priming (WatchStream
         // .java:261-295). --target-url overrides the config's target.
-        val t = cfg.target.connection
-        val turl = opt(args, "--target-url").getOrElse(s"redis://${t.host}:${t.port}/${t.db}")
+        val turl = opt(args, "--target-url").getOrElse(cfg.target.connection.url)
         RedisStreamsSink.prime(turl, cfg.target.prefix,
           cfg.routes.map(_.target).distinct)
         RedisStreamsSink.writer(turl, cfg.target.prefix)

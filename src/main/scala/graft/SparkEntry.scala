@@ -3,7 +3,7 @@ package graft
 import graft.cdc.{Batcher, CdcPipeline, Dedupe}
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
 import graft.operators.{Dedup, Multimodal, RecordLinkage, Search, SimilaritySearch, TextMining, TimeSeriesOps}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -151,18 +151,19 @@ object SparkEntry {
       concat(lit("{\"before\": null, \"after\": "), col("props"), lit("}"))
         .as("envelope"))
 
-  /** Stages the events table as `watch`'s default source (`graft-cdc`)
-    * reads it: `<event_type>.<seq>.log` segments under `out`, one per
-    * (staging task, event type), seqs 1..n, each line a [[cdcRecords]]
-    * envelope. `reps` > 1 stages every event `reps` times with its numeric
-    * `k` re-keyed k → k*reps + r (injective for any reps; a digit append
-    * would collide past r = 9), so each replica keeps the base's duplicate
+  /** Stages the events table as `watch`'s source reads it: each event's
+    * [[cdcRecords]] envelope XADDed as a compact one-field body into the
+    * stream `<event_type>` of the `mem://<store>` store, from the executors
+    * (local mode shares the driver's JVM, so they write the driver's store).
+    * `reps` > 1 stages every event `reps` times with its numeric `k`
+    * re-keyed k → k*reps + r (injective for any reps; a digit append would
+    * collide past r = 9), so each replica keeps the base's duplicate
     * structure and dedupe holds reps× the keys; `reps` = 1 passes the events
-    * through unchanged. Returns (events staged, segments).
+    * through unchanged. Returns (events staged, entries of the longest
+    * stream).
     */
-  def stageCdcSegments(s: SparkSession, dir: String, out: String,
-                       reps: Int = 1): (Long, Int) = {
-    import java.nio.file.{Files, Paths}
+  def stageCdcStreams(s: SparkSession, dir: String, store: String,
+                      reps: Int = 1): (Long, Int) = {
     val recs = cdcRecords(s, dir)
     val lines =
       if (reps == 1) recs
@@ -174,29 +175,25 @@ object SparkEntry {
             regexp_replace(col("envelope"), lit(""""k":\s*\d+"""),
               concat(lit("\"k\": "), (k * reps + col("r")).cast("string")))).as("envelope"))
       }
-    val raw = s"$out/raw"
-    lines.select(col("table"), col("envelope").as("value")).repartition(8)
-      .write.partitionBy("table").text(raw)
-    val parts = for {
-      tableDir <- new java.io.File(raw).listFiles().toSeq if tableDir.isDirectory
-      f <- tableDir.listFiles().toSeq if f.getName.startsWith("part-")
-    } yield (f.getName, tableDir.getName.stripPrefix("table="), f)
-    parts.sortBy(p => (p._1, p._2)).zipWithIndex.foreach { case ((_, table, f), i) =>
-      Files.move(f.toPath, Paths.get(out, s"$table.${i + 1}.log"))
+    lines.select("table", "envelope").foreachPartition { (rows: Iterator[Row]) =>
+      val conn = graft.sources.InMemoryRedis.named(store)
+      rows.foreach(r => conn.xadd(r.getString(0), Seq("value" -> r.getString(1))))
     }
-    (t(s, dir, "events").count() * reps, parts.size)
+    val perStream = lines.groupBy("table").count().collect().map(_.getLong(1))
+    (perStream.sum, perStream.max.toInt)
   }
 
-  /** `watch`'s config for the demo topology over `segments` staged segments,
-    * written as JSON to a fresh temp file whose path it returns: the
-    * [[demoRouteRows]] mapping, a 50 ms trigger (`buffers.dedupe.time`),
-    * ⌈segments / 4⌉ segments per trigger (`buffers.source.size`, 1000 per
-    * segment) so the events arrive in 4 epochs, and ≤ 1000 ids per chunk.
+  /** `watch`'s config for the demo topology over staged streams whose
+    * longest holds `longest` entries, written as JSON to a fresh temp file
+    * whose path it returns: the [[demoRouteRows]] mapping, a 50 ms trigger
+    * (`buffers.dedupe.time`), ⌈longest / 4⌉ entries per stream per trigger
+    * (`buffers.source.size`) so the events arrive in 4 epochs, and ≤ 1000
+    * ids per chunk.
     */
-  def demoWatchConfig(segments: Int): String = {
+  def demoWatchConfig(longest: Int): String = {
     import graft.cdc.{Buffer, Buffers, CdcConfig}
     val cfg = CdcConfig(
-      buffers = Buffers(source = Buffer(1000 * ((segments + 3) / 4), 1000),
+      buffers = Buffers(source = Buffer((longest + 3) / 4, 1000),
         dedupe = Buffer(100000, 50), target = Buffer(1000, 1000)),
       mapping = demoRouteRows.groupMap(_._1)(r => (r._2, r._3))
         .map { case (table, cols) => table -> cols.groupMap(_._1)(_._2) })

@@ -14,7 +14,10 @@ import java.nio.file.{Files, Paths}
   * edges), lives on the driver, and is compiled into the fan-out expression
   * (see [[Routing]]) — never joined or shuffled.
   */
-final case class Connection(host: String = "127.0.0.1", port: Int = 6379, db: Int = 0)
+final case class Connection(host: String = "127.0.0.1", port: Int = 6379, db: Int = 0) {
+  /** The `redis://host:port/db` URL `watch` connects to. */
+  def url: String = s"redis://$host:$port/$db"
+}
 
 final case class SourceConf(
     format: String = "compact",          // compact | extended (ConfigParser.java:24)

@@ -191,12 +191,27 @@ object RedisConn {
   def noEnvelope(stream: String, id: RedisId): IllegalStateException =
     new IllegalStateException(s"extended-format entry $id in $stream lacks a 'value' field")
 
-  /** `mem://<name>` → shared JVM-local fake (CI; one instance per name);
-    * `redis://host[:port][/db]` → RESP2 socket client (production/integration)
-    * on database `db` (default 0).
+  /** A connection to the store [[RedisUrl.parse]] reads from `url`. */
+  def open(url: String): RedisConn = RedisUrl.parse(url) match {
+    case RedisUrl.Mem(name) => InMemoryRedis.named(name)
+    case RedisUrl.Resp(host, port, db) => new RespRedis(host, port, db)
+  }
+}
+
+/** Where a [[RedisConn]] connects. */
+sealed trait RedisUrl
+
+object RedisUrl {
+  /** The shared JVM-local fake named `name` (CI; one instance per name). */
+  final case class Mem(name: String) extends RedisUrl
+  /** A RESP2 socket client (production/integration) on database `db`. */
+  final case class Resp(host: String, port: Int, db: Int) extends RedisUrl
+
+  /** `mem://<name>` or `redis://host[:port][/db]` (port 6379 and db 0 by
+    * default); anything else is an IllegalArgumentException.
     */
-  def open(url: String): RedisConn = url match {
-    case s if s.startsWith("mem://") => InMemoryRedis.named(s.stripPrefix("mem://"))
+  def parse(url: String): RedisUrl = url match {
+    case s if s.startsWith("mem://") => Mem(s.stripPrefix("mem://"))
     case s if s.startsWith("redis://") =>
       def bad = new IllegalArgumentException(s"bad redis url: $url")
       val (hp, db) = s.stripPrefix("redis://").split("/", -1) match {
@@ -210,7 +225,7 @@ object RedisConn {
         case Array(h) => (h, 6379)
         case _ => throw bad
       }
-      new RespRedis(host, port, db)
+      Resp(host, port, db)
     case _ => throw new IllegalArgumentException(
       s"unsupported redis url (want mem:// or redis://): $url")
   }
@@ -282,6 +297,12 @@ object InMemoryRedis {
     registry.computeIfAbsent(name, _ => new InMemoryRedis())
   /** Drop an instance (test isolation between specs). */
   def reset(name: String): Unit = { registry.remove(name); () }
+  /** The names of the live instances (spec assertions that a run reset its
+    * stores). */
+  private[graft] def names: Set[String] = {
+    import scala.jdk.CollectionConverters._
+    registry.keySet.asScala.toSet
+  }
 
   /** One stream: entries at positions 0, 1, ... in id order, ids as two
     * `Long` columns, deletions as a bit set, acks as one bit set per group.

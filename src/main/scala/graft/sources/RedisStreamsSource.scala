@@ -4,29 +4,29 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import java.util
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl}
 import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-/** DSv2 micro-batch source over Redis Streams — the production counterpart
-  * of [[CdcDirectorySource]], implementing the reference's actual I/O plane
-  * (consumer-group reads RedisSource.java:72-93; XACK + conditional XDEL
-  * after full downstream completion WatchStream.java:193-220).
+/** DSv2 micro-batch source over Redis Streams, the engine's one CDC source:
+  * the reference's I/O plane (consumer-group reads RedisSource.java:72-93;
+  * XACK + conditional XDEL after full downstream completion
+  * WatchStream.java:193-220).
   *
-  * Emits the engine's CDC record contract, identical to the directory
-  * source so the whole CDC plane ([[graft.cdc.CdcPipeline]] etc.) runs
-  * unchanged on either: `id STRING` (the Redis `ms-seq` RecordId), `table
-  * STRING` (stream name minus the configured prefix, WatchStream.java:323's
-  * `<source.prefix><table>` naming inverted), `envelope STRING` (the
-  * Debezium JSON; compact vs extended wire format detected PER RECORD by
-  * field count exactly like RedisSource.java:58-62).
+  * Emits the engine's CDC record contract ([[RedisStreamsSource.schema]]),
+  * the input of the whole CDC plane ([[graft.cdc.CdcPipeline]] etc.): `id
+  * STRING` (the Redis `ms-seq` RecordId), `table STRING` (stream name minus
+  * the configured prefix, WatchStream.java:323's `<source.prefix><table>`
+  * naming inverted), `envelope STRING` (the Debezium JSON; compact vs
+  * extended wire format detected PER RECORD by field count exactly like
+  * RedisSource.java:58-62).
   *
   * Offset model: one `RedisId` high-water mark per stream, checkpointed in
   * Spark's offset WAL. The reference's at-least-once machinery (consumer
@@ -51,12 +51,13 @@ import scala.jdk.CollectionConverters._
 class RedisStreamsSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-redis"
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    CdcDirectorySource.schema
+    RedisStreamsSource.schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
     val url = opts.get("url")
     require(url != null, "option 'url' is required (mem://name or redis://host:port)")
+    RedisUrl.parse(url) // a bad url fails here, when the query is defined
     val streams = Option(opts.get("streams")).map(_.split(",").map(_.trim).toSeq)
       .getOrElse(Seq.empty)
     require(streams.nonEmpty, "option 'streams' is required (comma-separated)")
@@ -68,11 +69,29 @@ class RedisStreamsSource extends TableProvider with DataSourceRegister {
       acknowledge = Option(opts.get("acknowledge")).getOrElse("simple"),
       maxRecordsPerTrigger =
         Option(opts.get("maxRecordsPerTrigger")).map(_.toInt).getOrElse(Int.MaxValue))
-    new CdcTable(s"graft-redis:$url", () => new RedisStreamsStream(cfg))
+    new Table with SupportsRead {
+      override def name(): String = s"graft-redis:$url"
+      override def schema(): StructType = RedisStreamsSource.schema
+      override def capabilities(): util.Set[TableCapability] =
+        util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
+      override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+        new ScanBuilder with Scan {
+          override def build(): Scan = this
+          override def readSchema(): StructType = RedisStreamsSource.schema
+          override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
+            new RedisStreamsStream(cfg)
+        }
+    }
   }
 }
 
 private[sources] object RedisStreamsSource {
+  /** The engine's CDC record contract. */
+  val schema: StructType = StructType(Seq(
+    StructField("id", StringType, nullable = false),
+    StructField("table", StringType, nullable = false),
+    StructField("envelope", StringType, nullable = false)))
+
   /** COUNT of every paged XRANGE: the reference's per-poll read size
     * (RedisSource.java:72-93). */
   val ReadCount = 1000

@@ -13,13 +13,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     each trigger's start rather than from the wall clock's multiples of
   *     the window ([[GraftBridge.startForeachBatch]]), so the epoch cadence
   *     does not depend on when the plane started; the count arm
-  *     is enforced at the SOURCE as Spark's read limit (`maxRecordsPerTrigger`
-  *     on `graft-redis`, `maxSegmentsPerTrigger` on `graft-cdc`), which is
-  *     where Spark bounds batch size.
+  *     is enforced at the SOURCE as Spark's read limit (`graft-redis`'s
+  *     `maxRecordsPerTrigger`, rows per stream), which is where Spark bounds
+  *     batch size.
   *   - dedupe state RESETS per flush in the reference (ids re-emit in later
   *     windows — its tests assert this); per-micro-batch `foreachBatch` +
-  *     batch-local dedupe reproduces exactly that. Cross-window dedupe is a
-  *     deliberate semantic upgrade via [[dedupedAcrossBatches]].
+  *     batch-local dedupe reproduces exactly that.
   *   - ref-counted XACK/XDEL protocol → checkpoint epoch commit: a batch's
   *     offsets commit only after the sink write returns, giving at-least-once
   *     into any sink and exactly-once into idempotent/transactional ones —
@@ -27,8 +26,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     cf. its unused recovery knobs, RedisSource.java:29-34).
   *
   * Input contract: a STREAMING DataFrame with `id`, `table`, `envelope` —
-  * from any source (Kafka, file, socket, a custom Redis-stream DSv2
-  * connector); tests use MemoryStream. Output: the batched chunks
+  * in `watch`, the Redis Streams source (`graft-redis`); tests also use
+  * MemoryStream. Output: the batched chunks
   * (target, chunk_no, ids, n_ids) of each epoch, handed to the caller's
   * writer (`Main.watch`: per-epoch parquet or XADD).
   *
@@ -56,13 +55,4 @@ object CdcStream {
         // batch-local dedupe = reference flush semantics (state reset/window)
         writer(CdcPipeline.run(batch, edges, maxBatch), epoch)
     }
-
-  /** Semantic-upgrade variant: dedupe persists ACROSS micro-batches within a
-    * watermark horizon (`dropDuplicatesWithinWatermark`) — an id seen twice
-    * within the horizon is emitted once, ever. Requires an event-time column.
-    */
-  def dedupedAcrossBatches(parsed: DataFrame, eventTimeCol: String,
-                           horizon: String): DataFrame =
-    parsed.withWatermark(eventTimeCol, horizon)
-      .dropDuplicatesWithinWatermark("target", "entity_id")
 }

@@ -2,8 +2,7 @@ package graft.tools
 
 import graft._
 import org.apache.commons.io.FileUtils
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
 /** Streaming scale rehearsal — the streaming counterpart of
   * [[ScaleRehearsal]]: the throughput anchors in `bench/bench_full.json`
@@ -13,10 +12,11 @@ import org.apache.spark.sql.functions._
   * 100 TB default):
   *
   *  1. the CDC plane as `Main.watch` runs it ([[Bench.drainWatch]]) over
-  *     `reps`x the events, staged by [[SparkEntry.stageCdcSegments]] with
-  *     injectively re-keyed keys (k -> k*reps + r), so every replica keeps
-  *     the base's duplicate structure and each epoch's dedupe holds reps x
-  *     the keys. Recorded: events/s.
+  *     `reps`x the events, staged as `mem://` streams by
+  *     [[Bench.withStagedEvents]] with injectively re-keyed keys
+  *     (k -> k*reps + r), so every replica keeps the base's duplicate
+  *     structure and each epoch's dedupe holds reps x the keys. Recorded:
+  *     events/s.
   *
   *  2. the ingest near-dup gate (`StreamingIngestGate` over the minhash
   *     banding index) fed `reps`x the documents in multiple epochs via
@@ -27,7 +27,8 @@ import org.apache.spark.sql.functions._
   * Usage: `StreamRehearsal [<sf-dir> [<reps> [<out.json>]]]`. Writes
   * `target/scale_rehearsal_streaming.json`, or `<out.json>` when given: name
   * `bench/scale_rehearsal_streaming.json` to refresh the committed sf0.1 x 10
-  * record. Everything staged in the system temp dir is deleted at the end.
+  * record. Everything staged in the system temp dir or in `mem://` stores
+  * is deleted at the end.
   * Single timed replay per (plane, scale) after a warmup replay — ratios,
   * not micro-benchmarks, same policy as ScaleRehearsal.
   */
@@ -66,54 +67,6 @@ object StreamRehearsal {
     (wall, accepted, idxRows)
   }
 
-  /** Stateful cross-batch dedupe replay ([[graft.streaming.CdcStream
-    * .dedupedAcrossBatches]] — the watermark path; the CDC plane proper
-    * dedupes batch-locally by design, reproducing the reference's
-    * per-flush state reset, so it has NO streaming state operator to
-    * measure). Stages (event_type, k, ts) parquet at `reps`x with
-    * injectively re-keyed k, replays through RocksDB keyed state, and
-    * returns (wallSec, events, stateRowsMax, stateMemMax) — the state
-    * high-water mark must scale ~linearly in distinct keys.
-    */
-  private def replayStatefulDedupe(spark: SparkSession, sfDir: String,
-                                   reps: Int): (Double, Long, Long, Long) =
-    Bench.withTempDir(s"graft-srehearse-state-${reps}x") { dir =>
-      Bench.withTempDir("graft-srehearse-state-ckpt") { runCkpt =>
-        val ev = Tables(spark, sfDir, "events")
-        val rep = explode(sequence(lit(0), lit(reps - 1))).as("r")
-        ev.select(col("event_type"), col("user_id"), col("ts_ns"), rep)
-          .select(col("event_type"),
-            (col("user_id") * reps + col("r")).as("k"),
-            timestamp_micros(expr("ts_ns div 1000")).as("ts"))
-          .repartition(16)
-          .write.mode("overwrite").parquet(dir)
-        val n = spark.read.parquet(dir).count()
-        val src = spark.readStream
-          .schema(spark.read.parquet(dir).schema)
-          .option("maxFilesPerTrigger", 4).parquet(dir)
-        val t0 = System.nanoTime()
-        val q = graft.streaming.CdcStream
-          .dedupedAcrossBatches(
-            src.withColumnRenamed("event_type", "target")
-              .withColumnRenamed("k", "entity_id"), "ts", "365 days")
-          .writeStream
-          .option("checkpointLocation", runCkpt)
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            b.write.format("noop").mode("overwrite").save()
-          }
-          .start()
-        try {
-          q.processAllAvailable()
-          val wall = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(500)
-          val states = q.recentProgress.flatMap(_.stateOperators)
-          val rows = if (states.isEmpty) -1L else states.map(_.numRowsTotal).max
-          val mem = if (states.isEmpty) -1L else states.map(_.memoryUsedBytes).max
-          (wall, n, rows, mem)
-        } finally q.stop()
-      }
-    }
-
   def main(args: Array[String]): Unit = {
     val base = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 10
@@ -129,7 +82,7 @@ object StreamRehearsal {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // every directory and config staged in the system temp dir, deleted at the end
+    // every directory staged in the system temp dir, deleted at the end
     val staged = scala.collection.mutable.ArrayBuffer[java.io.File]()
     def tempDir(prefix: String): String = {
       val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
@@ -139,20 +92,15 @@ object StreamRehearsal {
     val json = try {
       // --- CDC plane at 1x and reps x, best of 2 drains after a warmup (a
       // single drain carries multi-second machine noise) ---
-      def stage(r: Int): (Long, String, String) = {
-        val dir = tempDir(s"graft-srehearse-${r}x")
-        val (n, segments) = SparkEntry.stageCdcSegments(spark, base, dir, r)
-        val config = SparkEntry.demoWatchConfig(segments)
-        staged += new java.io.File(config)
-        (n, dir, config)
+      def drainBest(in: String, config: String): Double =
+        Seq.fill(2)(Bench.drainWatch(spark, in, config)).min
+      val (n1, w1) = Bench.withStagedEvents(spark, base) { (n, in, config) =>
+        Bench.drainWatch(spark, in, config) // warmup: codegen
+        (n, drainBest(in, config))
       }
-      def drainBest(dir: String, config: String): Double =
-        Seq.fill(2)(Bench.drainWatch(spark, dir, config)).min
-      val (n1, seg1, cfg1) = stage(1)
-      val (nN, segN, cfgN) = stage(reps)
-      Bench.drainWatch(spark, seg1, cfg1) // warmup: codegen
-      val w1 = drainBest(seg1, cfg1)
-      val wN = drainBest(segN, cfgN)
+      val (nN, wN) = Bench.withStagedEvents(spark, base, reps) { (n, in, config) =>
+        (n, drainBest(in, config))
+      }
       System.err.println(f"[stream-rehearsal] cdc 1x: $n1 ev in $w1%.1fs (${n1 / w1}%.0f ev/s)")
       System.err.println(f"[stream-rehearsal] cdc ${reps}x: $nN ev in $wN%.1fs (${nN / wN}%.0f ev/s)")
 
@@ -179,25 +127,11 @@ object StreamRehearsal {
       System.err.println(f"[stream-rehearsal] gate ${reps}x: $dN docs in " +
         f"$gwN%.1fs (accepted=$accN, index rows=$idxN)")
 
-      // --- stateful cross-batch dedupe (the watermark path) at 1x / reps x ---
-      replayStatefulDedupe(spark, base, 1) // warmup
-      val (sw1, sn1, srows1, smem1) = replayStatefulDedupe(spark, base, 1)
-      val (swN, snN, srowsN, smemN) = replayStatefulDedupe(spark, base, reps)
-      System.err.println(f"[stream-rehearsal] stateful 1x: $sn1 ev in $sw1%.1fs " +
-        f"(state rows=$srows1 mem=$smem1)")
-      System.err.println(f"[stream-rehearsal] stateful ${reps}x: $snN ev in " +
-        f"$swN%.1fs (state rows=$srowsN mem=$smemN)")
-
       def r3(v: Double) = math.round(v * 1000) / 1000.0
       s"""{"base_sf":"$base","scaled_reps":$reps,""" +
       s""""state_store":"rocksdb",""" +
       s""""cdc":{"base":{"events":$n1,"sec":${r3(w1)},"events_per_sec":${(n1 / w1).round}},""" +
       s""""scaled":{"events":$nN,"sec":${r3(wN)},"events_per_sec":${(nN / wN).round}}},""" +
-      s""""stateful_dedupe":{""" +
-      s""""base":{"events":$sn1,"sec":${r3(sw1)},"events_per_sec":${(sn1 / sw1).round},""" +
-      s""""state_rows_max":$srows1,"state_mem_bytes_max":$smem1},""" +
-      s""""scaled":{"events":$snN,"sec":${r3(swN)},"events_per_sec":${(snN / swN).round},""" +
-      s""""state_rows_max":$srowsN,"state_mem_bytes_max":$smemN}},""" +
       s""""ingest_gate":{""" +
       s""""base":{"docs":$d1,"sec":${r3(gw1)},"docs_per_sec":${(d1 / gw1).round},""" +
       s""""accepted":$acc1,"index_rows":$idx1},""" +

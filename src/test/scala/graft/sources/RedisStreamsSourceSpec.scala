@@ -6,9 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Redis Streams DSv2 source e2e against the in-memory fake conn: group
   * attach, incremental offsets, per-trigger caps, epoch XACK + delete-mode
-  * XDEL retention, wire-format detection, prefix stripping — the spec
-  * matrix of CdcDirectorySourceSpec on the reference's real I/O plane
-  * (RedisSource.java:72-93, WatchStream.java:193-220). The final test runs
+  * XDEL retention, wire-format detection, prefix stripping, restart over a
+  * checkpoint — the reference's I/O plane (RedisSource.java:72-93,
+  * WatchStream.java:193-220). The final test runs
   * the same matrix against a REAL server when REDIS_URL is set (integration
   * mode; skipped in the sandbox).
   */
@@ -174,8 +174,11 @@ class RedisStreamsSourceSpec extends AnyFunSuite {
     (1L to 10L).foreach(ms =>
       mem.xadd("a", Seq("v" -> envelope(ms.toInt)), Some(RedisId(ms, 0))))
     mem.xadd("b", Seq("v" -> envelope(99)), Some(RedisId(5, 2)))
+    // a dotted Debezium name: only the leading prefix is stripped
+    mem.xadd("m2.m2.catalog_category_entity", Seq("v" -> envelope(7)), Some(RedisId(3, 0)))
     val records = spark.readStream.format("graft-redis")
-      .option("url", url).option("streams", "a, b").load()
+      .option("url", url).option("streams", "a, b, m2.m2.catalog_category_entity")
+      .option("prefix", "m2.").load()
     val seen = scala.collection.mutable.ArrayBuffer[(String, String)]()
     val q = records.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -190,6 +193,8 @@ class RedisStreamsSourceSpec extends AnyFunSuite {
     val byStream = seen.synchronized(seen.toSeq).groupBy(_._1)
     assert(byStream("a").map(_._2) == (1L to 10L).map(ms => s"$ms-0"))
     assert(byStream("b").map(_._2) == Seq("5-2"))
+    assert(byStream("m2.catalog_category_entity").map(_._2) == Seq("3-0"))
+    assert(byStream.keySet == Set("a", "b", "m2.catalog_category_entity"))
   }
 
   test("restart resumes from the checkpointed offset, no reprocessing") {

@@ -35,9 +35,9 @@ class RedisEndToEndSpec extends AnyFunSuite {
     * time is the trigger interval `watch` runs.
     */
   private def config(ack: String, maxBatch: Int = 1000,
-                     sourcePort: Int = 6379): String =
+                     sourceConnection: String = """{"host": "127.0.0.1", "port": 6379}"""): String =
     s"""{"source": {"prefix": "m2.", "group": "cdc", "acknowledge": "$ack",
-       |  "connection": {"host": "127.0.0.1", "port": $sourcePort}},
+       |  "connection": $sourceConnection},
        |"target": {"prefix": "target."},
        |"buffers": {"source": {"size": 1000, "time": 1000},
        |  "dedupe": {"size": 100000, "time": 100},
@@ -45,26 +45,27 @@ class RedisEndToEndSpec extends AnyFunSuite {
        |"mapping": {"catalog_category_entity": {"entity_id":
        |  ["catalog_product_flat", "catalog_category_product"]}}}""".stripMargin
 
-  /** One full `watch --source redis --sink redis` run through the CLI's own
-    * wiring ([[graft.Main.watch]]), with Redis on both ends at `url`, or
-    * with the target at the config's `target.connection` when
-    * `configuredTarget`.
+  /** One full `watch --sink redis` run through the CLI's own wiring
+    * ([[graft.Main.watch]]) with `flags` added, reading the source streams
+    * of `source`: with `--in url --target-url url`, Redis on both ends at
+    * `url`.
     */
-  private def runWatch(url: String, mem: InMemoryRedis, config: String,
-                       configuredTarget: Boolean = false): Unit = {
+  private def runWatch(source: InMemoryRedis, config: String, flags: String*): Unit = {
     val cfgFile = java.nio.file.Files.createTempFile("graft-e2e", ".json")
     java.nio.file.Files.writeString(cfgFile, config)
     val q = graft.Main.watch(spark, Array("watch", "--config", cfgFile.toString,
-      "--source", "redis", "--sink", "redis", "--in", url, "--checkpoint", ckpt()) ++
-      (if (configuredTarget) Nil else Seq("--target-url", url)))
+      "--sink", "redis", "--checkpoint", ckpt()) ++ flags)
     try {
       q.processAllAvailable()
       // epoch N's source ack fires when epoch N+1 plans; poke an empty epoch
-      mem.xadd("m2.catalog_category_entity", Seq("v" -> envelope(-1)))
+      source.xadd("m2.catalog_category_entity", Seq("v" -> envelope(-1)))
       q.processAllAvailable()
       q.processAllAvailable()
     } finally q.stop()
   }
+
+  private def runWatch(url: String, mem: InMemoryRedis, config: String): Unit =
+    runWatch(mem, config, "--in", url, "--target-url", url)
 
   private def idArrays(mem: InMemoryRedis, stream: String): Seq[String] =
     mem.xrange(stream, RedisId.Zero, RedisId(-1L, -1L), Int.MaxValue)
@@ -140,13 +141,34 @@ class RedisEndToEndSpec extends AnyFunSuite {
     assert(firsts == firsts.sorted, s"chunks out of order: $entries")
   }
 
-  test("watch: --source redis reads the --in URL, not source.connection") {
+  test("watch: --in overrides source.connection") {
     val (url, mem) = freshMem()
     Seq(1, 2).foreach(i =>
       mem.xadd("m2.catalog_category_entity", Seq("v" -> envelope(i))))
     // nothing listens on port 1: reading source.connection fails the query
-    runWatch(url, mem, config(ack = "simple", sourcePort = 1))
+    runWatch(url, mem, config(ack = "simple",
+      sourceConnection = """{"host": "127.0.0.1", "port": 1}"""))
     assert(idArrays(mem, "target.catalog_product_flat").contains("[1,2]"))
+  }
+
+  test("watch: without --in, the source is source.connection's db") {
+    val (url, mem) = freshMem()
+    val srv = new graft.sources.RespServerFake
+    try {
+      val source = srv.db(2)
+      Seq(1, 2).foreach(i =>
+        source.xadd("m2.catalog_category_entity", Seq("v" -> envelope(i))))
+      runWatch(source, config(ack = "delete",
+        sourceConnection = s"""{"host": "127.0.0.1", "port": ${srv.port}, "db": 2}"""),
+        "--target-url", url)
+      assert(idArrays(mem, "target.catalog_product_flat").take(2) == Seq("[]", "[1,2]"))
+      val deadline = System.currentTimeMillis() + 10000
+      while (System.currentTimeMillis() < deadline &&
+             source.xlen("m2.catalog_category_entity") > 1) Thread.sleep(100)
+      assert(source.xlen("m2.catalog_category_entity") <= 1L,
+        "the drained entries must be acked and XDELed on db 2")
+      assert(srv.mem.xlen("m2.catalog_category_entity") == 0L)
+    } finally srv.close()
   }
 
   test("watch: without --target-url, --sink redis XADDs into target.connection's db") {
@@ -158,7 +180,7 @@ class RedisEndToEndSpec extends AnyFunSuite {
       val cfg = config(ack = "simple").replace(""""target": {"prefix": "target."}""",
         s""""target": {"prefix": "target.",
            |  "connection": {"host": "127.0.0.1", "port": ${srv.port}, "db": 1}}""".stripMargin)
-      runWatch(url, mem, cfg, configuredTarget = true)
+      runWatch(mem, cfg, "--in", url)
       assert(idArrays(srv.db(1), "target.catalog_product_flat").take(2) == Seq("[]", "[1,2]"))
       assert(srv.mem.xlen("target.catalog_product_flat") == 0L)
     } finally srv.close()

@@ -13,7 +13,7 @@
 # Or against a cluster, use the same jar with spark-submit directly:
 #   spark-submit --class graft.Main --master <master> \
 #     target/scala-2.13/cdcdedupespark_2.13-0.1.0.jar \
-#     watch --config config.yaml --sink redis \
+#     watch --config config.yaml \
 #     --in redis://<host>:6379 --checkpoint /ckpt/graft
 #
 # Pick the tag matching your Spark build (Scala 2.13 / Java 17).
@@ -31,5 +31,5 @@ ENTRYPOINT ["/opt/spark/bin/spark-submit", \
   "--class", "graft.Main", \
   "--master", "local[*]", \
   "/app/graft.jar"]
-CMD ["watch", "--config", "/app/config.yaml", "--sink", "redis", \
+CMD ["watch", "--config", "/app/config.yaml", \
   "--in", "redis://redis:6379", "--checkpoint", "/ckpt/graft"]

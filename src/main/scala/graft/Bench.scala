@@ -125,7 +125,7 @@ object Bench {
   }
 
   /** One `Main.watch` run of `config` over the source URL `in`, drained to
-    * the end: XADD sink into a fresh in-memory target (`mem://`),
+    * the end: XADDs into a fresh in-memory target (`mem://`),
     * checkpoint in a fresh temp dir; the target and the checkpoint are
     * dropped afterwards. Returns the wall seconds from start to stop.
     */
@@ -134,7 +134,7 @@ object Bench {
       val target = s"graft-drain-${java.util.UUID.randomUUID()}"
       val t0 = System.nanoTime()
       val q = Main.watch(spark, Array("watch", "--config", config, "--in", in,
-        "--checkpoint", ckpt, "--sink", "redis", "--target-url", s"mem://$target"))
+        "--checkpoint", ckpt, "--target-url", s"mem://$target"))
       try q.processAllAvailable()
       finally { q.stop(); graft.sources.InMemoryRedis.reset(target) }
       (System.nanoTime() - t0) / 1e9

@@ -1,5 +1,6 @@
 package graft
 
+import graft.Main.{opt, req}
 import graft.streaming.StreamingIngestGate
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -87,12 +88,4 @@ private[graft] object IngestCli {
     s"ingest-gate: corpus=${count(req(args, "--corpus-table"))} docs, " +
       s"map=${count(req(args, "--map-table"))} rows"
   }
-
-  private[graft] def opt(args: Array[String], name: String): Option[String] = {
-    val i = args.indexOf(name)
-    if (i >= 0 && i + 1 < args.length) Some(args(i + 1)) else None
-  }
-  private[graft] def req(args: Array[String], name: String): String =
-    opt(args, name).getOrElse(
-      throw new IllegalArgumentException(s"missing required $name"))
 }

@@ -1,24 +1,22 @@
 package graft
 
-import graft.cdc.{CdcConfig, DebeziumConfigGen}
-import graft.streaming.{CdcStream, RedisStreamsSink}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.lit
+import graft.cdc.{CdcConfig, CdcPipeline, DebeziumConfigGen}
+import graft.streaming.RedisStreamsSink
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** CLI — the engine's equivalent of the reference's Spring Shell commands
   * (Application.java + WatchStream.watch + DebeziumConfiguration.generate):
   *
-  *   watch    --config <cfg> [--in <url>] [--out <parquet-dir>]
-  *            --checkpoint <dir> [--once] [--sink parquet|redis]
-  *            [--target-url <url>]
-  *            runs the streaming CDC plane on the Redis Streams source
+  *   watch    --config <cfg> [--in <url>] [--target-url <url>]
+  *            --checkpoint <dir> [--once]
+  *            runs the streaming CDC plane: the Redis Streams source
   *            (RedisStreamsSource: one stream per watched table, XRANGE
-  *            reads acked on epoch commit). `--in` is its `mem://<name>` or
-  *            `redis://host[:port][/db]` URL, by default the config's
-  *            `source.connection`. Sinks: per-epoch parquet (default, needs
-  *            --out) or the reference's XADD output plane (`--sink redis`,
-  *            RedisStreamsSink, WatchStream.java:261-295).
+  *            reads acked on epoch commit) into the reference's XADD output
+  *            plane (RedisStreamsSink, WatchStream.java:261-295). `--in` is
+  *            the source's `mem://<name>` or `redis://host[:port][/db]` URL,
+  *            by default the config's `source.connection`; `--target-url`
+  *            is the sink's, by default `target.connection`.
   *   watch    --ingest-gate --in <docs-dir> --checkpoint <dir>
   *            --corpus-table <t> --index-table <t> --map-table <t>
   *            [--format json|parquet] [--gate-threshold 0.8]
@@ -31,6 +29,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *            replay.
   *   generate --config <cfg>
   *            prints Debezium Server properties derived from the config.
+  *
+  * A bad flag of either `watch` plane, such as a missing one or one with no
+  * value after it, is an IllegalArgumentException; `main` prints its
+  * message and exits 2.
   */
 object Main {
   def main(args: Array[String]): Unit = args.headOption match {
@@ -43,8 +45,8 @@ object Main {
       spark.sparkContext.setLogLevel("WARN")
       val gate = args.contains("--ingest-gate")
       val q =
-        if (gate) IngestCli.start(spark, args)
-        else try watch(spark, args) catch {
+        try if (gate) IngestCli.start(spark, args) else watch(spark, args)
+        catch {
           case e: IllegalArgumentException =>
             System.err.println(e.getMessage); sys.exit(2)
         }
@@ -59,25 +61,44 @@ object Main {
       sys.exit(2)
   }
 
-  /** Starts the CDC plane of `watch` (source → [[CdcStream]] → sink) on
-    * `spark` and returns the running query; the caller owns the session and
-    * decides between draining (`--once`) and awaiting termination. A missing
-    * or unknown flag value, or an `--in` that is not a `mem://` or
-    * `redis://` URL, is an IllegalArgumentException.
+  /** Starts the CDC plane of `watch` on `spark` and returns the running
+    * query; the caller owns the session and decides between draining
+    * (`--once`) and awaiting termination. Before the query starts, every
+    * target stream gets its `[]` priming entry. A missing flag or one with
+    * no value, an `--in` that is not a `mem://` or `redis://` URL, or an
+    * `--out` (the flag of a former parquet sink, refused so that an old
+    * command line does not XADD into the config's target unawares) is an
+    * IllegalArgumentException.
     *
     * Config knobs: `buffers.source.size` caps each source stream per
-    * trigger, `buffers.dedupe.time` is the trigger interval (counted from
-    * each trigger's start, see [[CdcStream.startWith]]), and
-    * `buffers.target.size` caps the ids of one output chunk; both sizes
-    * must be positive.
+    * trigger, Spark's read limit, where it bounds an epoch (the count arm of
+    * the reference's `bufferTimeout(100k, 5s)`); `buffers.dedupe.time` is
+    * the trigger interval, counted from each trigger's start
+    * ([[GraftBridge.startForeachBatch]]) so that the epoch cadence does not
+    * depend on when the plane started; `buffers.target.size` caps the ids
+    * of one output chunk. Both sizes must be positive.
+    *
+    * Each epoch runs [[CdcPipeline.run]] on its batch alone, so the dedupe
+    * state resets every epoch as the reference's does at each flush: an id
+    * that comes back in a later epoch is emitted again. The state of one
+    * epoch is one target's distinct ids per task, bounded by the source's
+    * cap summed over the streams feeding that target (the reference's 100k
+    * dedupe buffer). The epoch commit stands in for the reference's
+    * ref-counted XACK/XDEL: a batch's source offsets commit, and its
+    * entries are acked, only after its XADDs return, so a crash replays the
+    * epoch (at-least-once, as in the reference).
     */
   private[graft] def watch(spark: SparkSession, args: Array[String]): StreamingQuery = {
+    if (args.contains("--out")) throw new IllegalArgumentException(
+      "--out is no longer read: watch XADDs its id arrays to the config's " +
+        "target.connection, or to --target-url")
     val cfg = CdcConfig.load(opt(args, "--config").getOrElse("./config.yaml"))
     require(cfg.buffers.source.size > 0,
       s"buffers.source.size must be positive, got ${cfg.buffers.source.size}")
     require(cfg.buffers.target.size > 0,
       s"buffers.target.size must be positive, got ${cfg.buffers.target.size}")
     val in = opt(args, "--in").getOrElse(cfg.source.connection.url)
+    val target = opt(args, "--target-url").getOrElse(cfg.target.connection.url)
     val ckpt = req(args, "--checkpoint")
     // the reference's I/O plane: one stream per watched table named
     // <source.prefix><table> (WatchStream.java:323), consumer group +
@@ -92,30 +113,24 @@ object Main {
       .option("acknowledge", cfg.source.acknowledge)
       .option("maxRecordsPerTrigger", cfg.buffers.source.size)
       .load()
-    val writer: (DataFrame, Long) => Unit = opt(args, "--sink").getOrElse("parquet") match {
-      case "parquet" =>
-        val out = req(args, "--out")
-        (batch, epoch) => batch.withColumn("epoch", lit(epoch)).write.mode("append").parquet(out)
-      case "redis" =>
-        // the reference's actual output plane: XADD id-array entries to
-        // <target.prefix><target> with startup priming (WatchStream
-        // .java:261-295). --target-url overrides the config's target.
-        val turl = opt(args, "--target-url").getOrElse(cfg.target.connection.url)
-        RedisStreamsSink.prime(turl, cfg.target.prefix,
-          cfg.routes.map(_.target).distinct)
-        RedisStreamsSink.writer(turl, cfg.target.prefix)
-      case other =>
-        throw new IllegalArgumentException(s"unknown --sink $other (parquet|redis)")
+    val routes = cfg.routes
+    RedisStreamsSink.prime(target, cfg.target.prefix, routes.map(_.target))
+    val write = RedisStreamsSink.writer(target, cfg.target.prefix)
+    GraftBridge.startForeachBatch(records, ckpt, cfg.buffers.dedupe.time) { (batch, epoch) =>
+      write(CdcPipeline.run(batch, routes, cfg.buffers.target.size), epoch)
     }
-    CdcStream.startWith(records, cfg.routes, cfg.buffers.target.size, ckpt,
-      windowMillis = cfg.buffers.dedupe.time)(writer)
   }
 
-  private def opt(args: Array[String], name: String): Option[String] = {
-    val i = args.indexOf(name)
-    if (i >= 0 && i + 1 < args.length) Some(args(i + 1)) else None
-  }
-  private def req(args: Array[String], name: String): String =
+  /** The value after flag `name`, if `name` is given; a flag given with no
+    * value after it is an IllegalArgumentException.
+    */
+  private[graft] def opt(args: Array[String], name: String): Option[String] =
+    args.indexOf(name) match {
+      case -1 => None
+      case i if i + 1 < args.length && !args(i + 1).startsWith("--") => Some(args(i + 1))
+      case _ => throw new IllegalArgumentException(s"$name needs a value")
+    }
+  private[graft] def req(args: Array[String], name: String): String =
     opt(args, name).getOrElse(
       throw new IllegalArgumentException(s"missing required $name"))
 }

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * Cross-window semantics: the reference's dedupe state RESETS at each buffer
   * flush (an id re-arriving after a flush is emitted again — asserted by its
   * own tests, SURVEY §2.4 D1). Batch mode = one window; streaming mode applies
-  * this per micro-batch in [[graft.streaming.CdcStream]].
+  * this per micro-batch in [[graft.Main.watch]].
   */
 object Dedupe {
 

@@ -45,7 +45,7 @@ object RedisStreamsSink {
       .repartition(col("target"))
       .sortWithinPartitions("target", "chunk_no")
 
-  /** Epoch writer for [[CdcStream.startWith]]: XADDs each batched chunk row
+  /** Epoch writer of [[graft.Main.watch]]: XADDs each batched chunk row
     * (`target`, `chunk_no`, `ids`) to `<prefix><target>`.
     */
   def writer(url: String, prefix: String): (DataFrame, Long) => Unit =

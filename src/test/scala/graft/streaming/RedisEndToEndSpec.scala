@@ -45,7 +45,7 @@ class RedisEndToEndSpec extends AnyFunSuite {
        |"mapping": {"catalog_category_entity": {"entity_id":
        |  ["catalog_product_flat", "catalog_category_product"]}}}""".stripMargin
 
-  /** One full `watch --sink redis` run through the CLI's own wiring
+  /** One full `watch` run through the CLI's own wiring
     * ([[graft.Main.watch]]) with `flags` added, reading the source streams
     * of `source`: with `--in url --target-url url`, Redis on both ends at
     * `url`.
@@ -54,7 +54,7 @@ class RedisEndToEndSpec extends AnyFunSuite {
     val cfgFile = java.nio.file.Files.createTempFile("graft-e2e", ".json")
     java.nio.file.Files.writeString(cfgFile, config)
     val q = graft.Main.watch(spark, Array("watch", "--config", cfgFile.toString,
-      "--sink", "redis", "--checkpoint", ckpt()) ++ flags)
+      "--checkpoint", ckpt()) ++ flags)
     try {
       q.processAllAvailable()
       // epoch N's source ack fires when epoch N+1 plans; poke an empty epoch
@@ -171,7 +171,7 @@ class RedisEndToEndSpec extends AnyFunSuite {
     } finally srv.close()
   }
 
-  test("watch: without --target-url, --sink redis XADDs into target.connection's db") {
+  test("watch: without --target-url, XADDs go to target.connection's db") {
     val (url, mem) = freshMem()
     Seq(1, 2).foreach(i =>
       mem.xadd("m2.catalog_category_entity", Seq("v" -> envelope(i))))

@@ -8,8 +8,8 @@ import java.nio.file.Files
 /** The events staging and `watch` config that Bench's streaming anchor and
   * the streaming rehearsal drain ([[Bench.withStagedEvents]]:
   * [[SparkEntry.stageCdcStreams]] into a `mem://` store,
-  * [[SparkEntry.demoWatchConfig]]), run through [[graft.Main.watch]] with
-  * the XADD sink on `mem://`: the staged stream arrives in 4 epochs and
+  * [[SparkEntry.demoWatchConfig]]), run through [[graft.Main.watch]] into a
+  * `mem://` target: the staged stream arrives in 4 epochs and
   * every target receives the ids the batch plane ([[SparkEntry.entry2]])
   * emits over the same events.
   */
@@ -26,7 +26,7 @@ class StagedEventsWatchSpec extends AnyFunSuite {
       val target = s"staged-watch-${System.nanoTime()}"
       val q = Main.watch(spark, Array("watch", "--config", config, "--in", in,
         "--checkpoint", Files.createTempDirectory("graft-staged-ckpt").toString,
-        "--sink", "redis", "--target-url", s"mem://$target"))
+        "--target-url", s"mem://$target"))
       try q.processAllAvailable() finally q.stop()
       try {
         assert(q.recentProgress.count(_.numInputRows > 0) == 4)

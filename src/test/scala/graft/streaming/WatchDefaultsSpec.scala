@@ -1,15 +1,16 @@
 package graft.streaming
 
 import graft.TestSpark
-import graft.sources.InMemoryRedis
+import graft.sources.{InMemoryRedis, RedisId}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
-/** `watch` on its defaults — the Redis Streams source into the per-epoch
-  * parquet sink — run through [[graft.Main.watch]], the function the CLI
-  * runs: `buffers.source.size` as the rows per stream per epoch, the
-  * `buffers.target.size` chunk cap, restart over one checkpoint, and the
-  * start-up checks on the buffer sizes and the `--in` URL.
+/** `watch` on its defaults — the Redis Streams source into the XADD sink,
+  * here both on `mem://` — run through [[graft.Main.watch]], the function
+  * the CLI runs: `buffers.source.size` as the rows per stream per epoch,
+  * restart over one checkpoint, the per-epoch dedupe reset, and the
+  * start-up checks on the buffer sizes, the `--in` URL, the refused `--out`
+  * and flags with no value.
   */
 class WatchDefaultsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -44,50 +45,44 @@ class WatchDefaultsSpec extends AnyFunSuite {
     f.toString
   }
 
-  /** One `watch --in <url> --out <out>` drained to the end; no --sink flag,
-    * so the sink is parquet. Returns the written rows as (epoch, target,
-    * ids).
-    */
-  private def runWatch(url: String, ckpt: String,
-                       cfg: String = config()): Set[(Long, String, String)] = {
-    val out = tmp("graft-watch-out")
+  /** `watch` with `flags` added to a fresh checkpoint and config(). */
+  private def watch(flags: String*) = graft.Main.watch(spark, Array("watch",
+    "--config", config(), "--checkpoint", tmp("graft-watch-ckpt")) ++ flags)
+
+  /** One `watch --in <url> --target-url <target>` drained to the end. */
+  private def runWatch(url: String, target: String, ckpt: String, cfg: String): Unit = {
     val q = graft.Main.watch(spark, Array("watch", "--config", cfg,
-      "--in", url, "--out", out, "--checkpoint", ckpt))
+      "--in", url, "--target-url", target, "--checkpoint", ckpt))
     try q.processAllAvailable() finally q.stop()
-    spark.read.parquet(out).select("epoch", "target", "ids").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
   }
+
+  /** Each target stream's id arrays in stream order. */
+  private def idArrays(mem: InMemoryRedis): Map[String, Seq[String]] =
+    targets.map(t => t -> mem.xrange(t, RedisId.Zero, RedisId.Max, Int.MaxValue)
+      .map(_._2("ids"))).toMap
 
   test("watch defaults: buffers.source.size rows per stream per epoch; a restart emits only the new entries") {
     val (url, mem) = freshMem()
+    val (targetUrl, target) = freshMem()
     val ckpt = tmp("graft-watch-ckpt")
     val cfg = config(sourceSize = 2)
     add(mem, Seq(1, 2, 3))
-    assert(runWatch(url, ckpt, cfg) ==
-      targets.flatMap(t => Set((0L, t, "[1,2]"), (1L, t, "[3]"))).toSet)
+    runWatch(url, targetUrl, ckpt, cfg)
+    assert(idArrays(target) == targets.map(_ -> Seq("[]", "[1,2]", "[3]")).toMap)
 
-    add(mem, Seq(4, 5))
-    val second = runWatch(url, ckpt, cfg)
-    assert(second.map { case (_, t, ids) => (t, ids) } == targets.map(_ -> "[4,5]").toSet,
-      s"a restart must emit only the new entries' chunks, got $second")
-  }
-
-  test("watch's parquet sink caps every chunk at buffers.target.size") {
-    val (url, mem) = freshMem()
-    add(mem, 1 to 7)
-    val out = runWatch(url, tmp("graft-watch-ckpt"), config(targetSize = 3))
-    val chunks = out.toSeq.map { case (_, t, ids) =>
-      t -> ids.stripPrefix("[").stripSuffix("]").split(",").map(_.toInt).toSeq }
-    assert(chunks.forall(_._2.size <= 3), s"a chunk exceeds 3 ids: $out")
-    assert(chunks.groupMap(_._1)(_._2).view.mapValues(_.flatten.sorted).toMap ==
-      targets.map(_ -> (1 to 7)).toMap)
+    // id 1 comes back after the restart: the dedupe state is the epoch's
+    // alone, so it is emitted again
+    add(mem, Seq(4, 5, 1))
+    runWatch(url, targetUrl, ckpt, cfg)
+    assert(idArrays(target) ==
+      targets.map(_ -> Seq("[]", "[1,2]", "[3]", "[]", "[4,5]", "[1]")).toMap)
   }
 
   Seq("source", "target").foreach { buffer =>
     test(s"watch rejects a non-positive buffers.$buffer.size at start") {
       val cfg = if (buffer == "source") config(sourceSize = 0) else config(targetSize = 0)
       val e = intercept[IllegalArgumentException](graft.Main.watch(spark, Array("watch",
-        "--config", cfg, "--in", freshMem()._1, "--out", tmp("graft-watch-out"),
+        "--config", cfg, "--in", freshMem()._1, "--target-url", freshMem()._1,
         "--checkpoint", tmp("graft-watch-ckpt"))))
       assert(e.getMessage.contains(s"buffers.$buffer.size must be positive"))
     }
@@ -95,9 +90,28 @@ class WatchDefaultsSpec extends AnyFunSuite {
 
   test("watch rejects an --in that is not a mem:// or redis:// URL at start") {
     // a segment directory, the input of a former directory source
-    val e = intercept[IllegalArgumentException](graft.Main.watch(spark, Array("watch",
-      "--config", config(), "--in", tmp("graft-watch-in"), "--out", tmp("graft-watch-out"),
-      "--checkpoint", tmp("graft-watch-ckpt"))))
+    val e = intercept[IllegalArgumentException](
+      watch("--in", tmp("graft-watch-in"), "--target-url", freshMem()._1))
     assert(e.getMessage.contains("want mem:// or redis://"), e.getMessage)
+  }
+
+  test("watch refuses --out at start and XADDs nothing") {
+    val (targetUrl, target) = freshMem()
+    val e = intercept[IllegalArgumentException](watch("--in", freshMem()._1,
+      "--target-url", targetUrl, "--out", tmp("graft-watch-out")))
+    assert(e.getMessage.contains("target.connection"), e.getMessage)
+    assert(idArrays(target).values.forall(_.isEmpty))
+  }
+
+  test("watch rejects a flag with no value at start") {
+    val (url, target) = (freshMem()._1, freshMem()._1)
+    // last, or followed by another flag
+    for ((flag, args) <- Seq(
+        "--in" -> Seq("--target-url", target, "--in"),
+        "--in" -> Seq("--in", "--target-url", target),
+        "--target-url" -> Seq("--in", url, "--target-url"))) {
+      val e = intercept[IllegalArgumentException](watch(args: _*))
+      assert(e.getMessage == s"$flag needs a value", s"$args: ${e.getMessage}")
+    }
   }
 }

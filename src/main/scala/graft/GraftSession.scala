@@ -7,8 +7,9 @@ import org.apache.spark.sql.SparkSession
   * Defaults chosen for a large cluster but correct in `local[N]`:
   *   - AQE on (runtime re-plan: skew-join splitting, partition coalescing,
   *     broadcast-join demotion/promotion at 100 TB input sizes).
-  *   - shuffle.partitions sized by caller (32 locally; thousands on a real
-  *     cluster — AQE coalesces down so over-provisioning is safe).
+  *   - shuffle.partitions sized by caller (`max(cores, 8)` in [[local]];
+  *     thousands on a real cluster — AQE coalesces down so
+  *     over-provisioning is safe).
   *   - UTC session time zone for oracle parity.
   *   - `nanosAsLong` so nanosecond parquet timestamps (events.ts) load as
   *     LongType instead of failing the scan; [[Tables]] normalizes them.

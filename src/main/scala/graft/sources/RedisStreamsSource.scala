@@ -2,6 +2,7 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import java.util
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -37,10 +38,17 @@ import scala.jdk.CollectionConverters._
   * epoch-commit condition. `acknowledge=delete` additionally XDELs acked
   * ids (A6 retention).
   *
-  * Scale notes: one input partition per stream per trigger — parallelism
-  * follows stream fan-in like the reference's per-table fluxes (S3). Reads
-  * are COUNT-batched ranges; executors open their own connections (the
-  * driver's handle never crosses the wire). The per-stream cap
+  * Scale notes: each trigger's non-empty stream ranges are packed into at
+  * most `leafNodeDefaultParallelism` input partitions (one per core by
+  * default), as Spark's file source packs small files: the reference runs
+  * one flux per table (S3), but a Spark task per stream pays its fixed
+  * costs (task deserialization, generated projections, shuffle files) once
+  * per stream, which dominates an epoch of many small streams. Ranges are
+  * dealt to the partitions in stream order, round robin; a range is never
+  * split, and with at least one core per stream every stream still gets
+  * its own partition. Reads are COUNT-batched ranges; each partition
+  * reads its ranges in order over one connection of its own (the driver's
+  * handle never crosses the wire). The per-stream cap
   * (maxRecordsPerTrigger, Spark's admission-control read limit) is planned
   * from the checkpointed start with one XRANGE per stream; the planner
   * decodes only its ids, but Redis has no id-only range command, so the
@@ -79,7 +87,8 @@ class RedisStreamsSource extends TableProvider with DataSourceRegister {
           override def build(): Scan = this
           override def readSchema(): StructType = RedisStreamsSource.schema
           override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-            new RedisStreamsStream(cfg)
+            new RedisStreamsStream(cfg,
+              GraftBridge.leafNodeDefaultParallelism(SparkSession.active))
         }
     }
   }
@@ -131,7 +140,9 @@ private[sources] object RedisOffset {
       .map { case (s, id) => s -> RedisId.parse(id) }.toMap)
 }
 
-private class RedisStreamsStream(cfg: RedisStreamsConfig)
+/** `parallelism` caps the input partitions of each epoch (see the source's
+  * scale notes). */
+private class RedisStreamsStream(cfg: RedisStreamsConfig, parallelism: Int)
     extends MicroBatchStream with SupportsAdmissionControl {
   import RedisStreamsSource.{ReadCount, pages}
 
@@ -187,12 +198,19 @@ private class RedisStreamsStream(cfg: RedisStreamsConfig)
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[RedisOffset].ends
     val e = end.asInstanceOf[RedisOffset].ends
-    cfg.streams.flatMap { stream =>
+    val ranges = cfg.streams.flatMap { stream =>
       val from = s.getOrElse(stream, RedisId.Zero)
       val to = e.getOrElse(stream, RedisId.Zero)
-      Option.when(to > from)(
-        RedisStreamPartition(cfg.url, stream, cfg.prefix, from, to): InputPartition)
-    }.toArray
+      val table =
+        if (cfg.prefix.nonEmpty && stream.startsWith(cfg.prefix)) stream.stripPrefix(cfg.prefix)
+        else stream
+      Option.when(to > from)(StreamRange(stream, table, from, to))
+    }
+    // range i goes to partition i mod the partition count, in stream order
+    val bins = math.min(ranges.size, parallelism)
+    ranges.zipWithIndex.groupBy(_._2 % bins).toSeq.sortBy(_._1)
+      .map { case (_, rs) => RedisStreamPartition(cfg.url, rs.map(_._1)): InputPartition }
+      .toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -237,27 +255,38 @@ private class RedisStreamsStream(cfg: RedisStreamsConfig)
   override def stop(): Unit = conn.close()
 }
 
-private case class RedisStreamPartition(url: String, stream: String,
-                                        prefix: String, fromExclusive: RedisId,
-                                        toInclusive: RedisId)
+/** A stream's (from, to] of one epoch; `table` is the stream's name minus
+  * the configured prefix. */
+private case class StreamRange(stream: String, table: String, fromExclusive: RedisId,
+                               toInclusive: RedisId)
+
+private case class RedisStreamPartition(url: String, ranges: Seq[StreamRange])
   extends InputPartition
 
-/** Executor-side range reader: pages through (from, to] with COUNT-bounded
-  * XRANGEs on its own connection, each entry already reduced to its
-  * envelope by [[RedisConn.xrangeEnvelopes]]'s per-record wire-format
-  * detection (RedisSource.java:58-62).
+/** Executor-side range reader: reads its ranges in order over one
+  * connection of its own, paging each (from, to] with COUNT-bounded XRANGEs,
+  * each entry already reduced to its envelope by
+  * [[RedisConn.xrangeEnvelopes]]'s per-record wire-format detection
+  * (RedisSource.java:58-62) and tagged with its range's table.
   */
 private class RedisPartitionReader(p: RedisStreamPartition)
     extends PartitionReader[InternalRow] {
   private val conn = RedisConn.open(p.url)
-  private val table = UTF8String.fromString(
-    if (p.prefix.nonEmpty && p.stream.startsWith(p.prefix)) p.stream.stripPrefix(p.prefix)
-    else p.stream)
-  private val entries = RedisStreamsSource.pages(p.fromExclusive, p.toInclusive)(
-    conn.xrangeEnvelopes(p.stream, _, p.toInclusive, RedisStreamsSource.ReadCount))(_._1).flatten
+  private val ranges = p.ranges.iterator
+  private var table: UTF8String = _
+  private var entries: Iterator[(RedisId, Array[Byte])] = Iterator.empty
   private var current: (RedisId, Array[Byte]) = _
 
-  override def next(): Boolean = entries.hasNext && { current = entries.next(); true }
+  override def next(): Boolean = {
+    while (!entries.hasNext && ranges.hasNext) {
+      val r = ranges.next()
+      table = UTF8String.fromString(r.table)
+      entries = RedisStreamsSource.pages(r.fromExclusive, r.toInclusive)(
+        conn.xrangeEnvelopes(r.stream, _, r.toInclusive, RedisStreamsSource.ReadCount))(_._1)
+        .flatten
+    }
+    entries.hasNext && { current = entries.next(); true }
+  }
 
   override def get(): InternalRow = new GenericInternalRow(Array[Any](
     UTF8String.fromBytes(current._1.utf8), table, UTF8String.fromBytes(current._2)))

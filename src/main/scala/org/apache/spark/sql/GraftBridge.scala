@@ -25,6 +25,12 @@ object GraftBridge {
     classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession],
       df.queryExecution.analyzed)
 
+  /** `spark.sql.leafNodeDefaultParallelism`, or the context's default
+    * parallelism where it is unset: the partitions Spark's own leaf scans
+    * aim at. */
+  def leafNodeDefaultParallelism(session: SparkSession): Int =
+    session.asInstanceOf[classic.SparkSession].leafNodeDefaultParallelism
+
   /** `df.writeStream.foreachBatch(writer).trigger(ProcessingTime(intervalMs))
     * .option("checkpointLocation", checkpointDir).start()`, except that the
     * interval counts from the start of each trigger. Spark's processing-time

@@ -2,13 +2,15 @@ package graft.sources
 
 import graft.TestSpark
 import graft.cdc.CdcPipeline
+import org.apache.spark.sql.connector.read.InputPartition
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Redis Streams DSv2 source e2e against the in-memory fake conn: group
   * attach, incremental offsets, per-trigger caps, epoch XACK + delete-mode
   * XDEL retention, wire-format detection, prefix stripping, restart over a
   * checkpoint — the reference's I/O plane (RedisSource.java:72-93,
-  * WatchStream.java:193-220). The final test runs
+  * WatchStream.java:193-220) — and the packing of each epoch's stream
+  * ranges into at most `parallelism` partitions. The final test runs
   * the same matrix against a REAL server when REDIS_URL is set (integration
   * mode; skipped in the sandbox).
   */
@@ -253,6 +255,94 @@ class RedisStreamsSourceSpec extends AnyFunSuite {
       assert(seen.synchronized(seen.toSeq).drop(5) == Seq(added.toString),
         "restart must deliver exactly the new entry")
     }
+  }
+
+  /** A source over `streams` with `parallelism` partitions per epoch, as
+    * `toMicroBatchStream` makes it with the session's
+    * leafNodeDefaultParallelism. */
+  private def streamOver(url: String, streams: Seq[String], parallelism: Int,
+                         prefix: String = ""): RedisStreamsStream =
+    new RedisStreamsStream(RedisStreamsConfig(url, streams, "g", prefix, "simple",
+      maxRecordsPerTrigger = 1000), parallelism)
+
+  private def ranges(ps: Array[InputPartition]) =
+    ps.toSeq.map(_.asInstanceOf[RedisStreamPartition].ranges)
+
+  /** (table, id, envelope) of every row of each partition, read as an
+    * executor reads it. */
+  private def rows(src: RedisStreamsStream,
+                   ps: Array[InputPartition]) =
+    ps.toSeq.map { p =>
+      val r = src.createReaderFactory().createReader(p)
+      try Iterator.continually(r.next()).takeWhile(identity).map { _ =>
+        val row = r.get()
+        (row.getUTF8String(1).toString, row.getUTF8String(0).toString,
+          row.getUTF8String(2).toString)
+      }.toList
+      finally r.close()
+    }
+
+  /** Stream i of `streams` holds `size(i)` entries, enveloping i * 1000 + k. */
+  private def fill(mem: InMemoryRedis, streams: Seq[String])(size: Int => Int): Unit =
+    streams.zipWithIndex.foreach { case (s, i) =>
+      (1 to size(i)).foreach(k => mem.xadd(s, Seq("v" -> envelope(i * 1000 + k))))
+    }
+
+  test("24 streams at parallelism 2: each range in exactly one partition") {
+    val (url, mem) = freshMem()
+    val streams = (1 to 24).map(i => s"s$i")
+    val size = (i: Int) => 1 + (i * 37) % 50
+    fill(mem, streams)(size)
+    val src = streamOver(url, streams, parallelism = 2)
+    try {
+      val start = src.initialOffset()
+      val end = src.latestOffset(start, src.getDefaultReadLimit)
+      val ps = src.planInputPartitions(start, end)
+      val bins = ranges(ps)
+      assert(bins.map(_.size) == Seq(12, 12))
+      assert(bins.flatten.map(_.stream).sorted == streams.sorted)
+      bins.flatten.foreach(r => assert(r.fromExclusive == RedisId.Zero &&
+        end.asInstanceOf[RedisOffset].ends(r.stream) == r.toInclusive))
+      assert(rows(src, ps).flatten.map(_._3).sorted == streams.indices.flatMap(i =>
+        (1 to size(i)).map(k => envelope(i * 1000 + k))).sorted)
+    } finally src.stop()
+  }
+
+  test("packed partitions read the per-stream rows, each tagged with its own table") {
+    val (url, mem) = freshMem()
+    val streams = Seq("m2.a", "m2.m2.catalog_category_entity", "b", "m2.c", "m2.d")
+    fill(mem, streams)(i => 3 + i)
+    def read(parallelism: Int) = {
+      val src = streamOver(url, streams, parallelism, prefix = "m2.")
+      try {
+        val start = src.initialOffset()
+        rows(src, src.planInputPartitions(start, src.latestOffset(start, src.getDefaultReadLimit)))
+      } finally src.stop()
+    }
+    val perStream = read(parallelism = streams.size)
+    assert(perStream.size == streams.size)
+    val packed = read(parallelism = 2)
+    assert(packed.size == 2)
+    assert(packed.flatten.groupBy(_._1) == perStream.flatten.groupBy(_._1))
+    val tables = Seq("a", "m2.catalog_category_entity", "b", "c", "d")
+    assert(packed.flatten.map(_._1).distinct.sorted == tables.sorted)
+    tables.zipWithIndex.foreach { case (t, i) =>
+      assert(packed.flatten.filter(_._1 == t).map(_._3) ==
+        (1 to 3 + i).map(k => envelope(i * 1000 + k)), t)
+    }
+  }
+
+  test("fewer streams than parallelism: one partition per stream, in stream order") {
+    val (url, mem) = freshMem()
+    val streams = Seq("x", "y", "z")
+    fill(mem, streams)(i => 10 - 3 * i)
+    val src = streamOver(url, streams, parallelism = 4)
+    try {
+      val start = src.initialOffset()
+      val bins = ranges(src.planInputPartitions(start,
+        src.latestOffset(start, src.getDefaultReadLimit)))
+      assert(bins.map(_.map(_.stream)) == Seq(Seq("x"), Seq("y"), Seq("z")))
+    } finally src.stop()
   }
 
   test("integration: same pipeline against a real server (REDIS_URL gate)") {

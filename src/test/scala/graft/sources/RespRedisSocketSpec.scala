@@ -189,7 +189,8 @@ class RespRedisSocketSpec extends AnyFunSuite {
         val a = f
         (a, srv.count("XRANGE") - before)
       }
-      val source = new RedisStreamsStream(cfg)
+      // one core: both streams' ranges share one partition
+      val source = new RedisStreamsStream(cfg, parallelism = 1)
       def read(start: Offset, end: Offset): Seq[String] =
         source.planInputPartitions(start, end).toSeq.flatMap { p =>
           val r = source.createReaderFactory().createReader(p)
@@ -203,8 +204,11 @@ class RespRedisSocketSpec extends AnyFunSuite {
         val start = source.initialOffset()
         val (end1, plan1) = xranges(source.latestOffset(start, source.getDefaultReadLimit))
         assert(plan1 == 2L) // one XRANGE per stream
+        assert(source.planInputPartitions(start, end1).length == 1)
+        val connections = srv.connections
         val (rows1, read1) = xranges(read(start, end1))
-        assert(rows1.sorted == Seq("a1", "a2", "b1", "b2") && read1 == 2L) // one per partition
+        assert(rows1.sorted == Seq("a1", "a2", "b1", "b2") && read1 == 2L) // one per stream range
+        assert(srv.connections - connections == 1L) // the packed partition's one connection
         val (end2, plan2) = xranges(source.latestOffset(end1, source.getDefaultReadLimit))
         assert(plan2 == 2L)
         assert(xranges(source.commit(end1))._2 == 0L)
@@ -216,7 +220,7 @@ class RespRedisSocketSpec extends AnyFunSuite {
       } finally source.stop()
 
       // a restarted source has no planned ids: it pages the ids instead
-      val restarted = new RedisStreamsStream(cfg)
+      val restarted = new RedisStreamsStream(cfg, parallelism = 1)
       try {
         val end = RedisOffset(ids.map { case (s, is) => s -> is(4) })
         assert(xranges(restarted.commit(end))._2 == 2L)

@@ -17,9 +17,9 @@ import java.nio.charset.StandardCharsets.UTF_8
   * always-on tests over a real TCP socket: request serialization, every
   * reply type it parses (+, -, :, $, *, nested arrays, null bulks), error
   * propagation (-BUSYGROUP swallow, -ERR raise), CRLF-bearing bulk
-  * payloads, and multi-connection behavior. It counts the commands it
-  * serves per name, and can fail the next command of a name with an error
-  * reply.
+  * payloads, and multi-connection behavior. It counts the connections it
+  * accepts and the commands it serves per name, and can fail the next
+  * command of a name with an error reply.
   *
   * Protocol per the public Redis serialization spec (RESP2). The dialect
   * is deliberately the CLIENT'S dialect: XRANGE start must be `-` or the
@@ -50,6 +50,10 @@ final class RespServerFake extends AutoCloseable {
   def count(command: String): Long =
     Option(served.get(command)).map(_.get()).getOrElse(0L)
 
+  private val accepted = new java.util.concurrent.atomic.AtomicLong()
+  /** Connections accepted so far. */
+  def connections: Long = accepted.get()
+
   private val injected =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   /** The next `command` (upper case) gets the error reply `-<message>`
@@ -62,6 +66,7 @@ final class RespServerFake extends AutoCloseable {
     while (running) {
       try {
         val s = server.accept()
+        accepted.incrementAndGet()
         pool.submit(new Runnable { override def run(): Unit = serve(s) })
         ()
       } catch {

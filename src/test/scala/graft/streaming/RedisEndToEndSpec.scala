@@ -2,7 +2,9 @@ package graft.streaming
 
 import graft.TestSpark
 import graft.sources.{InMemoryRedis, RedisId}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** End-to-end watch topology with Redis on BOTH ends — the engine's mirror
   * of the reference's `testWatchCommandDeduplicate*` integration tests
@@ -35,22 +37,23 @@ class RedisEndToEndSpec extends AnyFunSuite {
     * time is the trigger interval `watch` runs.
     */
   private def config(ack: String, maxBatch: Int = 1000,
-                     sourceConnection: String = """{"host": "127.0.0.1", "port": 6379}"""): String =
+                     sourceConnection: String = """{"host": "127.0.0.1", "port": 6379}""",
+                     mapping: String = """"catalog_category_entity": {"entity_id": """ +
+                       """["catalog_product_flat", "catalog_category_product"]}"""): String =
     s"""{"source": {"prefix": "m2.", "group": "cdc", "acknowledge": "$ack",
        |  "connection": $sourceConnection},
        |"target": {"prefix": "target."},
        |"buffers": {"source": {"size": 1000, "time": 1000},
        |  "dedupe": {"size": 100000, "time": 100},
        |  "target": {"size": $maxBatch, "time": 1000}},
-       |"mapping": {"catalog_category_entity": {"entity_id":
-       |  ["catalog_product_flat", "catalog_category_product"]}}}""".stripMargin
+       |"mapping": {$mapping}}""".stripMargin
 
   /** One full `watch` run through the CLI's own wiring
     * ([[graft.Main.watch]]) with `flags` added, reading the source streams
     * of `source`: with `--in url --target-url url`, Redis on both ends at
     * `url`.
     */
-  private def runWatch(source: InMemoryRedis, config: String, flags: String*): Unit = {
+  private def runWatch(source: InMemoryRedis, config: String, flags: String*): String = {
     val cfgFile = java.nio.file.Files.createTempFile("graft-e2e", ".json")
     java.nio.file.Files.writeString(cfgFile, config)
     val q = graft.Main.watch(spark, Array("watch", "--config", cfgFile.toString,
@@ -61,10 +64,11 @@ class RedisEndToEndSpec extends AnyFunSuite {
       source.xadd("m2.catalog_category_entity", Seq("v" -> envelope(-1)))
       q.processAllAvailable()
       q.processAllAvailable()
+      q.id.toString
     } finally q.stop()
   }
 
-  private def runWatch(url: String, mem: InMemoryRedis, config: String): Unit =
+  private def runWatch(url: String, mem: InMemoryRedis, config: String): String =
     runWatch(mem, config, "--in", url, "--target-url", url)
 
   private def idArrays(mem: InMemoryRedis, stream: String): Seq[String] =
@@ -123,6 +127,42 @@ class RedisEndToEndSpec extends AnyFunSuite {
       e.stripPrefix("[").stripSuffix("]").split(",").map(_.toInt))
     assert(all.toSet.intersect((1 to 7).toSet) == (1 to 7).toSet,
       s"every id must be delivered, got $all")
+  }
+
+  test("watch: more streams than cores, each epoch's scan runs at most one task per core") {
+    val (url, mem) = freshMem()
+    val tables = (1 to 6).map(i => s"table$i")
+    tables.zipWithIndex.foreach { case (t, i) =>
+      Seq(1, 2).foreach(k => mem.xadd(s"m2.$t", Seq("v" -> envelope(10 * i + k))))
+    }
+    val mapping = tables.map(t => s""""$t": {"entity_id": ["out_$t"]}""").mkString(", ")
+    // (query id, epoch) -> tasks of the stage that scans the source
+    val scanTasks = new java.util.concurrent.ConcurrentHashMap[(String, String), Int]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        for {
+          props <- Option(e.properties)
+          query <- Option(props.getProperty("sql.streaming.queryId"))
+          epoch <- Option(props.getProperty("streaming.sql.batchId"))
+          if e.stageInfo.rddInfos.exists(_.name == "DataSourceRDD")
+        } scanTasks.put((query, epoch), e.stageInfo.numTasks)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val query = try runWatch(url, mem, config(ack = "simple", mapping = mapping))
+      finally spark.sparkContext.removeSparkListener(listener)
+
+    val cores = spark.sparkContext.defaultParallelism
+    assert(cores == 4 && tables.size > cores)
+    tables.zipWithIndex.foreach { case (t, i) =>
+      assert(idArrays(mem, s"target.out_$t") == Seq("[]", s"[${10 * i + 1},${10 * i + 2}]"))
+    }
+    // the listener bus delivers asynchronously; epoch 0 read all six streams
+    val deadline = System.currentTimeMillis() + 10000
+    while (System.currentTimeMillis() < deadline && !scanTasks.containsKey((query, "0")))
+      Thread.sleep(50)
+    val perEpoch = scanTasks.asScala.collect { case ((`query`, epoch), n) => epoch -> n }
+    assert(perEpoch.contains("0"), s"no scan stage seen: $scanTasks")
+    assert(perEpoch.values.forall(_ <= cores), s"scan tasks per epoch: $perEpoch")
   }
 
   test("watch: chunks arrive in per-target chunk order") {

@@ -77,7 +77,7 @@ private[graft] object IngestCli {
     }
     StreamingIngestGate.startWithCanonicalMap(docs, idCol, textCol,
       corpus, index, map, n, k, bands, gate, mapT, ckpt,
-      seed = seed, nBuckets = nBuckets, nPartitions = nPartitions)()
+      seed = seed, nBuckets = nBuckets, nPartitions = nPartitions)
   }
 
   /** one-line state summary after a `--once` drain — what smoke scripts

@@ -76,7 +76,9 @@ object Main {
     * the trigger interval, counted from each trigger's start
     * ([[GraftBridge.startForeachBatch]]) so that the epoch cadence does not
     * depend on when the plane started; `buffers.target.size` caps the ids
-    * of one output chunk. Both sizes must be positive.
+    * of one output chunk. Both sizes must be positive, and
+    * `source.acknowledge` must be `simple` or `delete` (`delete` XDELs what
+    * each epoch acks).
     *
     * Each epoch runs [[CdcPipeline.run]] on its batch alone, so the dedupe
     * state resets every epoch as the reference's does at each flush: an id
@@ -97,6 +99,8 @@ object Main {
       s"buffers.source.size must be positive, got ${cfg.buffers.source.size}")
     require(cfg.buffers.target.size > 0,
       s"buffers.target.size must be positive, got ${cfg.buffers.target.size}")
+    require(Set("simple", "delete")(cfg.source.acknowledge),
+      s"source.acknowledge must be simple or delete, got '${cfg.source.acknowledge}'")
     val in = opt(args, "--in").getOrElse(cfg.source.connection.url)
     val target = opt(args, "--target-url").getOrElse(cfg.target.connection.url)
     val ckpt = req(args, "--checkpoint")

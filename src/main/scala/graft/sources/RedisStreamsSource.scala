@@ -69,12 +69,15 @@ class RedisStreamsSource extends TableProvider with DataSourceRegister {
     val streams = Option(opts.get("streams")).map(_.split(",").map(_.trim).toSeq)
       .getOrElse(Seq.empty)
     require(streams.nonEmpty, "option 'streams' is required (comma-separated)")
+    val acknowledge = Option(opts.get("acknowledge")).getOrElse("simple")
+    require(Set("simple", "delete")(acknowledge),
+      s"option 'acknowledge' must be simple or delete, got '$acknowledge'")
     val cfg = RedisStreamsConfig(
       url = url,
       streams = streams,
       group = Option(opts.get("group")).getOrElse("graft"),
       prefix = Option(opts.get("prefix")).getOrElse(""),
-      acknowledge = Option(opts.get("acknowledge")).getOrElse("simple"),
+      acknowledge = acknowledge,
       maxRecordsPerTrigger =
         Option(opts.get("maxRecordsPerTrigger")).map(_.toInt).getOrElse(Int.MaxValue))
     new Table with SupportsRead {

@@ -9,12 +9,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * persisted-MinHash family ([[graft.operators.Dedup.buildMinhashIndex]] /
   * [[graft.operators.Dedup.incrementalNearDupPairs]] /
   * [[graft.operators.Dedup.insertMinhashIndex]]) wired into Structured
-  * Streaming: every micro-batch of incoming documents probes the banding
-  * index in place, near-duplicates of the ACCUMULATED ACCEPTED CORPUS are
-  * rejected, and the surviving docs fold into both the corpus table and
-  * the index — so the next epoch's batch collides with this epoch's
-  * acceptances. This is the daily 100 TB ingest loop running continuously:
-  * only each delta pays a sketch pass, the index join stays Exchange-free
+  * Streaming with one epoch body, [[gateAndFoldBatch]], which
+  * [[startWithCanonicalMap]] runs and `watch --ingest-gate`
+  * ([[graft.IngestCli.start]]) starts. Every micro-batch of incoming
+  * documents probes the banding index in place, near-duplicates of the
+  * ACCUMULATED ACCEPTED CORPUS are rejected, and the surviving docs fold
+  * into the corpus table, the index and the persisted canonical map — so
+  * the next epoch's batch collides with this epoch's acceptances. Only
+  * each delta pays a sketch pass, and the index join stays Exchange-free
   * on the bucketed (band, bhash) layout across any number of epochs
   * (Spark honors the bucket spec on every append).
   *
@@ -23,21 +25,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     and indexed (the [[Dedup.buildMinhashIndex]] contract — dedupe
   *     within the founding corpus is the batch operators' job);
   *   - every later epoch rejects docs whose exact Jaccard against ANY
-  *     indexed doc reaches `threshold`; intra-batch duplicates (two new
-  *     docs duplicating each other, neither indexed) pass the gate — the
-  *     contract is new-vs-corpus, compose [[Dedup.minhashLshPairs]]
-  *     upstream if intra-batch dedupe is needed.
+  *     indexed doc reaches the gate threshold; intra-batch duplicates (two
+  *     new docs duplicating each other, neither indexed) pass the gate, and
+  *     the canonical map groups them at the map threshold.
   *
-  * Replay: foreachBatch is at-least-once. A RE-DELIVERED epoch is
-  * corpus-idempotent BY CONSTRUCTION: its docs are already indexed, so
-  * each re-probed doc exact-matches itself (jaccard 1 ≥ threshold) and is
-  * rejected — nothing double-inserts. The plain gate ([[gateBatch]] /
-  * [[start]]) keeps one narrow caveat — a crash BETWEEN the index append
-  * and the corpus append leaves the replayed doc index-rejected with its
-  * corpus row never written (recover by rebuilding the corpus from the
-  * index's doc ids). The COMPOSED loop ([[gateAndFoldBatch]] /
-  * [[startWithCanonicalMap]]) closes that window and every later one with
-  * a per-epoch ACCEPTANCE LEDGER — see [[gateAndFoldBatch]].
+  * Replay: foreachBatch is at-least-once. A re-delivered epoch's docs are
+  * already indexed, so each re-probed doc exact-matches itself and is
+  * rejected by the gate; the per-epoch ACCEPTANCE LEDGER recovers the
+  * epoch's accepted slice so that the corpus and map writes are recomputed
+  * deterministically — see [[gateAndFoldBatch]].
   */
 object StreamingIngestGate {
 
@@ -70,56 +66,6 @@ object StreamingIngestGate {
         Lineage.cut(slim.join(dupIds, Seq(idCol), "left_anti"), eager = true))
     }
   }
-
-  /** Per-epoch gate body (also callable on plain batches — the streaming
-    * run and a manual batch-by-batch replay produce identical state, which
-    * is the spec's equivalence law). Persists into `corpusTable` +
-    * `indexTable` and returns the accepted (id, text) slice.
-    */
-  def gateBatch(batch: DataFrame, idCol: String, textCol: String,
-                corpusTable: String, indexTable: String,
-                n: Int, k: Int, bands: Int, threshold: Double,
-                seed: Long = 42L, nBuckets: Int = 8): DataFrame = {
-    val slim = batch.select(col(idCol), col(textCol))
-    val (founding, accepted) = gateProbe(slim, idCol, textCol,
-      corpusTable, indexTable, n, k, bands, threshold, seed)
-    if (founding)
-      Dedup.buildMinhashIndex(accepted, idCol, textCol, indexTable,
-        n, k, bands, seed = seed, nBuckets = nBuckets)
-    else
-      // NAMED nBuckets: the positional slot after `bands` is the SEED —
-      // passing nBuckets there silently bands the insert under a
-      // different hash family than the build/probe (epoch appends become
-      // invisible to every later probe; found the hard way)
-      Dedup.insertMinhashIndex(accepted, idCol, textCol, indexTable,
-        n, k, bands, seed = seed, nBuckets = nBuckets)
-    accepted.write.mode(SaveMode.Append)
-      .format("parquet").saveAsTable(corpusTable)
-    accepted
-    // NOTE: the returned frame is an eager localCheckpoint — its blocks
-    // are freed by the ContextCleaner once the caller drops the
-    // reference; the caller-side unpersist is a harmless no-op kept for
-    // the plain-cache case.
-  }
-
-  /** Start the gate over a streaming document source. `onBatch` observes
-    * each epoch's accepted slice (side outputs, metrics); the persisted
-    * corpus/index state is the primary output.
-    */
-  def start(docs: DataFrame, idCol: String, textCol: String,
-            corpusTable: String, indexTable: String,
-            n: Int, k: Int, bands: Int, threshold: Double,
-            checkpointDir: String, seed: Long = 42L, nBuckets: Int = 8)
-           (onBatch: (DataFrame, Long) => Unit = (_, _) => ()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val accepted = gateBatch(batch, idCol, textCol, corpusTable,
-          indexTable, n, k, bands, threshold, seed, nBuckets)
-        try onBatch(accepted, epoch)
-        finally accepted.unpersist(blocking = false)
-      }
-      .start()
 
   /** The epoch-acceptance ledger's table name: one (doc_id) row per
     * accepted doc, PARTITIONED by epoch — the replay-recovery record of
@@ -281,27 +227,24 @@ object StreamingIngestGate {
     accepted
   }
 
-  /** [[start]] with the canonical-map fold composed into every epoch —
-    * the streaming plane maintaining the same persisted map the batch
-    * consumers read, with [[gateAndFoldBatch]]'s acceptance-ledger replay
-    * protocol keyed on foreachBatch's epoch id.
+  /** Starts the ingest plane over a streaming document source: every
+    * epoch runs [[gateAndFoldBatch]], the streaming plane maintaining the
+    * same persisted map the batch consumers read, with its acceptance-ledger
+    * replay protocol keyed on foreachBatch's epoch id.
     */
   def startWithCanonicalMap(docs: DataFrame, idCol: String, textCol: String,
                             corpusTable: String, indexTable: String,
                             mapTable: String, n: Int, k: Int, bands: Int,
                             gateThreshold: Double, mapThreshold: Double,
                             checkpointDir: String, seed: Long = 42L,
-                            nBuckets: Int = 8, nPartitions: Int = 8)
-                           (onBatch: (DataFrame, Long) => Unit =
-                              (_, _) => ()): StreamingQuery =
+                            nBuckets: Int = 8, nPartitions: Int = 8): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val accepted = gateAndFoldBatch(batch, idCol, textCol, corpusTable,
-          indexTable, mapTable, epoch, n, k, bands, gateThreshold,
-          mapThreshold, seed, nBuckets, nPartitions)
-        try onBatch(accepted, epoch)
-        finally accepted.unpersist(blocking = false)
+        gateAndFoldBatch(batch, idCol, textCol, corpusTable, indexTable,
+          mapTable, epoch, n, k, bands, gateThreshold, mapThreshold, seed,
+          nBuckets, nPartitions).unpersist(blocking = false)
+        ()
       }
       .start()
 }

@@ -7,9 +7,9 @@ import org.apache.spark.sql.SparkSession
 /** Streaming scale rehearsal — the streaming counterpart of
   * [[ScaleRehearsal]]: the throughput anchors in `bench/bench_full.json`
   * exist only at sf0.1, so nothing measured that the streaming planes'
-  * STATE stays bounded and their rate stays ~flat when the replayed volume
-  * grows 10x. Two planes, each at 1x and `reps`x, RocksDB state store (the
-  * 100 TB default):
+  * persisted state stays bounded and their rate stays ~flat when the
+  * replayed volume grows 10x. Both `watch` planes, each at 1x and `reps`x,
+  * each started through the CLI's own function:
   *
   *  1. the CDC plane as `Main.watch` runs it ([[Bench.drainWatch]]) over
   *     `reps`x the events, staged as `mem://` streams by
@@ -18,53 +18,52 @@ import org.apache.spark.sql.SparkSession
   *     structure and each epoch's dedupe holds reps x the keys. Recorded:
   *     events/s.
   *
-  *  2. the ingest near-dup gate (`StreamingIngestGate` over the minhash
-  *     banding index) fed `reps`x the documents in multiple epochs via
-  *     maxFilesPerTrigger. Its "state" is the persisted bucketed index —
+  *  2. the ingest plane as `watch --ingest-gate` runs it
+  *     ([[graft.IngestCli.start]]: near-dup gate, minhash index, canonical
+  *     map) fed `reps`x the documents in multiple epochs via
+  *     `--max-files-per-trigger`. Its state is the persisted bucketed index —
   *     bounded = rows grow linearly (bands per doc), probes stay
   *     Exchange-free.
   *
   * Usage: `StreamRehearsal [<sf-dir> [<reps> [<out.json>]]]`. Writes
   * `target/scale_rehearsal_streaming.json`, or `<out.json>` when given: name
   * `bench/scale_rehearsal_streaming.json` to refresh the committed sf0.1 x 10
-  * record. Everything staged in the system temp dir or in `mem://` stores
-  * is deleted at the end.
+  * record. Everything staged in the system temp dir or in `mem://` stores,
+  * and every table the ingest plane writes, is deleted at the end.
   * Single timed replay per (plane, scale) after a warmup replay — ratios,
   * not micro-benchmarks, same policy as ScaleRehearsal.
   */
 object StreamRehearsal {
 
-  /** One ingest-gate replay over a staged documents dir consumed in
-    * multiple epochs; returns (wallSec, docsAccepted, indexRows).
+  /** One `watch --ingest-gate` replay over a staged parquet documents dir
+    * consumed in multiple epochs; returns (wallSec, docsAccepted, indexRows).
     */
-  private def replayGate(spark: SparkSession, docsDir: String, tag: String,
-                         schema: org.apache.spark.sql.types.StructType): (Double, Long, Long) = {
-    val corpusTable = s"srehearse_corpus_$tag"
-    val indexTable = s"srehearse_index_$tag"
-    Seq(corpusTable, indexTable).foreach { t =>
-      // drop the catalog entry AND any orphaned warehouse dir a previous
-      // process left behind (ephemeral catalog, persistent location —
-      // saveAsTable refuses to create over the orphan)
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"),
-        t.toLowerCase(java.util.Locale.ROOT))
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
-    val docs = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 4).parquet(docsDir)
-    val wall = Bench.withTempDir("graft-srehearse-gate-ckpt") { runCkpt =>
-      val t0 = System.nanoTime()
-      val q = graft.streaming.StreamingIngestGate.start(docs, "doc_id", "text",
-        corpusTable, indexTable, n = 3, k = 64, bands = 16, threshold = 0.8,
-        checkpointDir = runCkpt)()
-      try q.processAllAvailable() finally q.stop()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val accepted = spark.table(corpusTable).count()
-    val idxRows = spark.table(indexTable).count()
-    (wall, accepted, idxRows)
+  private def replayGate(spark: SparkSession, docsDir: String, tag: String): (Double, Long, Long) = {
+    val (corpus, index, map) =
+      (s"srehearse_corpus_$tag", s"srehearse_index_$tag", s"srehearse_map_$tag")
+    def dropTables(): Unit = Seq(corpus, index, map, s"${map}_epochs", s"${map}_foldlog")
+      .foreach { t =>
+        // drop the catalog entry AND any orphaned warehouse dir a previous
+        // process left behind (ephemeral catalog, persistent location —
+        // saveAsTable refuses to create over the orphan)
+        spark.sql(s"DROP TABLE IF EXISTS $t")
+        val loc = new org.apache.hadoop.fs.Path(
+          spark.conf.get("spark.sql.warehouse.dir"), t.toLowerCase(java.util.Locale.ROOT))
+        val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (fs.exists(loc)) fs.delete(loc, true)
+      }
+    dropTables()
+    try {
+      val wall = Bench.withTempDir("graft-srehearse-gate-ckpt") { ckpt =>
+        val t0 = System.nanoTime()
+        val q = IngestCli.start(spark, Array("watch", "--ingest-gate", "--in", docsDir,
+          "--checkpoint", ckpt, "--format", "parquet", "--max-files-per-trigger", "4",
+          "--corpus-table", corpus, "--index-table", index, "--map-table", map))
+        try q.processAllAvailable() finally q.stop()
+        (System.nanoTime() - t0) / 1e9
+      }
+      (wall, spark.table(corpus).count(), spark.table(index).count())
+    } finally dropTables()
   }
 
   def main(args: Array[String]): Unit = {
@@ -76,8 +75,6 @@ object StreamRehearsal {
         .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
         .config("spark.sql.shuffle.partitions",
           sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-        .config("spark.sql.streaming.stateStore.providerClass",
-          GraftSession.RocksDbProvider)
         .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -115,11 +112,9 @@ object StreamRehearsal {
       spark.read.parquet(s"$base/documents.parquet")
         .repartition(8).write.mode("overwrite").parquet(baseDocs)
       val bigDocs = s"$docs/documents.parquet"
-      val schema = spark.read.parquet(baseDocs).schema
-      val bigSchema = spark.read.parquet(bigDocs).schema
-      val (gw0, _, _) = replayGate(spark, baseDocs, "warm", schema)
-      val (gw1, acc1, idx1) = replayGate(spark, baseDocs, "b1", schema)
-      val (gwN, accN, idxN) = replayGate(spark, bigDocs, s"b$reps", bigSchema)
+      val (gw0, _, _) = replayGate(spark, baseDocs, "warm")
+      val (gw1, acc1, idx1) = replayGate(spark, baseDocs, "b1")
+      val (gwN, accN, idxN) = replayGate(spark, bigDocs, s"b$reps")
       val d1 = spark.read.parquet(baseDocs).count()
       val dN = spark.read.parquet(bigDocs).count()
       System.err.println(f"[stream-rehearsal] gate 1x: $d1 docs in $gw1%.1fs " +
@@ -129,7 +124,6 @@ object StreamRehearsal {
 
       def r3(v: Double) = math.round(v * 1000) / 1000.0
       s"""{"base_sf":"$base","scaled_reps":$reps,""" +
-      s""""state_store":"rocksdb",""" +
       s""""cdc":{"base":{"events":$n1,"sec":${r3(w1)},"events_per_sec":${(n1 / w1).round}},""" +
       s""""scaled":{"events":$nN,"sec":${r3(wN)},"events_per_sec":${(nN / wN).round}}},""" +
       s""""ingest_gate":{""" +

@@ -130,6 +130,14 @@ class RedisStreamsSourceSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("an acknowledge option other than simple or delete is rejected when the query is defined") {
+    val (url, _) = freshMem()
+    val e = intercept[IllegalArgumentException](spark.readStream.format("graft-redis")
+      .option("url", url).option("streams", "t").option("acknowledge", "Delete").load())
+    assert(e.getMessage.contains("option 'acknowledge' must be simple or delete, got 'Delete'"),
+      e.getMessage)
+  }
+
   test("maxRecordsPerTrigger caps each micro-batch") {
     val (url, mem) = freshMem()
     (1 to 4).foreach(i => mem.xadd("t", Seq("v" -> envelope(i))))

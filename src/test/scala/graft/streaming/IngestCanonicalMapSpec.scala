@@ -18,12 +18,13 @@ import java.nio.file.Files
   *     incremental stream-maintained map IS the batch answer.
   *  2. Two-threshold semantics: docs at gate-threshold similarity never
   *     enter the corpus; docs between map- and gate-threshold enter AND
-  *     group — cross-epoch and intra-epoch pairs both land in the map.
+  *     group — cross-epoch and intra-epoch pairs both land in the map. The
+  *     index holds exactly the accepted docs and keeps its (band, bhash)
+  *     bucket layout across the epoch appends.
   *  3. STREAM == BATCH REPLAY of [[StreamingIngestGate.gateAndFoldBatch]]
-  *     epoch-by-epoch (the gate spec's convention, extended to the map),
-  *     and a re-delivered epoch leaves every table untouched (the
-  *     acceptance ledger recovers the slice; all downstream writes are
-  *     idempotent). Crash-at-every-window replay is pinned separately in
+  *     epoch-by-epoch, and a re-delivered epoch leaves every table
+  *     untouched (the acceptance ledger recovers the slice; all downstream
+  *     writes are idempotent). Crash-at-every-window replay is pinned separately in
   *     IngestReplayRecoverySpec.
   *
   * Fixture jaccard tiers (40-word docs, 3-gram shingles, exact values):
@@ -72,6 +73,10 @@ class IngestCanonicalMapSpec extends AnyFunSuite {
       .select(col("doc_id").cast("long"), col("canonical_id").cast("long"))
       .as[(Long, Long)].collect().toMap
 
+  private def indexDocs(table: String): Set[Long] =
+    spark.table(table).select(col("doc").cast("long")).distinct()
+      .as[Long].collect().toSet
+
   test("stream-maintained map == full-batch recompute after N epochs " +
     "(RocksDB provider); two-threshold semantics") {
     drop("ingf_corpus", "ingf_index", "ingf_map", "ingf_map_epochs")
@@ -84,7 +89,7 @@ class IngestCanonicalMapSpec extends AnyFunSuite {
       val ckpt = Files.createTempDirectory("graft-ingf").toString
       val q = StreamingIngestGate.startWithCanonicalMap(
         mem.toDF().toDF("doc_id", "text"), "doc_id", "text",
-        "ingf_corpus", "ingf_index", "ingf_map", N, K, B, GATE, MAP, ckpt)()
+        "ingf_corpus", "ingf_index", "ingf_map", N, K, B, GATE, MAP, ckpt)
       try epochs.foreach { e => mem.addData(e: _*); q.processAllAvailable() }
       finally q.stop()
     } finally prev match {
@@ -93,8 +98,15 @@ class IngestCanonicalMapSpec extends AnyFunSuite {
     }
     // gate law: hard dup 13 rejected, everything else accepted
     val corpus = spark.table("ingf_corpus")
-    assert(corpus.select(col("doc_id").cast("long")).as[Long].collect().toSet
-      == Set(1L, 2L, 3L, 11L, 12L, 21L, 22L, 23L, 24L))
+    val accepted = corpus.select(col("doc_id").cast("long")).as[Long].collect().toSet
+    assert(accepted == Set(1L, 2L, 3L, 11L, 12L, 21L, 22L, 23L, 24L))
+    // the index holds exactly the accepted docs, and its (band, bhash)
+    // bucket layout survives the epoch appends (zero-Exchange aggregation)
+    assert(indexDocs("ingf_index") == accepted)
+    val bands = spark.table("ingf_index").groupBy("band", "bhash").count()
+    bands.write.format("noop").mode("overwrite").save()
+    assert(!bands.queryExecution.executedPlan.toString.contains("Exchange"),
+      "(band, bhash) agg must stay shuffle-free across epoch appends")
     // THE LAW: incremental stream-maintained map == full-corpus recompute
     val oracle = Dedup.duplicateGroups(
       Dedup.minhashLshPairs(corpus, "doc_id", "text", N, K, B, MAP),
@@ -135,12 +147,15 @@ class IngestCanonicalMapSpec extends AnyFunSuite {
     // its accepted slice, the re-derived pairs fold as a no-op (already
     // folded), corpus/index append nothing: everything stays unchanged
     val corpusBefore = spark.table("ingb_corpus").count()
+    val indexBefore = indexDocs("ingb_index").size
     StreamingIngestGate.gateAndFoldBatch(epoch2.toDF("doc_id", "text"),
       "doc_id", "text", "ingb_corpus", "ingb_index", "ingb_map", 1L,
       N, K, B, GATE, MAP).unpersist(blocking = false)
     assert(asMap("ingb_map") == expect)
     assert(spark.table("ingb_corpus").count() == corpusBefore,
       "re-delivered epoch must not double-append corpus rows")
+    assert(indexDocs("ingb_index").size == indexBefore,
+      "re-delivered docs must exact-match themselves in the index and not re-insert")
     drop("ingb_corpus", "ingb_index", "ingb_map", "ingb_map_epochs")
   }
 }

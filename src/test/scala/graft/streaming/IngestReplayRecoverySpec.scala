@@ -112,8 +112,8 @@ class IngestReplayRecoverySpec extends AnyFunSuite {
     drop("irr2")
     runEpoch("irr2", 0)
     runEpochExpectingCrash("irr2", 1, "ingest-after-index")
-    // at this point the epoch's docs are indexed but NOT in the corpus:
-    // the exact state the plain gate documents as its unrecoverable caveat
+    // at this point the epoch's docs are indexed but NOT in the corpus: a
+    // re-gate alone would reject them as self-matches and never write them
     assert(!corpusIds("irr2").contains(11L))
     runEpoch("irr2", 1)
     runEpoch("irr2", 2)

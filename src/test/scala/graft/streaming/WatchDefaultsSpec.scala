@@ -9,8 +9,8 @@ import java.nio.file.Files
   * here both on `mem://` — run through [[graft.Main.watch]], the function
   * the CLI runs: `buffers.source.size` as the rows per stream per epoch,
   * restart over one checkpoint, the per-epoch dedupe reset, and the
-  * start-up checks on the buffer sizes, the `--in` URL, the refused `--out`
-  * and flags with no value.
+  * start-up checks on the buffer sizes, `source.acknowledge`, the `--in`
+  * URL, the refused `--out` and flags with no value.
   */
 class WatchDefaultsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -33,11 +33,13 @@ class WatchDefaultsSpec extends AnyFunSuite {
   private def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
 
   /** The example config's buffers, with a 100 ms dedupe time as the trigger. */
-  private def config(sourceSize: Int = 1000, targetSize: Int = 1000): String = {
+  private def config(sourceSize: Int = 1000, targetSize: Int = 1000,
+                     acknowledge: String = "simple"): String = {
     val f = Files.createTempFile("graft-watch", ".json")
     val targetList = targets.map("\"" + _ + "\"").mkString("[", ", ", "]")
     Files.writeString(f,
-      s"""{"buffers": {"source": {"size": $sourceSize, "time": 1000},
+      s"""{"source": {"acknowledge": "$acknowledge"},
+         |"buffers": {"source": {"size": $sourceSize, "time": 1000},
          |  "dedupe": {"size": 100000, "time": 100},
          |  "target": {"size": $targetSize, "time": 1000}},
          |"mapping": {"$table": {"entity_id": $targetList}}}
@@ -85,6 +87,19 @@ class WatchDefaultsSpec extends AnyFunSuite {
         "--config", cfg, "--in", freshMem()._1, "--target-url", freshMem()._1,
         "--checkpoint", tmp("graft-watch-ckpt"))))
       assert(e.getMessage.contains(s"buffers.$buffer.size must be positive"))
+    }
+  }
+
+  test("watch rejects a source.acknowledge other than simple or delete at start") {
+    // a near miss would run simple mode and never trim the source stream
+    for (ack <- Seq("Delete", "delet", "")) {
+      val (targetUrl, target) = freshMem()
+      val e = intercept[IllegalArgumentException](graft.Main.watch(spark, Array("watch",
+        "--config", config(acknowledge = ack), "--in", freshMem()._1,
+        "--target-url", targetUrl, "--checkpoint", tmp("graft-watch-ckpt"))))
+      assert(e.getMessage.contains(s"source.acknowledge must be simple or delete, got '$ack'"),
+        e.getMessage)
+      assert(idArrays(target).values.forall(_.isEmpty))
     }
   }
 
